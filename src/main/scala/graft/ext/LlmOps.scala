@@ -2796,36 +2796,48 @@ object LlmOps {
       .write.mode("append").partitionBy("cid").parquet(path)
   }
 
-  /** Serve one query from the cell-partitioned assignment store: rank the
-    * c centroids against the query (bounded — cents is the local c-row
-    * table), collect the top-`nprobe` cell ids (nprobe ints, bounded by
-    * the literal), and scan ONLY those cells — the `cid IN (...)`
-    * literals hit the hive partition filter, so the parquet reader never
-    * lists, opens, or materializes any other cell (partition pruning
-    * asserted from task input metrics in AnnIndexSpec). Output is
-    * row-identical to [[ivfSearchKmeansWith]] at the same
-    * (cents, nprobe, k) — spec-pinned — when the store holds the FLAT
-    * assignment: always below [[HierAssignCrossoverC]], at any c with
-    * `writeAnnAssignments(…, exact = true)`, and on clustered corpora
-    * either way. A default (auto) store above the crossover holds the
-    * two-level assignment, and results follow THAT assignment — the
-    * documented approximation every auto-path consumer shares.
+  /** Serve ONE query from the cell-partitioned assignment store in at most
+    * three Spark jobs: collect the query vector (a second row fails loudly
+    * — batches go through [[annAssignedSearchBatch]]; no row, no result);
+    * rank the local c-row centroid table by a projection Spark folds (no
+    * job), top `nprobe` in Spark's `ccos DESC, cid` order; then ONE scan of
+    * only those cells, the vector a literal of the query column's type, into
+    * TakeOrdered. The `cid IN (...)` literals hit the hive partition filter,
+    * so no other cell is listed, opened, or read (task input metrics pinned
+    * in AnnIndexSpec). Output is row-identical to [[ivfSearchKmeansWith]] at
+    * the same (cents, nprobe, k) — spec-pinned, cell ties included — when
+    * the store holds the FLAT assignment: always below
+    * [[HierAssignCrossoverC]], at any c with `writeAnnAssignments(…, exact =
+    * true)`, and on clustered corpora either way. Above the crossover an
+    * auto store holds the two-level assignment, and results follow it.
     */
   def annAssignedSearch(spark: org.apache.spark.sql.SparkSession,
                         assignPath: String, cents: DataFrame,
                         query: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val q = ensureFns(query).select(col("embedding").as("qv"))
-    val probedCids = withCnorm(cents).crossJoin(broadcast(q))
-      .select(col("cid"),
-        round6(expr("graft_dot(cvec, qv)") /
-          (col("cnrm") * sqrt(expr("graft_dot(qv, qv)")))).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid")).limit(nprobe)
-      .collect().map(_.getInt(0)).toSeq
+    val qRows = ensureFns(query).select(col("embedding").cast("array<double>"))
+      .limit(2).collect()
+    require(qRows.length <= 1, "annAssignedSearch serves one query row; " +
+      "batch queries through annAssignedSearchBatch")
+    // boxed, so a null element stays null; the cast restores the element
+    // type with nullable elements, as ANSI casts never narrow nullability
+    val qv = lit(qRows.headOption.map(_.getSeq[java.lang.Double](0).toArray).orNull)
+      .cast(query.schema("embedding").dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType].copy(containsNull = true))
+    def cosTo(v: Column, nrm: Column): Column =
+      round6(call_function("graft_dot", v, qv) /
+        (nrm * sqrt(call_function("graft_dot", qv, qv))))
+    // sorted as Spark sorts `ccos DESC, cid`: NaN first, nulls last, -0.0 = 0.0
+    val probedCids = if (qRows.isEmpty) Seq.empty[Int] else withCnorm(cents)
+      .select(col("cid"), cosTo(col("cvec"), col("cnrm"))).collect().toSeq
+      .sortBy { r =>
+        val c = r.getAs[java.lang.Double](1)
+        (c == null, c != null && !c.isNaN, if (c == null || c.isNaN) 0.0 else 0.0 - c, r.getInt(0))
+      }(Ordering.Tuple4(Ordering.Boolean, Ordering.Boolean, Ordering.Double.TotalOrdering, Ordering.Int))
+      .take(nprobe).map(_.getInt(0))
     spark.read.parquet(assignPath)
       .filter(col("cid").isin(probedCids.map(c => c: Any): _*))
-      .crossJoin(broadcast(q))
       .select(col("vec_id"), col("cid").cast("int").as("cid"),
-        round6(dot("embedding", "qv") / (col("nrm") * sqrt(dot("qv", "qv")))).as("cos"))
+        cosTo(col("embedding"), col("nrm")).as("cos"))
       .orderBy(col("cos").desc, col("vec_id")).limit(k)
   }
 
@@ -3921,41 +3933,36 @@ object LlmOps {
     * contraction converges in O(log² n) rounds on ANY topology because
     * each round halves component height by pointer doubling.
     *
-    * One round = two edge-set-sized shuffles:
-    *   - large-star: every node links its strictly-LARGER neighbors to
-    *     the minimum of its closed neighborhood;
-    *   - small-star: edges oriented toward the smaller endpoint, every
-    *     node links its smaller neighbors (and itself) to that minimum.
-    * Both emit edges oriented (larger → smaller), so the fixpoint check
-    * is a plain set compare. At the fixpoint every component is a star
-    * centered at its minimum id — the same min-id labels every other
-    * cluster path produces (spec-pinned against [[duplicateClusters]]).
-    *
-    * Each round's result is localCheckpoint'ed: the round's plan
-    * references its input several times, so without truncation the
-    * logical plan DOUBLES per round and analysis time explodes long
-    * before the data does (the GraphFrames lesson). On a cluster, swap
-    * localCheckpoint for a reliable checkpoint dir — same shape.
+    * One round = three edge-set-sized exchanges in four Spark jobs:
+    * large-star links every node's strictly-LARGER neighbors to the
+    * minimum of its closed neighborhood, and small-star its smaller
+    * neighbors (and itself) to theirs — each a `min(v) over (partition by
+    * u)` window, no join-back; large-star emits one row per edge, small-star
+    * ends in `distinct`. The eager localCheckpoint pass (which truncates
+    * the plan — it DOUBLES per round otherwise) collects the convergence
+    * fingerprint as observe() metrics: both steps emit (larger → smaller)
+    * edges, so the set compare is count + exact DECIMAL sum of per-edge
+    * xxhash64 (collision ~2^-64 per round) — no fingerprint job. At the
+    * fixpoint every component is a star centered at its minimum id, so a
+    * non-root's label is its ONE converged edge and roots label themselves
+    * (spec-pinned against [[duplicateClusters]] and union-find). Superseded
+    * rounds' checkpoints are released; only the result's stays persisted.
+    * On a cluster, swap localCheckpoint for a reliable checkpoint dir.
     */
   def distributedClustersStar(ids: DataFrame, idCol: String, pairs: DataFrame,
                               maxIters: Int = 25): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val und = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val m = und.groupBy(col("u")).agg(least(col("u"), min(col("v"))).as("m"))
-      und.join(m, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val or = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val m = or.groupBy(col("u")).agg(min(col("v")).as("m"))
-      or.join(m, "u")
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
+    def largeStar(e: DataFrame): DataFrame =
+      e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        .select(col("u"), col("v"), least(col("u"), min(col("v")).over(byU)).as("m"))
+        .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(m.select(col("u"), col("m").as("v")))
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(col("u"), col("v"), min(col("v")).over(byU).as("m"))
+        .select(inline(array(struct(col("v").as("u"), col("m").as("v")),
+          struct(col("u"), col("m").as("v")))))
         .filter(col("u") =!= col("v"))
         .distinct()
-    }
     // fail LOUDLY on a non-numeric (or null) id: the long cast yields
     // null and the downstream null-dropping filters would silently
     // discard every such edge, self-labelling all docs — the driver
@@ -3967,46 +3974,37 @@ object LlmOps {
           lit("distributedClustersStar: id is not numeric: "),
           coalesce(c.cast("string"), lit("null")))))
         .otherwise(c.cast("long"))
-    var e = pairs
+    def checkpoint(edges: DataFrame): (DataFrame, Map[String, Any]) = {
+      val fp = org.apache.spark.sql.Observation()
+      val cp = edges.observe(fp, count(lit(1)), sum(xxhash64(col("u"), col("v"))
+        .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).localCheckpoint(true)
+      (cp, fp.get)
+    }
+    // Dataset.unpersist is a no-op on a checkpointed frame
+    def release(cp: DataFrame): Unit = cp.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+    var (e, fp) = checkpoint(pairs
       .select(asLongId(greatest(col("a"), col("b"))).as("u"),
         asLongId(least(col("a"), col("b"))).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
-    // Convergence check (r15): both steps emit DISTINCT (larger → smaller)
-    // edges, so round-over-round set equality is decidable from an
-    // order-independent multiset fingerprint — count + exact DECIMAL sum
-    // of per-edge xxhash64 — the dual_write parity construction (residual
-    // collision ~2^-64 per round). ONE aggregate over the new edge set per
-    // round, with the previous round's reused, replaces the old
-    // count+count+exceptAll: two fewer jobs and one fewer edge-set-sized
-    // shuffle PER ROUND at any scale (guide §2.4).
-    def fingerprint(edges: DataFrame): org.apache.spark.sql.Row =
-      edges.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-    var fpPrev = fingerprint(e)
+      .filter(col("u") =!= col("v")).distinct())
     var iters = 0
     var converged = false
     while (!converged && iters < maxIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      val fpNext = fingerprint(next)
-      converged = fpNext == fpPrev
-      fpPrev = fpNext
-      val old = e
+      val (next, fpNext) = checkpoint(smallStar(largeStar(e)))
+      converged = fpNext == fp
+      release(e)
       e = next
-      old.unpersist()
+      fp = fpNext
       iters += 1
     }
+    if (!converged) release(e)
     require(converged, s"star contraction did not converge in $maxIters rounds")
-    val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-    val lab = und.groupBy(col("u"))
-      .agg(least(col("u"), min(col("v"))).as("cluster_id"))
-      .withColumnRenamed("u", idCol)
-    val out = ids.select(col(idCol)).distinct()
-      .join(lab, Seq(idCol), "left_outer")
+    ids.select(col(idCol)).distinct()
+      .join(e.select(col("u").as(idCol), col("v").as("cluster_id")),
+        Seq(idCol), "left_outer")
       .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
-    e.unpersist()
-    out
   }
 
   /** Cluster-size histogram over near-duplicate cluster labels — the

@@ -8,6 +8,29 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Spark jobs `body` submits, via an isolated job group (AQE splits one
+    * action into several jobs, so a count pins the whole call shape).
+    */
+  def countJobs(tag: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try body finally sc.clearJobGroup()
+    // the async listener bus feeds the status tracker after the action
+    // returns: poll until the group's count is stable across consecutive
+    // reads (bounded) — a fixed sleep under-reports on a loaded host
+    // (ADVICE r8)
+    var last = -1
+    var stable = 0
+    var waitedMs = 0
+    while (stable < 3 && waitedMs < 10000) {
+      val cur = sc.statusTracker.getJobIdsForGroup(tag).length
+      if (cur == last) stable += 1 else { stable = 0; last = cur }
+      Thread.sleep(100)
+      waitedMs += 100
+    }
+    last
+  }
 }
 
 object SparkSpec {

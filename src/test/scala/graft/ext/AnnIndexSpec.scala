@@ -171,6 +171,83 @@ class AnnIndexSpec extends SparkSpec {
       s"partition pruning must keep the scan to the probed cell: ${acc.get()}")
   }
 
+  private def searchRows(df: DataFrame): Seq[(Long, Int, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
+
+  test("annAssignedSearch: more than one query row fails loudly, naming the " +
+       "batch operator; no query row returns no rows") {
+    val path = dir("single_query")
+    val corpus = baseCorpus(40)
+    val cents = LlmOps.kmeansCentroids(corpus, c = 4, iters = 2)
+    LlmOps.writeAnnAssignments(corpus, cents, path)
+    val two = baseCorpus(2, idOffset = 9000L)
+    val e = intercept[IllegalArgumentException] {
+      LlmOps.annAssignedSearch(spark, path, cents, two, nprobe = 2, k = 5)
+    }
+    assert(e.getMessage.contains("annAssignedSearchBatch"), e.getMessage)
+    val none = LlmOps.annAssignedSearch(spark, path, cents, two.limit(0),
+      nprobe = 2, k = 5)
+    assert(none.columns.toSeq == Seq("vec_id", "cid", "cos"))
+    assert(none.collect().isEmpty)
+  }
+
+  test("annAssignedSearch matches ivfSearchKmeansWith for float and double " +
+       "query vectors") {
+    val path = dir("query_types")
+    val corpus = baseCorpus(40)
+    val cents = LlmOps.kmeansCentroids(corpus, c = 4, iters = 2)
+    LlmOps.writeAnnAssignments(corpus, cents, path)
+    Seq(Seq((0L, Seq(0.9f, 0.1f, 0.03f, 0f))).toDF("vec_id", "embedding"),
+        Seq((0L, Seq(0.9, 0.1, 0.03, 0.0))).toDF("vec_id", "embedding"))
+      .foreach { q =>
+        val served = searchRows(LlmOps.annAssignedSearch(spark, path, cents, q,
+          nprobe = 2, k = 5))
+        assert(served.length == 5)
+        assert(served == searchRows(LlmOps.ivfSearchKmeansWith(corpus, cents, q,
+          nprobe = 2, k = 5)), q.schema("embedding").dataType.toString)
+      }
+  }
+
+  test("annAssignedSearch: a centroid cosine tie probes the smaller cid, " +
+       "as ivfSearchKmeansWith does") {
+    val path = dir("tie")
+    val corpus = baseCorpus(40)
+    // cids 1 and 2 point the same way (2 is 1 scaled by two), so every
+    // query ties on them; the table lists 2 first
+    val cents = Seq((2, Seq(2.0, 0.0, 0.0, 0.0)), (1, Seq(1.0, 0.0, 0.0, 0.0)),
+        (0, Seq(0.0, 1.0, 0.0, 0.0)), (3, Seq(0.0, 0.0, 1.0, 0.0)))
+      .toDF("cid", "cvec")
+    LlmOps.writeAnnAssignments(corpus, cents, path, exact = true)
+    val q = Seq((0L, Seq(1f, 0.05f, 0f, 0f))).toDF("vec_id", "embedding")
+    val served = searchRows(LlmOps.annAssignedSearch(spark, path, cents, q,
+      nprobe = 1, k = 5))
+    assert(served.nonEmpty && served.forall(_._2 == 1), served.toString)
+    assert(served == searchRows(LlmOps.ivfSearchKmeansWith(corpus, cents, q,
+      nprobe = 1, k = 5)))
+  }
+
+  test("annAssignedSearch runs in at most 3 Spark jobs") {
+    val path = dir("jobs")
+    val qPath = dir("jobs_query")
+    val idx = dir("jobs_index")
+    val corpus = baseCorpus(400)
+    LlmOps.writeAnnIndex(corpus, idx, cHint = Some(4), iters = 2)
+    val cents = LlmOps.readAnnIndex(spark, idx)
+    LlmOps.writeAnnAssignments(corpus, cents, path)
+    baseCorpus(3, idOffset = 9000L).coalesce(1).write.parquet(qPath)
+    val q = spark.read.parquet(qPath).filter($"vec_id" === 9001L)
+    var got = Seq.empty[Long]
+    val jobs = countJobs("ann-assigned-search") {
+      got = LlmOps.annAssignedSearch(spark, path, cents, q, nprobe = 2, k = 5)
+        .collect().map(_.getLong(0)).toSeq
+    }
+    assert(got.length == 5)
+    // query collect + the pruned store scan's top-k, and at most one more
+    // the file source may spend listing or planning; ranking the local
+    // centroid table runs none
+    assert(jobs <= 3, s"annAssignedSearch took $jobs jobs")
+  }
+
   test("hierarchical assignment matches flat on well-separated clusters " +
        "and carries the same schema (r10 verdict item 4)") {
     import org.apache.spark.sql.functions.col

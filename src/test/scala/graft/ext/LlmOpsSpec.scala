@@ -44,27 +44,6 @@ class LlmOpsSpec extends SparkSpec {
       (7L, "completely different content about catalyst and tungsten engines")
     val d = docs(rows: _*)
     val sh = LlmOps.shingleTable(d, "doc_id")
-    val sc = spark.sparkContext
-    // jobs spawned by `body`, via an isolated job group (AQE splits one
-    // action into several jobs, so only a RELATIVE count is meaningful)
-    def countJobs(tag: String)(body: => Unit): Int = {
-      sc.setJobGroup(tag, tag)
-      try body finally sc.clearJobGroup()
-      // the async listener bus feeds the status tracker after the action
-      // returns: poll until the group's count is stable across consecutive
-      // reads (bounded) — a fixed sleep under-reports on a loaded host
-      // (ADVICE r8)
-      var last = -1
-      var stable = 0
-      var waitedMs = 0
-      while (stable < 3 && waitedMs < 10000) {
-        val cur = sc.statusTracker.getJobIdsForGroup(tag).length
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(100)
-        waitedMs += 100
-      }
-      last
-    }
     try {
       sh.count() // materialize the shingle cache OUTSIDE the audited windows
       var out: (org.apache.spark.sql.DataFrame, Long) = null
@@ -826,10 +805,67 @@ class LlmOpsSpec extends SparkSpec {
     val ids = spark.range(n).select(col("id").as("doc_id"))
     val chain = spark.range(n - 1)
       .select(col("id").as("a"), (col("id") + 1).as("b"))
-    val out = LlmOps.distributedClustersStar(ids, "doc_id", chain)
-    assert(out.filter(col("cluster_id") =!= 0L).count() == 0,
+    val before = spark.sparkContext.getPersistentRDDs.size
+    var labels: Array[org.apache.spark.sql.Row] = null
+    val jobs = countJobs("star-chain") {
+      labels = LlmOps.distributedClustersStar(ids, "doc_id", chain).collect()
+    }
+    assert(labels.forall(_.getLong(1) == 0L),
       "every chain node must label to the minimum id 0")
-    assert(out.count() == n)
+    assert(labels.length == n)
+    // two per-node-minimum windows, one distinct and the checkpoint job a
+    // round; no fingerprint aggregate, no join-back
+    assert(jobs <= 60, s"star contraction took $jobs jobs on the chain")
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after <= before + 1,
+      s"only the result's checkpoint may stay persisted: $before -> $after")
+  }
+
+  // min-id connected-component labels from a driver union-find: every root
+  // is its component's minimum because the larger root always links under
+  // the smaller one
+  private def unionFindLabels(ids: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  test("distributedClustersStar equals a driver union-find on every graph " +
+       "shape, exactly one row per id") {
+    val n = 60L
+    val path = (0L until n - 1).map(i => (i, i + 1))
+    val rnd = new scala.util.Random(17)
+    val randoms = (1 to 12).map { g =>
+      s"random$g" -> Seq.fill(rnd.nextInt(80) + 10)(
+        (rnd.nextInt(n.toInt).toLong, rnd.nextInt(n.toInt).toLong))
+    }
+    val graphs = Seq(
+      "empty" -> Seq.empty[(Long, Long)],
+      "chain" -> path,
+      "reversed chain" -> path.reverse.map(_.swap),
+      "hub-low star" -> (1L until n).map(i => (0L, i)),
+      "hub-high star" -> (0L until n - 1).map(i => (n - 1, i)),
+      "clique" -> (for (a <- 0L until 12L; b <- a + 1 until 12L) yield (a, b)),
+      "cycle" -> (0L until n).map(i => (i, (i + 1) % n)),
+      "duplicates and self-loops" ->
+        (path ++ path.map(_.swap) ++ path ++ (0L until n).map(i => (i, i)))) ++ randoms
+    // ids past every edge stay singletons
+    val ids = 0L until n + 5
+    graphs.foreach { case (name, edges) =>
+      val out = LlmOps.distributedClustersStar(ids.toDF("doc_id"), "doc_id",
+          edges.toDF("a", "b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(out.length == ids.length && out.map(_._1).distinct.length == ids.length,
+        s"$name: one row per id, got ${out.length}")
+      assert(out.toMap == unionFindLabels(ids, edges), s"$name: labels differ")
+    }
   }
 
   test("clusterSizeStats: histogram and removable mass on known clusters") {

@@ -379,12 +379,6 @@ class PlanAuditSpec extends SparkSpec {
       "dedup_semantic",
       // 1-row query-vector cross joins (approx scan + rescore stages)
       "sim_search_quantized",
-      // 1-row query-vector cross join over the cell-partitioned
-      // assignment store (the probed-cell scan is partition-pruned)
-      "sim_search_served",
-      // same serving tail as sim_search_served, over the delta-appended
-      // store (the append itself is a write, not part of this plan)
-      "ann_index_append",
       // inherits quality_lm_score's 1-row total-gram aggregate attach
       // (LlmOps.lmScore: crossJoin(broadcast(tot)) where tot is a single
       // global-sum row) — same bounded shape as quality_lm_score above
