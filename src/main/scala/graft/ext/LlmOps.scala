@@ -2136,8 +2136,10 @@ object LlmOps {
     * centroid matrix rides the plan as a literal installed into codegen as
     * a reference object — 4096 cells × 64 dims × 8 B = 2 MB, comfortably a
     * task-binary-sized constant. Flat assignment above
-    * [[HierAssignCrossoverC]] only happens under `exact = true`; past THIS
-    * bound the crossJoin shape takes over (broadcast transport).
+    * [[HierAssignCrossoverC]] only happens when a caller asks for it
+    * ([[kmeansAssignTo]] directly, e.g. a flat store written through
+    * [[writeAssignedCells]]); past THIS bound the crossJoin shape takes
+    * over (broadcast transport).
     */
   private[graft] val MaxLocalAssignCells = 4096
 
@@ -2467,7 +2469,7 @@ object LlmOps {
 
   /** IVF search over TRAINED cells ([[kmeansCentroids]]), same two-stage
     * shape as [[ivfSearch]]: rank the c trained centroids against the
-    * broadcast query, probe the best `nprobe` cells, exact-search only the
+    * query, probe the best `nprobe` cells, exact-search only the
     * vectors assigned to them. The accuracy/cost dial and the plan shape
     * (corpus scanned, never shuffled except the bounded training aggs) are
     * identical to the label-cell form — but needs no label column.
@@ -2480,22 +2482,61 @@ object LlmOps {
     ivfSearchKmeansWith(emb0, kmeansCentroids(emb0, c, iters), query, nprobe, k)
 
   /** Serve one query against a PRE-TRAINED centroid table — the index-reuse
-    * path (train once per corpus snapshot, search many).
+    * path (train once per corpus snapshot, search many): the corpus
+    * assigned in-plan ([[assignCells]]), then [[ivfSearchCells]].
     */
   def ivfSearchKmeansWith(emb0: DataFrame, cents: DataFrame, query: DataFrame,
-                          nprobe: Int, k: Int): DataFrame = {
-    val emb = kmeansInput(emb0)
-    val q = query.select(col("embedding").as("qv"))
-    val probed = withCnorm(cents).crossJoin(broadcast(q))
-      .select(col("cid"),
-        round6(expr("graft_dot(cvec, qv)") /
-          (col("cnrm") * sqrt(expr("graft_dot(qv, qv)")))).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid")).limit(nprobe)
-    assignCells(emb, cents)
-      .join(broadcast(probed.select(col("cid"))), "cid")
-      .crossJoin(broadcast(q))
+                          nprobe: Int, k: Int): DataFrame =
+    ivfSearchCells(assignCells(kmeansInput(emb0), cents), cents, query, nprobe, k)
+
+  /** The single-query probe every trained-IVF search shares: the query
+    * collected ONCE (a second row fails loudly — batches go through
+    * [[ivfSearchBatch]]) as a literal of the query column's type (null when
+    * there is no row), and the top `nprobe` cids of the c-row centroid
+    * table — ranked by a projection Spark folds over a local table (no job)
+    * and sorted on the driver exactly as Spark sorts `ccos DESC, cid` (NaN
+    * first, nulls last, -0.0 = 0.0). No query row probes nothing.
+    */
+  private def probeOne(cents: DataFrame, query: DataFrame,
+                       nprobe: Int): (Column, Seq[Any]) = {
+    val qRows = ensureFns(query).select(col("embedding").cast("array<double>"))
+      .limit(2).collect()
+    require(qRows.length <= 1, "trained-IVF search serves one query row; " +
+      "batch queries through ivfSearchBatch")
+    // boxed, so a null element stays null; the cast restores the element
+    // type with nullable elements, as ANSI casts never narrow nullability
+    val qv = lit(qRows.headOption.map(_.getSeq[java.lang.Double](0).toArray).orNull)
+      .cast(query.schema("embedding").dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType].copy(containsNull = true))
+    val probed = if (qRows.isEmpty) Seq.empty[Any] else withCnorm(cents)
+      .select(col("cid"), queryCos(qv, col("cvec"), col("cnrm"))).collect().toSeq
+      .sortBy { r =>
+        val c = r.getAs[java.lang.Double](1)
+        (c == null, c != null && !c.isNaN, if (c == null || c.isNaN) 0.0 else 0.0 - c,
+          r.getAs[Number](0).longValue)
+      }(Ordering.Tuple4(Ordering.Boolean, Ordering.Boolean, Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(nprobe).map(_.get(0))
+    (qv, probed)
+  }
+
+  /** round6 cosine of a (vector, norm) pair to the query literal. */
+  private def queryCos(qv: Column, v: Column, nrm: Column): Column =
+    round6(call_function("graft_dot", v, qv) /
+      (nrm * sqrt(call_function("graft_dot", qv, qv))))
+
+  /** Single-query trained-IVF search over any (vec_id, cid, embedding, nrm)
+    * cell frame — the in-plan assignment or the cell-partitioned store:
+    * [[probeOne]], then `cid IN (probed)`, the round6 cosine to the query
+    * literal, top k by (cos DESC, vec_id). Over a `partitionBy("cid")`
+    * store the same filter is the partition filter, so no other cell is
+    * listed, opened or read.
+    */
+  private def ivfSearchCells(cells: DataFrame, cents: DataFrame, query: DataFrame,
+                             nprobe: Int, k: Int): DataFrame = {
+    val (qv, probed) = probeOne(cents, query, nprobe)
+    cells.filter(col("cid").isin(probed: _*))
       .select(col("vec_id"), col("cid"),
-        round6(dot("embedding", "qv") / (col("nrm") * sqrt(dot("qv", "qv")))).as("cos"))
+        queryCos(qv, col("embedding"), col("nrm")).as("cos"))
       .orderBy(col("cos").desc, col("vec_id")).limit(k)
   }
 
@@ -2508,36 +2549,35 @@ object LlmOps {
   val QueryBatchMaxRows = 4096
 
   /** BATCHED trained-IVF search — the query-THROUGHPUT serving shape.
-    * [[ivfSearchKmeansWith]] (and the per-query store path
-    * [[annAssignedSearch]]) answer ONE query per corpus pass; a real
-    * serving job holds a batch of Q queries, and running Q independent
-    * jobs pays Q corpus touches. Here the corpus is touched ONCE for the
-    * whole batch:
+    * [[ivfSearchKmeansWith]] and [[annAssignedSearch]] answer ONE query per
+    * pass; a real serving job holds a batch of Q queries, and running Q
+    * independent jobs pays Q touches of the cells. Here `assigned` — any
+    * (vec_id, cid, embedding, nrm) cell frame: [[kmeansAssignAuto]]'s
+    * in-plan assignment, or the cell-partitioned store a streaming
+    * `foreachBatch` serves from (StreamingAnnServeSpec drives it) — is
+    * touched ONCE for the whole batch:
     *
     *   1. every query ranks the bounded c-row centroid table (a Q×c
     *      nested-loop over two broadcast-sized sides) and keeps its
-    *      top-`nprobe` cells — Q·nprobe (qid, cid) probe rows;
-    *   2. the probe list EQUI-joins the corpus assignment on `cid` — no
-    *      per-query scan: each vector fans out only to the queries that
-    *      probed its cell (expected Q·nprobe/c replicas per vector);
+    *      top-`nprobe` cells — Q·nprobe (qid, cid) probe rows, collected
+    *      once into a local table;
+    *   2. `assigned` is filtered to the union of the probed cells — on a
+    *      `partitionBy("cid")` store the hive partition filter, so
+    *      per-batch bytes are (distinct probed cells)/c of the corpus (task
+    *      input metrics pinned in the spec) — and EQUI-joins the probe list
+    *      on `cid`: each vector fans out only to the queries that probed its
+    *      cell (expected Q·nprobe/c replicas per vector);
     *   3. per-(query, vector) cosine, then per-query top-k via the
     *      `graft_topk` bounded-heap aggregate — map-side eviction, the
     *      final exchange carries Q·k rows, never a global sort.
     *
-    * Per-query semantics are IDENTICAL to [[ivfSearchKmeansWith]] at the
-    * same (cents, nprobe, k) BELOW [[HierAssignCrossoverC]] — round6
-    * cosine, cell ties to the smaller cid, rank ties to the smaller
-    * vec_id (spec-pinned). At c >= the crossover the corpus assignment is
-    * [[kmeansAssignAuto]]'s two-level path — the same rule every other
-    * serving/maintenance path uses (and exact on clustered corpora, the
-    * regime a trained index exists for), instead of paying the flat
-    * c-dots-per-vector wall the crossover exists to avoid. The batch is
-    * gated at [[QueryBatchMaxRows]] (the broadcast contract); compose
-    * with a cid-partitioned assignment store for the no-reassign form —
-    * the probe join prunes the same way.
-    * Output: (qid, vec_id, cos), k rows per query.
+    * Per-query semantics are IDENTICAL to the single-query search over the
+    * same cells at the same (cents, nprobe, k) — round6 cosine, cell ties
+    * to the smaller cid, rank ties to the smaller vec_id (spec-pinned for
+    * both cell frames). The batch is gated at [[QueryBatchMaxRows]] (the
+    * broadcast contract). Output: (qid, vec_id, cos), k rows per query.
     */
-  def ivfSearchBatch(emb0: DataFrame, queries: DataFrame, cents: DataFrame,
+  def ivfSearchBatch(assigned: DataFrame, queries: DataFrame, cents: DataFrame,
                      nprobe: Int, k: Int): DataFrame = {
     val q = ensureFns(queries)
       .select(col("vec_id").as("qid"),
@@ -2548,15 +2588,18 @@ object LlmOps {
     require(qn <= QueryBatchMaxRows,
       s"query batch $qn exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
         "window the query stream into bounded batches upstream")
-    val probed = q.crossJoin(broadcast(withCnorm(cents)))
+    // bounded: ≤ Q·nprobe rows — the probe join's build side, and its
+    // distinct cids the partition-pruning literal set (read locally, no job)
+    val probed = toLocalRelation(q.crossJoin(broadcast(withCnorm(cents)))
       .select(col("qid"), col("cid"),
         round6(expr("graft_dot(qv, cvec)") /
           (col("qnrm") * col("cnrm"))).as("ccos"))
       .groupBy(col("qid"))
       .agg(expr(s"transform(slice(array_sort(collect_list(struct(-ccos AS nc, cid))), 1, $nprobe), x -> x.cid)")
         .as("cids"))
-      .select(col("qid"), explode(col("cids")).as("cid"))
-    kmeansAssignAuto(emb0, cents)
+      .select(col("qid"), explode(col("cids")).as("cid")))
+    val cids = probed.collect().map(_.get(1)).distinct.toSeq
+    ensureFns(assigned).filter(col("cid").isin(cids: _*))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
       .join(broadcast(probed), "cid")
       .join(broadcast(q), "qid")
@@ -2709,18 +2752,6 @@ object LlmOps {
     spark.createDataFrame(onDisk.collect().toSeq.asJava, onDisk.schema)
   }
 
-  /** Serve a query from the stored index ([[ivfSearchKmeansWith]] over the
-    * persisted centroids — no training on the query path). NOTE this
-    * still re-assigns the corpus per query (one corpus scan × c dots) —
-    * fine for batch analytics, wrong for a query STREAM; the serving
-    * shape for that is [[writeAnnAssignments]] + [[annAssignedSearch]],
-    * where per-query cost is nprobe cells, not the corpus.
-    */
-  def annIndexSearch(emb0: DataFrame, path: String, query: DataFrame,
-                     nprobe: Int, k: Int): DataFrame =
-    ivfSearchKmeansWith(emb0, readAnnIndex(emb0.sparkSession, path), query,
-      nprobe, k)
-
   /** Persist the index ASSIGNMENT partitioned by cell — the IVF serving
     * layout: one hive partition per cid, each cell's rows in one file
     * (`repartition(col("cid"))` groups a cell into one task before
@@ -2732,28 +2763,24 @@ object LlmOps {
     * corpus instead of a full scan. At c = √N this is the difference
     * between per-query O(N) and per-query O(√N·nprobe): the other half
     * of the r10 √N-wall fix (the two-level assignment bounds the BUILD;
-    * this bounds the SERVE).
-    *
-    * `exact = true` forces the FLAT assignment regardless of c — the
-    * store is then row-identical to [[kmeansAssignTo]] unconditionally
-    * (so [[annAssignedSearch]]'s spec-pinned parity with
-    * [[ivfSearchKmeansWith]] holds at ANY c), at the flat path's
-    * c-dots-per-vector build cost. The default (auto) matches flat below
-    * [[HierAssignCrossoverC]] and on clustered corpora above it.
+    * this bounds the SERVE). The store matches [[kmeansAssignTo]]'s flat
+    * assignment below the crossover and on clustered corpora above it; a
+    * store flat at ANY c is `writeAssignedCells(kmeansAssignTo(…), path)`.
     */
-  def writeAnnAssignments(emb0: DataFrame, cents: DataFrame,
-                          path: String, exact: Boolean = false): Unit =
-    writeAssignedCells(
-      if (exact) kmeansAssignTo(emb0, cents) else kmeansAssignAuto(emb0, cents),
-      path)
+  def writeAnnAssignments(emb0: DataFrame, cents: DataFrame, path: String): Unit =
+    writeAssignedCells(kmeansAssignAuto(emb0, cents), path)
 
-  /** Write an already-computed assignment (e.g. [[kmeansAssignToHier]]'s)
-    * in the cell-partitioned serving layout.
+  /** Write an already-computed assignment (e.g. [[kmeansAssignTo]]'s or
+    * [[kmeansAssignToHier]]'s) in the cell-partitioned serving layout.
     */
   def writeAssignedCells(assigned: DataFrame, path: String): Unit =
+    cellWriter(assigned).mode("overwrite").parquet(path)
+
+  /** The cell-partitioned layout both store writers share. */
+  private def cellWriter(assigned: DataFrame) =
     assigned.select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
       .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
+      .write.partitionBy("cid")
 
   /** Append a DELTA batch into an existing cell-partitioned assignment
     * store without retraining or rewriting it — the index-maintenance op
@@ -2773,7 +2800,6 @@ object LlmOps {
     * production replay guard, the MigrateJob pattern).
     */
   def appendAnnAssignments(delta: DataFrame, cents: DataFrame, path: String,
-                           exact: Boolean = false,
                            dedupeAgainstStore: Boolean = false): Unit = {
     val d0 =
       if (!dedupeAgainstStore) delta
@@ -2789,109 +2815,27 @@ object LlmOps {
         delta.join(
           delta.sparkSession.read.parquet(path).select(col("vec_id")),
           Seq("vec_id"), "left_anti").localCheckpoint()
-    val assigned =
-      if (exact) kmeansAssignTo(d0, cents) else kmeansAssignAuto(d0, cents)
-    assigned.select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(path)
+    cellWriter(kmeansAssignAuto(d0, cents)).mode("append").parquet(path)
   }
 
   /** Serve ONE query from the cell-partitioned assignment store in at most
-    * three Spark jobs: collect the query vector (a second row fails loudly
-    * — batches go through [[annAssignedSearchBatch]]; no row, no result);
-    * rank the local c-row centroid table by a projection Spark folds (no
-    * job), top `nprobe` in Spark's `ccos DESC, cid` order; then ONE scan of
-    * only those cells, the vector a literal of the query column's type, into
-    * TakeOrdered. The `cid IN (...)` literals hit the hive partition filter,
-    * so no other cell is listed, opened, or read (task input metrics pinned
-    * in AnnIndexSpec). Output is row-identical to [[ivfSearchKmeansWith]] at
-    * the same (cents, nprobe, k) — spec-pinned, cell ties included — when
-    * the store holds the FLAT assignment: always below
-    * [[HierAssignCrossoverC]], at any c with `writeAnnAssignments(…, exact =
-    * true)`, and on clustered corpora either way. Above the crossover an
-    * auto store holds the two-level assignment, and results follow it.
+    * three Spark jobs — [[ivfSearchCells]] over the store read: the query
+    * collect, the local centroid ranking (no job), then ONE scan of only
+    * the probed cells into TakeOrdered (the `cid IN (...)` literals are the
+    * hive partition filter; task input metrics pinned in AnnIndexSpec).
+    * Output is row-identical to [[ivfSearchKmeansWith]] at the same
+    * (cents, nprobe, k) — spec-pinned, cell ties included — when the store
+    * holds the FLAT assignment: always below [[HierAssignCrossoverC]], at
+    * any c for `writeAssignedCells(kmeansAssignTo(…), path)`, and on
+    * clustered corpora either way. Above the crossover a
+    * [[writeAnnAssignments]] store holds the two-level assignment, and
+    * results follow it. Batches go through [[ivfSearchBatch]] over the same
+    * store read.
     */
   def annAssignedSearch(spark: org.apache.spark.sql.SparkSession,
                         assignPath: String, cents: DataFrame,
-                        query: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val qRows = ensureFns(query).select(col("embedding").cast("array<double>"))
-      .limit(2).collect()
-    require(qRows.length <= 1, "annAssignedSearch serves one query row; " +
-      "batch queries through annAssignedSearchBatch")
-    // boxed, so a null element stays null; the cast restores the element
-    // type with nullable elements, as ANSI casts never narrow nullability
-    val qv = lit(qRows.headOption.map(_.getSeq[java.lang.Double](0).toArray).orNull)
-      .cast(query.schema("embedding").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].copy(containsNull = true))
-    def cosTo(v: Column, nrm: Column): Column =
-      round6(call_function("graft_dot", v, qv) /
-        (nrm * sqrt(call_function("graft_dot", qv, qv))))
-    // sorted as Spark sorts `ccos DESC, cid`: NaN first, nulls last, -0.0 = 0.0
-    val probedCids = if (qRows.isEmpty) Seq.empty[Int] else withCnorm(cents)
-      .select(col("cid"), cosTo(col("cvec"), col("cnrm"))).collect().toSeq
-      .sortBy { r =>
-        val c = r.getAs[java.lang.Double](1)
-        (c == null, c != null && !c.isNaN, if (c == null || c.isNaN) 0.0 else 0.0 - c, r.getInt(0))
-      }(Ordering.Tuple4(Ordering.Boolean, Ordering.Boolean, Ordering.Double.TotalOrdering, Ordering.Int))
-      .take(nprobe).map(_.getInt(0))
-    spark.read.parquet(assignPath)
-      .filter(col("cid").isin(probedCids.map(c => c: Any): _*))
-      .select(col("vec_id"), col("cid").cast("int").as("cid"),
-        cosTo(col("embedding"), col("nrm")).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(k)
-  }
-
-  /** Batched serving from the cell-partitioned assignment store — the
-    * micro-batch consumer's shape (a streaming `foreachBatch` of query
-    * requests lands here; StreamingAnnServeSpec drives it): the whole
-    * batch's probes resolve in ONE pruned store pass instead of Q
-    * single-query reads. Like [[ivfSearchBatch]] but against the STORE —
-    * the corpus is never re-assigned, and the scan's `cid IN (…)` union
-    * of all probed cells hits the hive partition filter, so per-batch
-    * bytes are (distinct probed cells)/c of the corpus (task input
-    * metrics pinned in the spec).
-    *
-    * Per-query semantics are IDENTICAL to [[annAssignedSearch]] at the
-    * same (store, cents, nprobe, k) — spec-pinned. Bounded at
-    * [[QueryBatchMaxRows]]; the probed-cid collect is ≤ Q·nprobe ints.
-    * Output: (qid, vec_id, cos), k rows per query.
-    */
-  def annAssignedSearchBatch(spark: org.apache.spark.sql.SparkSession,
-                             assignPath: String, cents: DataFrame,
-                             queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val q = ensureFns(queries)
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qnrm", sqrt(expr("graft_dot(qv, qv)")))
-      .filter(col("qnrm") > 0)
-    val qn = q.count()
-    require(qn <= QueryBatchMaxRows,
-      s"query batch $qn exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
-        "window the query stream into bounded batches upstream")
-    val probed = q.crossJoin(broadcast(withCnorm(cents)))
-      .select(col("qid"), col("cid"),
-        round6(expr("graft_dot(qv, cvec)") /
-          (col("qnrm") * col("cnrm"))).as("ccos"))
-      .groupBy(col("qid"))
-      .agg(expr(s"transform(slice(array_sort(collect_list(struct(-ccos AS nc, cid))), 1, $nprobe), x -> x.cid)")
-        .as("cids"))
-      .select(col("qid"), explode(col("cids")).as("cid"))
-    // bounded: ≤ Q·nprobe ints — the partition-pruning literal set
-    val cids = probed.select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(assignPath)
-      .filter(col("cid").isin(cids.map(c => c: Any): _*))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cid").cast("int").as("cid"))
-      .join(broadcast(probed), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"),
-        round6(dot("embedding", "qv") / (col("nrm") * col("qnrm"))).as("cos"))
-      .groupBy(col("qid"))
-      .agg(expr(s"graft_topk(cos, vec_id, $k)").as("nn"))
-      .select(col("qid"), explode(col("nn")).as("x"))
-      .select(col("qid"), col("x.id").as("vec_id"), col("x.score").as("cos"))
-  }
+                        query: DataFrame, nprobe: Int, k: Int): DataFrame =
+    ivfSearchCells(spark.read.parquet(assignPath), cents, query, nprobe, k)
 
   /** Mean assignment cosine of `emb0` against a centroid table — the
     * index-quality scalar: drops when the corpus distribution drifts away
@@ -3316,57 +3260,23 @@ object LlmOps {
       .select(col("vec_id"), col("cid"), expr(pqCodesExpr(m)).as("codes"))
 
   /** ADC search restricted to the query's `nprobe` best coarse cells — the
-    * IVFADC serving path over a pre-built [[pqEncodeIvf]] table: rank the
-    * c trained centroids against the broadcast query (bounded), keep the
-    * top `nprobe` cells, ADC-score ONLY the codes rows in them (a
-    * broadcast semi-join — when the table is written partitioned by cid
-    * the filter partition-prunes instead), exact-rescore the k·overfetch
-    * survivors. Per-query work: c centroid dots + nprobe/c of the codes at
-    * m bytes each + k·overfetch float rows; nothing data-sized is ever
-    * hash- or range-exchanged.
+    * IVFADC serving path over a pre-built [[pqEncodeIvf]] table: the
+    * trained-IVF probe ([[probeOne]] — one query row, local centroid
+    * ranking), ADC-score ONLY the codes rows in `cid IN (probed)`, exact-
+    * rescore the k·overfetch survivors. Pass the read of a cid-PARTITIONED
+    * [[pqEncodeIvf]] store (`.partitionBy("cid")`) and the filter
+    * partition-prunes: the parquet reader never lists, opens, or
+    * materializes any other cell's codes. Per-query work: c centroid dots
+    * + nprobe/c of the codes at m bytes each + k·overfetch float rows;
+    * nothing data-sized is ever hash- or range-exchanged.
     */
   def pqSearchIvfCodes(codesC: DataFrame, corpus: DataFrame,
                        cents: DataFrame, cbs: DataFrame, query: DataFrame,
                        k: Int, nprobe: Int = 2, m: Int = 4, ks: Int = 4,
                        overfetch: Int = 4): DataFrame = {
+    val probed = probeOne(cents, query, nprobe)._2
     val q = broadcast(ensureFns(query).select(col("embedding").as("qm")))
-    val probed = withCnorm(cents).crossJoin(q)
-      .select(col("cid"),
-        round6(expr("graft_dot(cvec, qm)") /
-          (col("cnrm") * sqrt(expr("graft_dot(qm, qm)")))).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid")).limit(nprobe)
-    val cand = ensureFns(codesC)
-      .join(broadcast(probed.select(col("cid"))), "cid")
-      .crossJoin(broadcast(pqLut(cbs, q, m, ks)))
-      .select(col("vec_id"),
-        round6(expr(s"graft_pq_adc(codes, lutflat, $ks)")).as("approx"))
-      .orderBy(col("approx").desc, col("vec_id"))
-      .limit(k * overfetch)
-    pqRescore(corpus, cand, q, k)
-  }
-
-  /** Serve one query from a cid-PARTITIONED [[pqEncodeIvf]] store (write
-    * it `.partitionBy("cid")`): the top-nprobe cell ids collect first
-    * (≤ nprobe ints, bounded by the literal) into `cid IN (...)`
-    * partition-pruning literals, so the parquet reader never lists,
-    * opens, or materializes any other cell's codes — per-query bytes are
-    * (nprobe/c)·m ints per vector, the [[annAssignedSearch]] pruning
-    * discipline applied to the code scan. Row-identical to
-    * [[pqSearchIvfCodes]] at the same arguments (spec-pinned).
-    */
-  def pqIvfServe(spark: org.apache.spark.sql.SparkSession, codesPath: String,
-                 corpus: DataFrame, cents: DataFrame, cbs: DataFrame,
-                 query: DataFrame, k: Int, nprobe: Int = 2, m: Int = 4,
-                 ks: Int = 4, overfetch: Int = 4): DataFrame = {
-    val q = broadcast(ensureFns(query).select(col("embedding").as("qm")))
-    val probedCids = withCnorm(cents).crossJoin(q)
-      .select(col("cid"),
-        round6(expr("graft_dot(cvec, qm)") /
-          (col("cnrm") * sqrt(expr("graft_dot(qm, qm)")))).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid")).limit(nprobe)
-      .collect().map(_.getInt(0)).toSeq
-    val cand = spark.read.parquet(codesPath)
-      .filter(col("cid").isin(probedCids.map(c => c: Any): _*))
+    val cand = ensureFns(codesC).filter(col("cid").isin(probed: _*))
       .crossJoin(broadcast(pqLut(cbs, q, m, ks)))
       .select(col("vec_id"),
         round6(expr(s"graft_pq_adc(codes, lutflat, $ks)")).as("approx"))

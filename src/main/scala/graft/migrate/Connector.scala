@@ -199,7 +199,7 @@ final case class GraftBatchTarget(baseDir: String,
         .mode("append").save()
     if (errorLimit < Long.MaxValue)
       MigrateJob.withBudgetWatcher(spark, errors, errorLimit,
-        s"graft-connector-write-${wave.headOption.getOrElse(0)}")(save())
+        MigrateJob.uniqueGroup(s"graft-connector-write-${wave.headOption.getOrElse(0)}"))(save())
     else save()
   }
 

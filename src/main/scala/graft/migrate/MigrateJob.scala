@@ -107,6 +107,17 @@ object MigrateJob {
           s"error budget exceeded: ${acc.value} > $limit")
   }
 
+  private val watchedGroups = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A job group for [[withBudgetWatcher]] that no other watched action
+    * shares: `prefix` plus a per-process sequence number. Cancellation is
+    * by group, so two tables whose waves share a prefix (both at bucket 0
+    * in [[migrateAll]]'s pool) must not share the group, or one table's
+    * breach cancels the other.
+    */
+  private[migrate] def uniqueGroup(prefix: String): String =
+    s"$prefix-${watchedGroups.incrementAndGet()}"
+
   /** Drive `body` (a Spark action) under a budget watcher: a driver-side
     * thread polls the merged error accumulator while the action runs and
     * cancels the action's job group the moment the budget is blown —
@@ -358,8 +369,9 @@ object MigrateJob {
     // r16 (guide §2.6 — overlap independent jobs): with NO finite
     // consolidated budget and continueOnError (the recipe's default),
     // the tables are fully independent — ledgers, accumulators and
-    // budget-watcher job groups are all per-table/per-thread (Spark job
-    // groups are thread-local) — so they run from a small pool and one
+    // budget-watcher job groups are all per-table (uniqueGroup: the group
+    // is set per thread, but cancelled by name across threads) — so they
+    // run from a small pool and one
     // table's straggler tail backfills with the next table's tasks.
     // A FINITE global budget binds mid-wave in TABLE ORDER (and
     // continueOnError=false aborts the remainder in order), so those
@@ -676,7 +688,7 @@ object MigrateJob {
     def writeWave(): Unit = sink.writeWave(pass, wave)
     if (midWaveBudget)
       withBudgetWatcher(spark, errors, cfg.errorLimit,
-        s"graft-migrate-wave-${wave.headOption.getOrElse(0)}")(writeWave())
+        uniqueGroup(s"graft-migrate-wave-${wave.headOption.getOrElse(0)}"))(writeWave())
     else writeWave()
     val metrics = obs.get
     // the write itself routed by the pre-transform snapshot, so the data on

@@ -1278,8 +1278,8 @@ object LlmQueries {
       val e = t(s, d, "embeddings")
       val corpus = e.filter(col("vec_id") =!= 0)
       val cents = LlmOps.kmeansCentroids(corpus, c = 4, iters = 2)
-      LlmOps.ivfSearchBatch(corpus, e.filter(col("vec_id") < 4), cents,
-          nprobe = 2, k = 10)
+      LlmOps.ivfSearchBatch(LlmOps.kmeansAssignAuto(corpus, cents),
+          e.filter(col("vec_id") < 4), cents, nprobe = 2, k = 10)
         .orderBy(col("qid"), col("cos").desc, col("vec_id"))
     }),
 

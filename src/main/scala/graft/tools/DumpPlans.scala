@@ -37,7 +37,7 @@ object DumpPlans {
       "decontaminate_purge" -> "flagged ids counted once against the byte gate (lazy anti-join returned, nothing persisted — r9); under budget (this dump) the anti-join broadcasts the flagged side and the corpus never shuffles; over it the hint drops to a plain shuffled anti-join",
       "pii_redact" -> "narrow per-row regex map — zero exchanges before the output sort",
       "sample_stratified" -> "content-stable md5-bucket filter evaluated in the scan stage — zero shuffles, no RNG",
-      "sim_search_ivf_kmeans" -> "trained IVF: every Lloyd iteration is one corpus scan against a c-row broadcast centroid table plus one (cid, pos) partial-sum exchange whose OUTPUT is c×dim rows; probe ids and the query vector broadcast; the corpus itself never self-joins or windows",
+      "sim_search_ivf_kmeans" -> "trained IVF: every Lloyd iteration is one corpus scan against a c-row broadcast centroid table plus one (cid, pos) partial-sum exchange whose OUTPUT is c×dim rows; the probed cell ids (ranked on the driver over the local centroid table) and the query vector ride the serve as literals — assignment projection → cid filter → TakeOrdered, no join; the corpus itself never self-joins or windows",
       "quality_lm_score" -> "LM scoring: gram explode is narrow codegen; the only exchanges are the charset-bounded gram-count agg and the per-doc avg; the vocabulary joins as a top-K broadcast bounded by .limit(vocabK)",
       "dedup_semantic" -> "SemDeDup: assignment = corpus scan vs the c-row broadcast centroid table (argmax agg shuffles on vec_id); in-cluster pairing inherits the bounded (cid, sub, salt) cell machinery; the dropped-id side rejoins UNHINTED (data-sized — AQE may broadcast at runtime, never a hard hint)",
       "mix_temperature" -> "tempered mixture: one tiny per-lang count agg → |langs|-row keep_frac table broadcast back; the keep decision is a narrow per-row md5 filter — the corpus itself never shuffles",
@@ -46,7 +46,7 @@ object DumpPlans {
       "sim_search_quantized" -> "int8 two-stage ANN: approx stage scans codes and carries only (vec_id, approx) into a TakeOrdered; rescore joins the 40-row candidate list as a broadcast build — zero shuffle exchanges, the corpus is never hash- or range-partitioned",
       "dedup_substring" -> "ExactSubstr (r11 skew-safe): gram explode is narrow codegen (graft_gram_hash, no gram strings materialized); the duplicate test is a TWO-LEVEL count — map-side partial combine collapses hot grams, the (h, sites) partials shuffle small, and ONE left-semi join streams the gram table against the dup-gram set (AQE may broadcast it or skew-split the probe — the r10 hot-gram window buffered a hot gram's whole position list in one unsplittable task); one exchange back on the doc id for the span-merge windows — no gram-hash window, no global suffix sort. r12 VERIFIED at sf0.1 (SubstrPlanProbe, final adaptive plan): the dup-gram set builds as a BroadcastExchange → BroadcastHashJoin LeftSemi — the gram table never shuffles on h for the join; the residual ~1.3–1.4× vs the r10 window form is the second gram explode + the (h, sites) partial-agg exchange, the price of map-side hot-gram collapse, not a join regression",
       "sim_search_pq" -> "PQ ADC (r11): the codes scan runs the codegen'd graft_pq_adc LUT kernel and carries only (vec_id, approx) into a TakeOrdered; the LUT, grouped codebook row, and query are 1-row broadcast attaches; rescore joins the 40-row candidate list broadcast — the codes table and the corpus are never hash- or range-exchanged",
-      "sim_search_ivfpq" -> "IVFADC (r11): the coarse quantizer's nprobe probed-cell ids broadcast-semi-join the (vec_id, cid, codes) index (a cid-partitioned store partition-prunes instead — pqIvfServe), the ADC scan ranks only those cells' codes, rescore joins the candidate ids broadcast; the only data-sized exchange anywhere is the BUILD-time assignment argmax combine, paid once per corpus snapshot",
+      "sim_search_ivfpq" -> "IVFADC (r11): the coarse quantizer's nprobe probed-cell ids, ranked on the driver over the local centroid table, filter the (vec_id, cid, codes) index as `cid IN (...)` literals (over a cid-partitioned store read that filter partition-prunes), the ADC scan ranks only those cells' codes, rescore joins the candidate ids broadcast; the only data-sized exchange anywhere is the BUILD-time assignment argmax combine, paid once per corpus snapshot",
       "training_manifest" -> "end-to-end composition (r11): every stage keeps its standalone plan shape — the LSH keeper election's cached signature/cluster passes, the decontaminate broadcast-gated benchmark grams, the byte-gated purge anti-join, then the token gate and shard assignment as narrow per-row maps over the survivor stream; composing adds NO new shuffle beyond the stages' own",
       "dedup_paragraph" -> "CCNet paragraph dedup (r11): segment explode is a narrow generator; the corpus-wide frequency pass is a map-combined hash agg on the segment hash (a 10⁹×-duplicated boilerplate paragraph collapses to one row per map task BEFORE the shuffle) and the count attach is an AQE-splittable equi-join — the two shapes the gram-hash window could never use; reassembly groups on the doc id, bounded by doc length",
       "dedup_clusters_dist" -> "star-contraction CC (r11): the dumped plan is the final label extraction — per-round plans are localCheckpoint-truncated (each round references its input several times; without truncation the logical plan doubles per round), so the printed tree stays round-count-independent; every round is two edge-set-sized equi-join/agg shuffles, no driver state, no window",
@@ -55,7 +55,7 @@ object DumpPlans {
       "distinct_users_sketch" -> "persisted-sketch distinct (r11, envelope r12): per-day HLL sketches build in one hash agg (datasketches buffers combine map-side), the union agg merges |days| KB-sized sketches — the events table is never re-shuffled; at 100 TB the daily sketches persist and the merge reads NO events. The registry output adds an exact countDistinct harness pass (1-row × 1-row BNLJ attach) so the driver gate sees a three-axis row — verification cost, not the scale path",
       "embedding_health_approx" -> "the 100 TB embedding-QA regime FORCED at sf scale (r12): approx_percentile sketch aggregates — merge-able, bounded buffer, no single-task value multiset — plus a 1-row exact-percentile harness attach (norms_ok ≤5%); both sides are groupless global aggregates, ONE corpus scan each",
       "profile_table_approx" -> "the 100 TB profile regime FORCED at sf scale (r12): approx_count_distinct at rsd 0.023 (precision 12; r15) — single-pass partials, NO Expand (the exact form multiplies map output ×(cols+1)) — joined to the exact-distinct harness on the 4-row col_name table (nd_ok ≤5%)",
-      "sim_search_batch" -> "batched trained-IVF serving (r12): the Q-query batch ranks the c-row broadcast centroid table (Q×c bounded nested loop), the Q·nprobe probe list equi-joins the corpus assignment on cid — ONE corpus pass for the whole batch, each vector fans out only to the queries probing its cell — and per-query top-k runs on the graft_topk bounded heap (map-side eviction, Q·k exchange rows); the batch side is gated at QueryBatchMaxRows",
+      "sim_search_batch" -> "batched trained-IVF serving (r12): the Q-query batch ranks the c-row broadcast centroid table (Q×c bounded nested loop), the Q·nprobe probe list — collected to a local table whose distinct cids also filter the assignment (partition pruning over a cid-partitioned store) — equi-joins the corpus assignment on cid — ONE corpus pass for the whole batch, each vector fans out only to the queries probing its cell — and per-query top-k runs on the graft_topk bounded heap (map-side eviction, Q·k exchange rows); the batch side is gated at QueryBatchMaxRows",
       "small_files_report" -> "storage-layout audit (r12, write shape fixed r13): the controlled write is salted by doc_id % 16 and partitioned by (lang, b) through an EXPLICIT repartition(32, lang, b) — AQE-coalesce-exempt, each salt group wholly in one task owning its directory, so file rolls stay closed-form (ceil(cnt/100) per group) while write tasks scale with lang × buckets, never one per lang — then re-read through input_file_name(); two map-combined hash aggregates — per-file counts leave the map side as one row per (lang, file), the report is langs-sized",
       "compact_files" -> "small-files compaction (r13): lands the 16-bucket small layout, rewrites it through a 4-bucket salt at maxRecordsPerFile=1000 (scan → narrow salt column → one explicit (lang, b) exchange → write — the rewrite the report prices), audits BOTH layouts from disk via input_file_name(); audits are map-combined aggregates joined on the 5-row lang table, rows_ok pins content preservation",
       "migrate_report" -> "multi-table migrate orchestration (r13): MigrateJob.migrateAll drives the single-table pipeline per table — each table keeps the narrow scan → tag → transform → dynamic-partition write shape with its own ledger — under one consolidated error budget; the report itself is a 4-row createDataFrame of ledger-derived totals, exchange-free beyond the per-table migrate jobs",
@@ -69,7 +69,7 @@ object DumpPlans {
       "embedding_dim_stats" -> "per-dimension moments (r13): one narrow posexplode (×dim, linear — never the d² outer-product fanout) into a dim-grouped map-combined hash aggregate; output is d rows, report-sized",
       "anomaly_zscore" -> "z-score outliers (r13): per-type (mu, sd) is one map-combined agg over an enum-cardinality key, BROADCAST back onto the event stream (BHJ) — the corpus never shuffles on event_type (a window form would funnel one task per type); the outlier filter and rounding are narrow",
       "connector_agg_pushdown" -> "DSv2 aggregate pushdown (r13): the pushed branch is a bare projection over the source's ONE pre-aggregated row — no aggregate node, no exchange; the unpushed harness branch keeps its repartition + two-stage aggregate, and the two 1-row results meet in a bounded BNLJ",
-      "ann_index_append" -> "ANN delta maintenance (r13; retrain-realism + drift recording r14): the dumped plan is the post-append serve over the base-trained store — probed-cell partition-pruned store scan × 1-row query attach, drift columns as literals; the lifecycle's other jobs (base-only train, build stats, append, post-health scan) share ONE localCheckpointed corpus read, and the append's delta-proportional contract stays metrics-pinned in AnnIndexSpec",
+      "ann_index_append" -> "ANN delta maintenance (r13; retrain-realism + drift recording r14): the dumped plan is the post-append serve over the base-trained store — probed-cell partition-pruned store scan with the query vector as a literal, drift columns as literals; the lifecycle's other jobs (base-only train, build stats, append, post-health scan) share ONE localCheckpointed corpus read, and the append's delta-proportional contract stays metrics-pinned in AnnIndexSpec",
       "embedding_pca_apply" -> "PCA apply + report (r14): the dumped plan is the 1-row driver-assembled report; the data-path jobs inside it are (a) ONE map-combined k-width moment pass over the projection, where each projected coordinate is a codegen'd graft_dot against a LITERAL basis vector with centering folded into a driver constant — no centered array, no broadcast, nothing exchanged — and (b) two broadcast-query corpus scans into TakeOrdered (original-space top-10, projected-space pool-50) plus a 50-row exact rescore; driver state O(k² + pool)",
       "bpe_train" -> "BPE vocabulary induction (r14): the dumped plan is the 1-row report; the training regime below bpeFitsDriver collects the (word, cnt) table once (byte-gated, the duplicateClusters pattern) and loops in memory; ABOVE the gate each round is one map-combined adjacent-pair hash aggregate over the checkpointed word table + a 1-row argmax collect + a stacked codegen'd graft_bpe_merge projection, lineage re-checkpointed every 8 rounds — regimes spec-pinned output-identical; the corpus is read exactly once either way (the Zipf word-table collapse)",
       "connector_batch_write" -> "DSv2 batched write (r14): the dumped plan is the per-pk summary local relation; the interesting plan is the WRITE job, where the sink's RequiresDistributionAndOrdering declaration makes Spark insert the clustering exchange + sort on pk — WriteSinkSpec pins the resulting contiguity (exactly ceil(rows/batchSize) pk-pure batches, each pk in one task), the per-task rate pacing, and the error-budget abort through BatchWrite.abort",

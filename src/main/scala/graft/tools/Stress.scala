@@ -578,8 +578,9 @@ object Stress {
     val ivfpqXl = bench(
         s"ivfpq ADC top-10 nprobe=$ivfpqNprobe/$ivfpqC partition-pruned ${nVecXl / 1000000}M vectors",
         nVecXl) {
-      graft.ext.LlmOps.pqIvfServe(spark, ivfpqSrc, embXl, ivfpqCents, pqCbs,
-        embXl.filter(col("vec_id") === 0), 10, nprobe = ivfpqNprobe,
+      graft.ext.LlmOps.pqSearchIvfCodes(spark.read.parquet(ivfpqSrc), embXl,
+        ivfpqCents, pqCbs, embXl.filter(col("vec_id") === 0), 10,
+        nprobe = ivfpqNprobe,
         m = pqM, ks = pqKs).collect()
     }
 

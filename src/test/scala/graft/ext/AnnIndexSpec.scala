@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 
 /** Persisted trained-ANN index lifecycle (LlmOps.writeAnnIndex /
-  * annIndexSearch / annIndexHealth / refreshAnnIndex): the store serves
+  * readAnnIndex / annIndexHealth / refreshAnnIndex): the store serves
   * searches identically to in-memory centroids, a fresh index reports
   * fresh, corpus growth past the √N rule trips the size rule,
   * distribution shift trips the drift rule, and refresh retrains only
@@ -61,7 +61,8 @@ class AnnIndexSpec extends SparkSpec {
     LlmOps.writeAnnIndex(corpus, path, cHint = Some(4), iters = 2)
     val q = Seq((999L, Seq(0.9f, 0.1f, 0f, 0f))).toDF("vec_id", "embedding")
       .select($"embedding")
-    val fromStore = LlmOps.annIndexSearch(corpus, path, q, nprobe = 2, k = 5)
+    val fromStore = LlmOps.ivfSearchKmeansWith(corpus,
+        LlmOps.readAnnIndex(spark, path), q, nprobe = 2, k = 5)
       .collect().map(r => (r.getLong(0), r.getDouble(2)))
     val inMem = LlmOps.ivfSearchKmeansWith(corpus,
         LlmOps.kmeansCentroids(corpus, c = 4, iters = 2), q, nprobe = 2, k = 5)
@@ -184,11 +185,27 @@ class AnnIndexSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       LlmOps.annAssignedSearch(spark, path, cents, two, nprobe = 2, k = 5)
     }
-    assert(e.getMessage.contains("annAssignedSearchBatch"), e.getMessage)
+    assert(e.getMessage.contains("ivfSearchBatch"), e.getMessage)
     val none = LlmOps.annAssignedSearch(spark, path, cents, two.limit(0),
       nprobe = 2, k = 5)
     assert(none.columns.toSeq == Seq("vec_id", "cid", "cos"))
     assert(none.collect().isEmpty)
+  }
+
+  test("ivfSearchKmeansWith and pqSearchIvfCodes reject a two-row query, " +
+       "naming the batch operator") {
+    val corpus = baseCorpus(40)
+    val cents = LlmOps.kmeansCentroids(corpus, c = 4, iters = 2)
+    val cbs = LlmOps.pqTrainCodebooks(corpus, m = 4, ks = 4, iters = 2)
+    val two = baseCorpus(2, idOffset = 9000L)
+    val searches = Seq[() => Any](
+      () => LlmOps.ivfSearchKmeansWith(corpus, cents, two, nprobe = 2, k = 5),
+      () => LlmOps.pqSearchIvfCodes(LlmOps.pqEncodeIvf(corpus, cents, cbs),
+        corpus, cents, cbs, two, k = 5))
+    for (search <- searches) {
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("ivfSearchBatch"), e.getMessage)
+    }
   }
 
   test("annAssignedSearch matches ivfSearchKmeansWith for float and double " +
@@ -217,7 +234,7 @@ class AnnIndexSpec extends SparkSpec {
     val cents = Seq((2, Seq(2.0, 0.0, 0.0, 0.0)), (1, Seq(1.0, 0.0, 0.0, 0.0)),
         (0, Seq(0.0, 1.0, 0.0, 0.0)), (3, Seq(0.0, 0.0, 1.0, 0.0)))
       .toDF("cid", "cvec")
-    LlmOps.writeAnnAssignments(corpus, cents, path, exact = true)
+    LlmOps.writeAssignedCells(LlmOps.kmeansAssignTo(corpus, cents), path)
     val q = Seq((0L, Seq(1f, 0.05f, 0f, 0f))).toDF("vec_id", "embedding")
     val served = searchRows(LlmOps.annAssignedSearch(spark, path, cents, q,
       nprobe = 1, k = 5))

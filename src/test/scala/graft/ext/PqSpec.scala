@@ -186,9 +186,15 @@ class PqSpec extends SparkSpec {
         LlmOps.pqEncodeIvf(corpus, cents, cbs, m = 4), corpus, cents, cbs,
         query, K)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val served = LlmOps.pqIvfServe(spark, store, corpus, cents, cbs, query, K)
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    val servedDf = LlmOps.pqSearchIvfCodes(spark.read.parquet(store), corpus,
+      cents, cbs, query, K)
+    val served = servedDf.collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(served == inPlan, s"store serve $served != in-plan $inPlan")
+    // the probed-cell filter reaches the codes store scan as a partition
+    // filter, so unprobed cells are never listed or opened
+    val plan = physical(servedDf).toString
+    assert("PartitionFilters: \\[cid#\\d+ IN \\(".r.findFirstIn(plan).nonEmpty,
+      s"the codes store scan must partition-prune on cid:\n$plan")
   }
 
   test("plans: the corpus is never exchanged — encode and ADC scan stay narrow") {

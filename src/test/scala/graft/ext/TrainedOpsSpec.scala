@@ -311,7 +311,8 @@ class TrainedOpsSpec extends SparkSpec {
       (101L, Seq(0.9f, 0.1f, 0f, 0f)),
       (102L, Seq(0.1f, 0.9f, 0f, 0f)),
       (103L, Seq(0.7f, 0.7f, 0f, 0f))).toDF("vec_id", "embedding")
-    val batch = LlmOps.ivfSearchBatch(corpus, queries, cents, nprobe = 1, k = 5)
+    val batch = LlmOps.ivfSearchBatch(LlmOps.kmeansAssignAuto(corpus, cents),
+        queries, cents, nprobe = 1, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
     assert(batch.keySet == Set(101L, 102L, 103L))
@@ -332,7 +333,8 @@ class TrainedOpsSpec extends SparkSpec {
       .select(col("id").as("vec_id"),
         org.apache.spark.sql.functions.array(lit(1f)).as("embedding"))
     val e = intercept[IllegalArgumentException] {
-      LlmOps.ivfSearchBatch(corpus, big, cents, nprobe = 1, k = 5)
+      LlmOps.ivfSearchBatch(LlmOps.kmeansAssignAuto(corpus, cents), big, cents,
+        nprobe = 1, k = 5)
     }
     assert(e.getMessage.contains("QueryBatchMaxRows"))
   }

@@ -15,6 +15,19 @@ class FailWhenArmedTransformer extends MigrateJob.Transformer {
     else df
 }
 
+/** Latches that make two migrateAll tables overlap deterministically: the
+  * good table's task holds its write job open until the bad table's own
+  * cancellation interrupts that table's blocked task.
+  */
+object WatcherOverlap {
+  @volatile var goodRunning = new java.util.concurrent.CountDownLatch(1)
+  @volatile var badCancelled = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    goodRunning = new java.util.concurrent.CountDownLatch(1)
+    badCancelled = new java.util.concurrent.CountDownLatch(1)
+  }
+}
+
 /** Multi-table orchestration (docs/04-cdm-approach.md:770-822: the
   * production recipe loops CDM over tables with per-table configs and one
   * consolidated report) — behavior pinned here; the oracle key
@@ -113,5 +126,52 @@ class MigrateAllSpec extends SparkSpec {
     assert(byName("orders") == "aborted",
       "tables after the global-budget breach must not run")
     assert(out.find(_.table_name == "orders").get.error.get.contains("global error budget"))
+  }
+
+  test("budget watchers are isolated per table: one table's mid-wave " +
+       "breach in the pool does not cancel a sibling whose wave shares " +
+       "its bucket") {
+    import java.util.concurrent.TimeUnit.SECONDS
+    WatcherOverlap.reset()
+    // good: one task that signals it is running, then holds its write job
+    // open until the bad table's cancellation has landed
+    val goodRow = udf { (id: Long) =>
+      WatcherOverlap.goodRunning.countDown()
+      WatcherOverlap.badCancelled.await(60, SECONDS)
+      s"good-$id"
+    }
+    // bad: two tasks flag one oversize row each once the good table is
+    // running (2 > errorLimit 1, so only the cross-task watcher trips);
+    // a third task blocks until its job is cancelled
+    val badRow = udf { (id: Long) =>
+      if (id < 2) {
+        WatcherOverlap.goodRunning.await(60, SECONDS)
+        "x" * 200
+      } else
+        try { Thread.sleep(60000); "late" }
+        finally WatcherOverlap.badCancelled.countDown()
+    }
+    val base = Files.createTempDirectory("graft-mall-watch").toString
+    def table(name: String, rows: Int, payload: org.apache.spark.sql.Column,
+              maxRowBytes: Long) =
+      MigrateJob.TableMigration(name,
+        DataFrameSource(spark.range(0, rows, 1, rows)
+          .select(col("id").as("pk"), payload.as("payload"))),
+        ParquetBucketSink(s"$base/$name"),
+        // one bucket: both tables' single wave starts at bucket 0
+        MigrateJob.Config(pkCols = Seq("pk"), tokenBuckets = 1,
+          guardrailMaxRowBytes = Some(maxRowBytes), errorLimit = 1L))
+    val out = MigrateJob.migrateAll(spark, Seq(
+      table("good", 1, goodRow(col("id")), 1L << 20),
+      table("bad", 3, badRow(col("id")), 100L)))
+    val byName = out.map(o => o.table_name -> o).toMap
+    assert(WatcherOverlap.goodRunning.getCount == 0,
+      "fixture: the good table's write must have been running")
+    assert(byName("bad").status == "failed")
+    assert(byName("bad").error.exists(_.contains("error budget exceeded")),
+      byName("bad").toString)
+    assert(byName("good").status == "done",
+      s"the sibling's breach cancelled the good table: ${byName("good")}")
+    assert(byName("good").migrated == 1L)
   }
 }

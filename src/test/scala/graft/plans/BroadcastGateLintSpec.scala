@@ -57,8 +57,6 @@ class BroadcastGateLintSpec extends AnyFunSuite {
       "JoinQueries J5 demo: caller-designated small dimension — the operator's own semantic"),
     ("crossJoin(broadcast(withCnorm(cents)))",
       "LlmOps.assignCells: the k-means centroid table — ≤ c rows by construction"),
-    ("broadcast(probed.select(col(\"cid\")))",
-      "LlmOps.ivfSearchKmeans: probed trained-cell ids — ≤ nprobe rows by .limit(nprobe)"),
     ("g.join(broadcast(vocab), Seq(\"h\"), \"left\")",
       "LlmOps.lmScore: the LM vocabulary — ≤ vocabK rows by .limit(vocabK)"),
     ("merged.crossJoin(broadcast(exact))",

@@ -374,7 +374,7 @@ class PlanAuditSpec extends SparkSpec {
     // and lmScore's 1-row total-gram aggregate
     val bnljOk = Set("sim_search_topk", "sim_search_ivf", "dedup_embedding_cos",
       "sim_knn_join", "count_star", "dual_write", "validate_sample",
-      "ivf_train_kmeans", "sim_search_ivf_kmeans", "quality_lm_score",
+      "ivf_train_kmeans", "quality_lm_score",
       // c-row centroid assignment cross join + capped_cells scalar attach
       "dedup_semantic",
       // 1-row query-vector cross joins (approx scan + rescore stages)
@@ -401,10 +401,6 @@ class PlanAuditSpec extends SparkSpec {
       // 1-row approx-health summary × 1-row exact-percentile harness
       // (LlmQueries: ap.crossJoin(broadcast(ex)) — both groupless)
       "embedding_health_approx",
-      // Q×c centroid ranking (LlmOps.ivfSearchBatch: the query batch —
-      // gated at QueryBatchMaxRows — against the c-row centroid table;
-      // both sides bounded, the corpus side joins by equi-key only)
-      "sim_search_batch",
       // 1-row total-label-count attach (LlmOps.clusterSizeStats:
       // crossJoin(broadcast(tot)) — the lmScore pattern; histogram and
       // total are both report-sized)
