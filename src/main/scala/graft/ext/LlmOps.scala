@@ -643,13 +643,6 @@ object LlmOps {
       .withColumn("wins", expr("graft_sliding_min(hs, 4)"))
       .withColumn("fps", array_distinct(col("wins")))
 
-  /** Connected components over candidate duplicate pairs: every doc gets
-    * `cluster_id` = the smallest doc id reachable through pair edges (its
-    * own id if unpaired). Label propagation to a fixpoint — each round is
-    * one join + min-aggregate (the standard large-scale CC shape; rounds ≈
-    * log of the largest cluster diameter, checked against a hard cap).
-    * Downstream dedup keeps one row per cluster_id.
-    */
   /** Driver heap cost model for the union-find gate: a collected edge is
     * ~16 payload bytes in the edge array, up to two boxed entries in the
     * union-find parent map (~64 bytes each: boxed key + value + HashMap
@@ -666,14 +659,20 @@ object LlmOps {
   def fitsDriverGate(nEdges: Long, budgetBytes: Long): Boolean =
     nEdges <= budgetBytes / BytesPerDriverEdge
 
+  /** Connected components over candidate duplicate pairs: every doc gets
+    * `cluster_id` = the smallest doc id reachable through pair edges (its
+    * own id if unpaired). Downstream dedup keeps one row per cluster_id.
+    *
+    * Candidate pairs are orders of magnitude smaller than the corpus by
+    * construction (they're the near-duplicates). Below the
+    * [[fitsDriverGate]] byte budget, exact union-find on the driver + a
+    * broadcast label join beats a multi-round distributed fixpoint (each
+    * round is several scheduled jobs); above it, the edges stay
+    * distributed and [[distributedClustersStar]] contracts them in
+    * O(log² n) rounds on any topology. Ids must be numeric on both paths.
+    */
   def duplicateClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
-                        maxIters: Int = 20,
                         driverEdgeBudgetBytes: Long = 512L << 20): DataFrame = {
-    // Candidate pairs are orders of magnitude smaller than the corpus by
-    // construction (they're the near-duplicates). Below the gate, exact
-    // union-find on the driver + a broadcast label join beats a multi-round
-    // distributed fixpoint (each round is several scheduled jobs); above
-    // it, fall through to the label-propagation loop.
     if (fitsDriverGate(pairs.count(), driverEdgeBudgetBytes)) {
       val edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -698,7 +697,7 @@ object LlmOps {
         .join(broadcast(labDf), Seq(idCol), "left_outer")
         .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
     }
-    distributedClusters(ids, idCol, pairs, maxIters)
+    distributedClustersStar(ids, idCol, pairs)
   }
 
   /** The dedup end product with coverage accounting: one canonical (min-id)
@@ -745,46 +744,6 @@ object LlmOps {
       .select((-col("m.nid")).as(idCol))
     docs.join(keepers, Seq(idCol), "left_semi")
       .withColumn("capped_lsh_buckets", lit(capped))
-  }
-
-  /** Distributed fallback: label propagation to a fixpoint. */
-  def distributedClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
-                          maxIters: Int = 20): DataFrame = {
-    val edges = pairs.select(col("a").as("x"), col("b").as("y"))
-      .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))
-      .persist()
-    // only docs that appear in a pair can change labels — propagate over
-    // that (typically small) frontier and re-attach the untouched majority
-    // at the end. Convergence check: labels only ever decrease (least of
-    // own and neighbor minimum), so the label sum strictly decreases until
-    // the fixpoint — one cheap agg per round instead of a join-diff.
-    var lab = edges.select(col("x").as(idCol)).distinct()
-      .withColumn("cluster_id", col(idCol)).persist()
-    def labSum(): Long =
-      lab.agg(sum(col("cluster_id"))).collect().head.getLong(0)
-    var prev = labSum()
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val viaNeighbor = edges
-        .join(lab.select(col(idCol).as("y"), col("cluster_id").as("nl")), "y")
-        .groupBy(col("x").as(idCol)).agg(min(col("nl")).as("nl"))
-      val next = lab.join(viaNeighbor, Seq(idCol), "left_outer")
-        .select(col(idCol),
-          least(col("cluster_id"), coalesce(col("nl"), col("cluster_id"))).as("cluster_id"))
-        .persist()
-      val old = lab
-      lab = next
-      val cur = labSum()  // materializes next BEFORE dropping its parent cache
-      old.unpersist()
-      converged = cur == prev
-      prev = cur
-      iters += 1
-    }
-    require(converged, s"label propagation did not converge in $maxIters rounds")
-    ids.select(col(idCol)).distinct()
-      .join(lab, Seq(idCol), "left_outer")
-      .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
   }
 
   /** Within-block hamming pairs via GROUPING on the block key (`blk`) —
@@ -1118,28 +1077,6 @@ object LlmOps {
     clusters
   }
 
-  /** Corpus-size crossover for [[simhashNearDups]]: the 32-bit form's
-    * 11-bit blocks keep expected bucket size N/2^11 — fine while that stays
-    * ≈64 members (N ≤ 2^11·64 = 131072), past which the in-bucket pair term
-    * grows quadratically and the 20-bit-block / 64-lane form (expected
-    * bucket N/2^20) takes over. Derived from the bucket-size rule the two
-    * registry variants document; both branches are oracle-green.
-    */
-  val SimhashCrossoverDocs = 131072L
-
-  /** Radius-2 simhash near-dups with the form picked by corpus size at
-    * [[SimhashCrossoverDocs]]. `corpusSizeHint` skips the count pass when
-    * the caller already knows N (a catalog row count, a previous stage's
-    * observe()); without it one count job runs first. NOTE the two branches
-    * hash at different widths (32 vs 64 lanes), so pair sets near the
-    * radius boundary can differ marginally between them — the dial trades
-    * granularity for bucket control, exactly like the registry's two keys.
-    */
-  def simhashNearDups(docs: DataFrame, corpusSizeHint: Option[Long] = None): DataFrame = {
-    val n = corpusSizeHint.getOrElse(docs.count())
-    if (n <= SimhashCrossoverDocs) simhashNearDups32(docs) else simhashNearDups64(docs)
-  }
-
   /** Measured packing crossover (STRESS.md PackProbe table: single-window
     * 1.8/6.3/24.4 s vs two-level 10.9/11.0/15.8 s at 2/10/40M docs in ONE
     * language): the single-task-per-lang window is FASTER below ~10M docs
@@ -1172,21 +1109,13 @@ object LlmOps {
     packSequences(docs, packShardWidth(maxPerLang))
   }
 
-  /** IVF index build: per-bucket (cluster label) element-wise centroid.
-    * Sums go through DECIMAL so centroids are exact and partitioning-
-    * independent (float summation order would make the index
-    * nondeterministic); collect_list is sorted by position before assembly.
-    * One shuffle of (label, pos) partial sums — the index build scans the
-    * corpus once.
+  /** IVF index build: per-bucket (cluster label) element-wise centroid —
+    * the [[decimalVecMean]] explode form (the label count is unbounded
+    * here), exact and partitioning-independent, so the index is
+    * deterministic. The index build scans the corpus once.
     */
-  def ivfCentroids(emb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    emb.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg((sum(col("v").cast(DecimalType(20, 10))).cast("double") / count(lit(1))).as("cval"))
-      .groupBy(col("label"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, cval))), x -> x.cval)").as("cvec"))
-  }
+  def ivfCentroids(emb: DataFrame): DataFrame =
+    decimalVecMean(emb, Seq("label"), "embedding")
 
   /** IVF two-stage search: rank centroids against the (broadcast) query,
     * probe the best `nprobe` cells, exact-search only inside them. The
@@ -2015,7 +1944,8 @@ object LlmOps {
     val emb = kmeansInput(emb0)
     var cents = toLocalRelation(kmeansSeed(emb, c))
     for (_ <- 1 to iters)
-      cents = toLocalRelation(updateCentroids(assignCells(emb, cents), c))
+      cents = toLocalRelation(
+        decimalVecMean(assignCells(emb, cents), Seq("cid"), "embedding", c))
     cents
   }
 
@@ -2282,26 +2212,31 @@ object LlmOps {
     */
   private[graft] val VecMeanMaxGroups = 64
 
-  /** One Lloyd update: per-cell element-wise mean through DECIMAL partial
-    * sums (exact, partitioning-independent — the [[ivfCentroids]] rule).
-    * `nGroups` = the caller's cell/codebook-entry bound, picking the
-    * one-exchange graft_vec_dmean form below [[VecMeanMaxGroups]] (r16)
-    * and the two-exchange explode form above it; both compute the
-    * identical value (dmean replicates the DECIMAL(20,10) cast, the
+  /** Element-wise vector mean of `vec` per `keys` group through DECIMAL
+    * partial sums: exact and partitioning-independent (float summation
+    * order would make every trained index nondeterministic). Output is
+    * `keys` + `cvec`. `nGroups` = the caller's group-count bound, picking
+    * the one-exchange graft_vec_dmean form at or below [[VecMeanMaxGroups]]
+    * (r16) and the two-exchange posexplode form above it; both compute
+    * the identical value (dmean replicates the DECIMAL(20,10) cast, the
     * exact sum, the per-position count and the double division bit for
-    * bit — parity spec-pinned).
+    * bit — parity spec-pinned). A group with no element (every vector
+    * empty or null) yields no row on either form, exactly as an empty
+    * k-means cell or a dead PQ code disappears.
     */
-  private[graft] def updateCentroids(assigned: DataFrame,
-                                     nGroups: Int = Int.MaxValue): DataFrame = {
+  private[graft] def decimalVecMean(df: DataFrame, keys: Seq[String], vec: String,
+                                    nGroups: Int = Int.MaxValue): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
+    val k = keys.map(col)
     if (nGroups <= VecMeanMaxGroups)
-      ensureFns(assigned).groupBy(col("cid"))
-        .agg(call_function("graft_vec_dmean", col("embedding")).as("cvec"))
+      ensureFns(df).groupBy(k: _*)
+        .agg(call_function("graft_vec_dmean", col(vec)).as("cvec"))
+        .filter(col("cvec").isNotNull)
     else
-      assigned.select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy(col("cid"), col("pos"))
+      df.select(k :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+        .groupBy(k :+ col("pos"): _*)
         .agg((sum(col("v").cast(DecimalType(20, 10))).cast("double") / count(lit(1))).as("cval"))
-        .groupBy(col("cid"))
+        .groupBy(k: _*)
         .agg(expr("transform(array_sort(collect_list(struct(pos, cval))), x -> x.cval)").as("cvec"))
   }
 
@@ -2454,17 +2389,6 @@ object LlmOps {
     require(est <= CentroidBudgetBytes,
       s"centroid table over CentroidBudgetBytes: c=$c dim=$dim est=$est B " +
         s"> $CentroidBudgetBytes B — shard the index or raise the budget")
-  }
-
-  /** [[ivfSearchKmeans]] with c chosen by [[kmeansAutoC]]. `corpusSizeHint`
-    * skips the count pass when N is already known (catalog stats, a
-    * previous stage's observe()).
-    */
-  def ivfSearchKmeansAuto(emb0: DataFrame, query: DataFrame, nprobe: Int,
-                          k: Int, iters: Int = 2, cHint: Option[Int] = None,
-                          corpusSizeHint: Option[Long] = None): DataFrame = {
-    val n = corpusSizeHint.getOrElse(emb0.count())
-    ivfSearchKmeans(emb0, query, kmeansAutoC(n, cHint), iters, nprobe, k)
   }
 
   /** IVF search over TRAINED cells ([[kmeansCentroids]]), same two-stage
@@ -2837,15 +2761,6 @@ object LlmOps {
                         query: DataFrame, nprobe: Int, k: Int): DataFrame =
     ivfSearchCells(spark.read.parquet(assignPath), cents, query, nprobe, k)
 
-  /** Mean assignment cosine of `emb0` against a centroid table — the
-    * index-quality scalar: drops when the corpus distribution drifts away
-    * from the trained cells. round6 at both levels so the value is
-    * engine-portable and partitioning-independent.
-    */
-  private[graft] def meanAssignCos(emb0: DataFrame, cents: DataFrame): Double =
-    kmeansAssignAuto(emb0, cents)
-      .agg(round6(avg(col("ccos"))).as("m")).head().getDouble(0)
-
   /** Health of the stored index against the CURRENT corpus. Two staleness
     * rules, both against the build-time baseline:
     *
@@ -2939,13 +2854,15 @@ object LlmOps {
     // the NARROW per-row walk against the driver-grouped codebook row —
     // no m-way subvector explode, no m·ks join fan-out, and no
     // sort-based max(struct) dragging the sv payload through an
-    // exchange; the only shuffles per round are pqUpdate's two bounded
-    // aggregates. Values are bit-identical: the walk computes pqAssign's
-    // exact argmin (same graft_round'd reduced-L2, first-minimum =
-    // smallest code), and a collect round-trips exact doubles.
+    // exchange; the only shuffles per round are the decimalVecMean
+    // update's bounded aggregates. Values are bit-identical: the walk
+    // computes pqAssign's exact argmin (same graft_round'd reduced-L2,
+    // first-minimum = smallest code), and a collect round-trips exact
+    // doubles.
     var cbs = toLocalRelation(pqSeed(emb0, m, ks))
     for (_ <- 1 to iters)
-      cbs = toLocalRelation(pqUpdate(pqAssignNarrow(emb0, cbs, m), m * ks))
+      cbs = toLocalRelation(
+        decimalVecMean(pqAssignNarrow(emb0, cbs, m), Seq("sub", "code"), "sv", m * ks))
     cbs
   }
 
@@ -3014,32 +2931,6 @@ object LlmOps {
         col("sv").as("s0"))).as("m"))
       .select(col("vec_id"), col("sub"), (-col("m.nc")).as("code"),
         col("m.s0").as("sv"))
-
-  /** One Lloyd update per (sub, code): element-wise mean through DECIMAL
-    * partial sums (exact, partitioning-independent — the [[ivfCentroids]]
-    * rule). Codes that lost every member disappear, exactly as empty
-    * k-means cells do.
-    */
-  /** `nGroups` = m·ks from the trainer — the same
-    * [[VecMeanMaxGroups]] gate (and the same value parity) as
-    * [[updateCentroids]].
-    */
-  private def pqUpdate(assigned: DataFrame,
-                       nGroups: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    if (nGroups <= VecMeanMaxGroups)
-      ensureFns(assigned).groupBy(col("sub"), col("code"))
-        .agg(call_function("graft_vec_dmean", col("sv")).as("cvec"))
-    else
-      assigned.select(col("sub"), col("code"),
-          posexplode(col("sv")).as(Seq("pos", "v")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg((sum(col("v").cast(DecimalType(20, 10))).cast("double") /
-          count(lit(1))).as("cval"))
-        .groupBy(col("sub"), col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, cval))), x -> x.cval)")
-          .as("cvec"))
-  }
 
   /** The m·ks codebook rows grouped into ONE row — `cb` = array (by sub)
     * of array (by code, ascending) of (code, cvec) structs — the bounded
@@ -3353,25 +3244,6 @@ object LlmOps {
 
   // ---- char-n-gram LM quality scoring (the CCNet-style LM filter) ----
 
-  /** Per-document language-model quality score: average log10 probability
-    * of the document's char trigrams under the corpus's own trigram
-    * distribution, with the model truncated to the `vocabK` most frequent
-    * grams (ties broken on the gram hash) and out-of-vocabulary grams
-    * floored at half a count — the classic quality signal a CCNet-style
-    * filter thresholds on (boilerplate scores high, alphabet soup low).
-    *
-    * Scale shape: gram extraction is the narrow codegen'd graft_gram_hash
-    * pass (no gram strings materialized). The grouped count table is
-    * charset³-bounded on natural text but corpus-sized on adversarial
-    * input (every trigram distinct) — which is why it is only ever
-    * SHUFFLED (hash agg) and TakeOrdered'd, never broadcast or collected;
-    * the scoring join broadcasts only the top-`vocabK` rows (bounded by
-    * construction), and the per-doc average shuffles on doc_id. No
-    * corpus-sized build side exists at any scale, under any data.
-    * The per-doc avg sums doubles in partition order —
-    * round6 buffers the reordering noise (≤1e-11 at 10⁴ grams/doc, five
-    * orders under the rounding step).
-    */
   /** Corpus-size crossover for [[lmScore]]'s two value-identical forms.
     * The gram stream feeds BOTH the vocab count-agg and the scoring join;
     * the question is whether to explode it twice (uncached) or once into
@@ -3396,8 +3268,27 @@ object LlmOps {
     */
   val LmCacheCrossoverBytes = 4L * 1024 * 1024 * 1024
 
-  /** Per-document char-trigram LM score with the evaluation form picked
-    * by corpus size at [[LmCacheCrossoverDocs]] — `corpusSizeHint` skips
+  /** Per-document language-model quality score: average log10 probability
+    * of the document's char trigrams under the corpus's own trigram
+    * distribution, with the model truncated to the `vocabK` most frequent
+    * grams (ties broken on the gram hash) and out-of-vocabulary grams
+    * floored at half a count — the classic quality signal a CCNet-style
+    * filter thresholds on (boilerplate scores high, alphabet soup low).
+    *
+    * Scale shape: gram extraction is the narrow codegen'd graft_gram_hash
+    * pass (no gram strings materialized). The grouped count table is
+    * charset³-bounded on natural text but corpus-sized on adversarial
+    * input (every trigram distinct) — which is why it is only ever
+    * SHUFFLED (hash agg) and TakeOrdered'd, never broadcast or collected;
+    * the scoring join broadcasts only the top-`vocabK` rows (bounded by
+    * construction), and the per-doc average shuffles on doc_id. No
+    * corpus-sized build side exists at any scale, under any data.
+    * The per-doc avg sums doubles in partition order —
+    * round6 buffers the reordering noise (≤1e-11 at 10⁴ grams/doc, five
+    * orders under the rounding step).
+    *
+    * The evaluation form ([[lmScoreBy]]'s `cached`) is picked by corpus
+    * size at [[LmCacheCrossoverDocs]] — `corpusSizeHint` skips
     * any size estimation when the caller already knows N. Without a
     * hint the selector reads the optimized plan's STATISTICS (rowCount
     * when known, else sizeInBytes against [[LmCacheCrossoverBytes]]) —
@@ -3417,59 +3308,51 @@ object LlmOps {
         statsSaySmall(docs, LmCacheCrossoverDocs, LmCacheCrossoverBytes)
           .getOrElse(true) // unknown → no materialization
     }
-    if (small) lmScoreTwoExplode(docs, vocabK)
-    else lmScoreCached(docs, vocabK)
+    lmScoreBy(docs, Seq("doc_id"), None, vocabK, cached = !small)
   }
 
-  /** The uncached form: the gram stream is exploded twice. Wins below the
-    * crossover, where the codegen'd explode is cheap relative to cache
-    * materialization.
+  /** The char-trigram LM scorer behind [[lmScore]] and [[ccnetBuckets]]:
+    * one codegen'd gram explode (`keys` carried along) feeds the vocab
+    * count-agg — over the rows `ref` selects, all rows without it — and
+    * the scoring join; the model is the top-`vocabK` grams (ties on the
+    * gram hash), out-of-vocabulary grams floored at half a count, and the
+    * gram mass comes from a narrow length sum (graft_gram_hash emits
+    * exactly max(numChars-2, 0) trigrams per doc — the winnow length
+    * relationship, spec-pinned), so no gram-table pass is needed for it.
+    * Output: `keys` + n_grams + avg_logp, one row per key tuple.
+    *
+    * `cached` picks the physical form, both value-identical (parity
+    * spec-pinned): false explodes the gram stream twice (cheap below the
+    * [[LmCacheCrossoverDocs]] crossover); true persists it once and
+    * returns a PERSISTED score frame, materialized before the gram cache
+    * is released — callers may unpersist it once consumed.
     */
-  private[graft] def lmScoreTwoExplode(docs: DataFrame, vocabK: Int = 4096): DataFrame = {
-    val g = lmGrams(docs)
-    val counts = g.groupBy(col("h")).agg(count(lit(1)).as("c"))
-    // total grams WITHOUT a gram-table pass: graft_gram_hash emits
-    // exactly max(numChars-2, 0) trigrams per doc (the winnow length
-    // relationship, spec-pinned), so the total is a narrow length sum
-    val tot = ensureFns(docs).agg(
-      sum(greatest(length(col("text")) - 2, lit(0))).cast("double").as("n"))
-    val vocab = counts.orderBy(col("c").desc, col("h")).limit(vocabK)
-    g.join(broadcast(vocab), Seq("h"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col("doc_id"),
-        coalesce(log10(col("c").cast("double") / col("n")),
-          log10(lit(0.5) / col("n"))).as("logp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"), round6(avg(col("logp"))).as("avg_logp"))
-  }
-
-  private def lmGrams(docs: DataFrame): DataFrame =
+  private[graft] def lmScoreBy(docs: DataFrame, keys: Seq[String], ref: Option[Column],
+                               vocabK: Int, cached: Boolean): DataFrame = {
     // spreadSmall (r15): md5-per-trigram is the LM-score kernel cost
-    ensureFns(spreadSmall(docs))
-      .select(col("doc_id"), explode(expr("graft_gram_hash(text, 3, ':lm', 15)")).as("h"))
-
-  /** The persisted-gram-table form: one explode, cached. Wins above the
-    * crossover, where md5-per-gram CPU dominates and is paid once. The
-    * returned frame is persisted (scores only — 3 narrow columns/doc);
-    * callers may unpersist once consumed.
-    */
-  private[graft] def lmScoreCached(docs: DataFrame, vocabK: Int = 4096): DataFrame = {
-    val g = lmGrams(docs).persist()
-    val counts = g.groupBy(col("h")).agg(count(lit(1)).as("c"))
-    val tot = ensureFns(docs).agg(
+    val g0 = ensureFns(spreadSmall(docs)).select(
+      keys.map(col) ++ ref.map(_.as("is_ref")) :+
+        explode(expr("graft_gram_hash(text, 3, ':lm', 15)")).as("h"): _*)
+    val g = if (cached) g0.persist() else g0
+    val counts = ref.fold(g)(_ => g.filter(col("is_ref")))
+      .groupBy(col("h")).agg(count(lit(1)).as("c"))
+    val tot = ensureFns(ref.fold(docs)(r => docs.filter(r))).agg(
       sum(greatest(length(col("text")) - 2, lit(0))).cast("double").as("n"))
     val vocab = counts.orderBy(col("c").desc, col("h")).limit(vocabK)
-    val out = g.join(broadcast(vocab), Seq("h"), "left")
+    val scored = g.join(broadcast(vocab), Seq("h"), "left")
       .crossJoin(broadcast(tot))
-      .select(col("doc_id"),
+      .select(keys.map(col) :+
         coalesce(log10(col("c").cast("double") / col("n")),
-          log10(lit(0.5) / col("n"))).as("logp"))
-      .groupBy(col("doc_id"))
+          log10(lit(0.5) / col("n"))).as("logp"): _*)
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_grams"), round6(avg(col("logp"))).as("avg_logp"))
-      .persist()
-    out.count() // materialize BEFORE dropping the gram cache it derives from
-    g.unpersist()
-    out
+    if (!cached) scored
+    else {
+      val out = scored.persist()
+      out.count() // materialize BEFORE dropping the gram cache it derives from
+      g.unpersist()
+      out
+    }
   }
 
   /** Quality-weighted sampling (the DCLM/FineWeb-style soft filter): each
@@ -3835,11 +3718,11 @@ object LlmOps {
   /** Distributed connected components by alternating LARGE-STAR /
     * SMALL-STAR rounds (Kiveris et al., "Connected Components in
     * MapReduce and Beyond", SoCC 2014 §3) — the fully-distributed tier of
-    * the [[duplicateClusters]] family. No driver state AT ALL: where the
-    * union-find path collects the (byte-gated) edge list and
-    * [[distributedClusters]]' label propagation needs one round per unit
-    * of graph DIAMETER (a 10⁶-doc near-dup chain = 10⁶ rounds — chains
-    * are exactly what boilerplate-mutation near-dups produce), star
+    * the [[duplicateClusters]] family, which runs it above its driver
+    * gate. No driver state AT ALL: where the union-find path collects the
+    * (byte-gated) edge list and label propagation would need one round
+    * per unit of graph DIAMETER (a 10⁶-doc near-dup chain = 10⁶ rounds —
+    * chains are exactly what boilerplate-mutation near-dups produce), star
     * contraction converges in O(log² n) rounds on ANY topology because
     * each round halves component height by pointer doubling.
     *
@@ -5216,44 +5099,27 @@ object LlmOps {
     * `<= t_hi` → middle, else head (higher avg log-prob = lower
     * perplexity = head).
     *
-    * Scale shape: the gram stream is one codegen'd explode feeding the
-    * reference count-agg and the scoring join (both map-combined); the
-    * vocab (top `vocabK` reference grams) and the 1-row reference-mass
-    * total broadcast under trivial byte gates; the per-doc avg shuffles
-    * once on doc_id. Above [[LmCacheCrossoverDocs]] the gram stream
-    * persists once instead of exploding twice (the measured [[lmScore]]
-    * crossover). The per-lang threshold agg holds one lang's scores in
-    * one buffer — exact terciles are a gate-tier contract; at corpus
-    * scale swap the threshold agg for percentile_approx (the bucket
-    * boundary then carries sketch error, which CCNet tolerates — it is
-    * itself a heuristic split; everything downstream of the thresholds
-    * is unchanged).
+    * Scale shape: the [[lmScoreBy]] scorer with the reference filter —
+    * the gram stream is one codegen'd explode feeding the reference
+    * count-agg and the scoring join (both map-combined); the vocab (top
+    * `vocabK` reference grams) and the 1-row reference-mass total
+    * broadcast under trivial byte gates; the per-doc avg shuffles once on
+    * doc_id. Above [[LmCacheCrossoverDocs]] the gram stream persists once
+    * instead of exploding twice (the measured [[lmScore]] crossover). The
+    * per-lang threshold agg holds one lang's scores in one buffer — exact
+    * terciles are a gate-tier contract; at corpus scale swap the
+    * threshold agg for percentile_approx (the bucket boundary then
+    * carries sketch error, which CCNet tolerates — it is itself a
+    * heuristic split; everything downstream of the thresholds is
+    * unchanged).
     */
   def ccnetBuckets(docs: DataFrame, refSources: Seq[String],
                    vocabK: Int = 1024): DataFrame = {
     require(refSources.nonEmpty, "ccnetBuckets needs a reference domain")
     val isRef = col("source").isin(refSources.map(x => x: Any): _*)
-    // spreadSmall (r15): md5-per-trigram kernel, the lmGrams rationale
-    val g0 = ensureFns(spreadSmall(docs)).select(col("doc_id"), col("lang"),
-      isRef.as("is_ref"),
-      explode(expr("graft_gram_hash(text, 3, ':lm', 15)")).as("h"))
     val big = !statsSaySmall(docs, LmCacheCrossoverDocs, LmCacheCrossoverBytes)
       .getOrElse(true)
-    val g = if (big) g0.persist() else g0
-    val refCnt = g.filter(col("is_ref")).groupBy(col("h"))
-      .agg(count(lit(1)).as("c"))
-    // reference gram mass without a gram-table pass: graft_gram_hash emits
-    // exactly max(numChars-2, 0) trigrams per doc (the lmScore identity)
-    val nRef = ensureFns(docs).filter(isRef)
-      .agg(sum(greatest(length(col("text")) - 2, lit(0))).cast("double").as("n"))
-    val vocab = refCnt.orderBy(col("c").desc, col("h")).limit(vocabK)
-    val scored = g.join(broadcast(vocab), Seq("h"), "left")
-      .crossJoin(broadcast(nRef))
-      .select(col("doc_id"), col("lang"),
-        coalesce(log10(col("c").cast("double") / col("n")),
-          log10(lit(0.5) / col("n"))).as("logp"))
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_grams"), round6(avg(col("logp"))).as("avg_logp"))
+    val scored = lmScoreBy(docs, Seq("doc_id", "lang"), Some(isRef), vocabK, cached = big)
     val thr = scored.groupBy(col("lang"))
       .agg(sort_array(collect_list(col("avg_logp"))).as("arr"))
       .select(col("lang"),
@@ -5265,7 +5131,7 @@ object LlmOps {
           .when(col("avg_logp") <= col("t_hi"), lit("middle"))
           .otherwise(lit("head")).as("ppl_bucket"))
       .orderBy(col("doc_id"))
-    if (big) { val m = out.persist(); m.count(); g.unpersist(); m } else out
+    if (big) { val m = out.persist(); m.count(); scored.unpersist(); m } else out
   }
 
   /** Cluster-balanced diversity sampling (the coverage-sampling half of

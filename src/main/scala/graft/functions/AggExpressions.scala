@@ -608,7 +608,7 @@ final class VecMeanBuffer {
   *     (10, HALF_UP), null on precision overflow (> 20 digits);
   *   - float elements widen to double first (Cast's float path);
   *   - decimal addition is exact and order-independent, so the result is
-  *     partitioning-independent (the ivfCentroids rule);
+  *     partitioning-independent (the LlmOps.decimalVecMean rule);
   *   - per-position counts track ragged vectors exactly like the explode
   *     form (a vector contributes to count at every position it HAS,
   *     null elements included; the sum skips nulls), so an all-null

@@ -265,22 +265,35 @@ object MigrateJob {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  /** Latest ledger status per bucket (last entry wins, so a bucket that
-    * failed and was later re-driven to `done` reads as done).
+  /** Latest ledger entry per bucket — (status, rows, skipped) — parsed
+    * once for [[bucketStatus]] and [[ledgerTotals]]. Last entry wins, so a
+    * bucket that failed and was later re-driven to `done` reads as done.
     */
-  def bucketStatus(ledgerPath: String): Map[Int, String] =
+  private def latestEntries(
+      ledgerPath: String): Map[Int, (String, Option[Long], Option[Long])] =
     if (!Files.exists(Paths.get(ledgerPath))) Map.empty
     else {
       import scala.jdk.CollectionConverters._
       val bucketRe = "\"bucket\":(\\d+)".r
       val statusRe = "\"status\":\"(\\w+)\"".r
+      val rowsRe = "\"rows\":(\\d+)".r
+      val skipRe = "\"skipped\":(\\d+)".r
       Files.readAllLines(Paths.get(ledgerPath)).asScala.iterator
         .flatMap { l =>
           for (b <- bucketRe.findFirstMatchIn(l); s <- statusRe.findFirstMatchIn(l))
-            yield b.group(1).toInt -> s.group(1)
+            yield b.group(1).toInt ->
+              (s.group(1),
+                rowsRe.findFirstMatchIn(l).map(_.group(1).toLong),
+                skipRe.findFirstMatchIn(l).map(_.group(1).toLong))
         }
         .toMap // iterator.toMap keeps the LAST entry per key
     }
+
+  /** Latest ledger status per bucket (last entry wins, so a bucket that
+    * failed and was later re-driven to `done` reads as done).
+    */
+  def bucketStatus(ledgerPath: String): Map[Int, String] =
+    latestEntries(ledgerPath).map { case (b, (s, _, _)) => b -> s }
 
   /** Buckets already marked done in the ledger (trackRun resume,
     * docs/04-cdm-approach.md:422-434). A bucket whose latest entry is
@@ -301,30 +314,13 @@ object MigrateJob {
   final case class LedgerTotals(rows: Long, skipped: Long, bucketsDone: Int,
                                 countsComplete: Boolean)
 
-  def ledgerTotals(ledgerPath: String): LedgerTotals =
-    if (!Files.exists(Paths.get(ledgerPath)))
-      LedgerTotals(0L, 0L, 0, countsComplete = true)
-    else {
-      import scala.jdk.CollectionConverters._
-      val bucketRe = "\"bucket\":(\\d+)".r
-      val statusRe = "\"status\":\"(\\w+)\"".r
-      val rowsRe = "\"rows\":(\\d+)".r
-      val skipRe = "\"skipped\":(\\d+)".r
-      // latest entry per bucket: (status, rows, skipped)
-      val latest = Files.readAllLines(Paths.get(ledgerPath)).asScala.iterator
-        .flatMap { l =>
-          for (b <- bucketRe.findFirstMatchIn(l); s <- statusRe.findFirstMatchIn(l))
-            yield b.group(1).toInt ->
-              (s.group(1),
-                rowsRe.findFirstMatchIn(l).map(_.group(1).toLong),
-                skipRe.findFirstMatchIn(l).map(_.group(1).toLong))
-        }
-        .toMap
-      val done = latest.values.collect { case ("done", r, k) => (r, k) }.toSeq
-      LedgerTotals(
-        done.flatMap(_._1).sum, done.flatMap(_._2).sum, done.size,
-        countsComplete = done.forall(d => d._1.isDefined && d._2.isDefined))
-    }
+  def ledgerTotals(ledgerPath: String): LedgerTotals = {
+    val done = latestEntries(ledgerPath).values
+      .collect { case ("done", r, k) => (r, k) }.toSeq
+    LedgerTotals(
+      done.flatMap(_._1).sum, done.flatMap(_._2).sum, done.size,
+      countsComplete = done.forall(d => d._1.isDefined && d._2.isDefined))
+  }
 
   /** One table of a multi-table migration (docs/04-cdm-approach.md:770-822
     * loops CDM over tables with per-table configs — `migrate_table.sh`'s
@@ -341,6 +337,16 @@ object MigrateJob {
                                 migrated: Long, skipped: Long,
                                 buckets_done: Int, buckets_total: Int,
                                 counts_complete: Boolean, error: Option[String])
+
+  /** One report row: `status`/`err` from this run, counts from the
+    * table's ledger totals.
+    */
+  private def outcome(tm: TableMigration, status: String,
+                      err: Option[String]): TableOutcome = {
+    val lt = ledgerTotals(tm.sink.ledgerPath)
+    TableOutcome(tm.name, status, lt.rows, lt.skipped, lt.bucketsDone,
+      tm.cfg.tokenBuckets, lt.countsComplete, err)
+  }
 
   /** Drive the single-table pipeline over `tables` in order with a
     * CONSOLIDATED error budget — the reference's production recipe
@@ -391,9 +397,7 @@ object MigrateJob {
                 case e: Throwable =>
                   ("failed", Some(String.valueOf(e.getMessage).take(500)))
               }
-            val lt = ledgerTotals(tm.sink.ledgerPath)
-            TableOutcome(tm.name, status, lt.rows, lt.skipped, lt.bucketsDone,
-              tm.cfg.tokenBuckets, lt.countsComplete, err)
+            outcome(tm, status, err)
           }
         }
         return futs.map(Await.result(_, Duration.Inf))
@@ -402,17 +406,12 @@ object MigrateJob {
     var skippedSoFar = 0L
     var abort: Option[String] = None
     tables.map { tm =>
-      def outcome(status: String, err: Option[String]) = {
-        val lt = ledgerTotals(tm.sink.ledgerPath)
-        TableOutcome(tm.name, status, lt.rows, lt.skipped, lt.bucketsDone,
-          tm.cfg.tokenBuckets, lt.countsComplete, err)
-      }
       abort match {
-        case Some(why) => outcome("aborted", Some(why))
+        case Some(why) => outcome(tm, "aborted", Some(why))
         case None =>
           val remaining = globalErrorLimit - skippedSoFar
           if (remaining < 0) { // defensive; set with the abort below
-            outcome("aborted", Some("global error budget exhausted"))
+            outcome(tm, "aborted", Some("global error budget exhausted"))
           } else
             try {
               val eff = tm.cfg.copy(errorLimit = math.min(tm.cfg.errorLimit, remaining))
@@ -420,7 +419,7 @@ object MigrateJob {
               skippedSoFar += r.skippedOversize
               if (skippedSoFar > globalErrorLimit)
                 abort = Some(s"global error budget exceeded: $skippedSoFar > $globalErrorLimit")
-              outcome("done", None)
+              outcome(tm, "done", None)
             } catch {
               case e: Throwable =>
                 val msg = String.valueOf(e.getMessage)
@@ -432,7 +431,7 @@ object MigrateJob {
                     s"global error budget exhausted at table ${tm.name}")
                 else if (!continueOnError)
                   abort = Some(s"table ${tm.name} failed and continueOnError=false")
-                outcome("failed", Some(msg.take(500)))
+                outcome(tm, "failed", Some(msg.take(500)))
             }
       }
     }

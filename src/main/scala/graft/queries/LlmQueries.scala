@@ -25,6 +25,23 @@ object LlmQueries {
             .otherwise(col("text")).as("text"),
           col("lang"), col("source"), col("n_chars")))
 
+  /** Near-duplicate cluster labels (doc_id, cluster_id) of `docs`: LSH
+    * candidate pairs over the shingle table, then connected components
+    * through `cluster`. Both caches are released before returning: the
+    * candidate pairs are materialized before the shingle table goes, and
+    * every clustering path consumes its pairs eagerly (the union-find
+    * collect, the star loop's checkpoints).
+    */
+  private def candidateClusters(
+      docs: DataFrame,
+      cluster: (DataFrame, String, DataFrame) => DataFrame): DataFrame = {
+    val sh = LlmOps.shingleTable(docs, "doc_id")
+    val pairs = try LlmOps.minhashCandidatesFrom(sh, "doc_id")
+      finally { sh.unpersist(); () }
+    try cluster(docs.select(col("doc_id")), "doc_id", pairs)
+    finally { pairs.unpersist(); () }
+  }
+
   private val docsDupSql: String =
     """SELECT doc_id, text, lang, source, n_chars FROM documents
        UNION ALL
@@ -425,8 +442,8 @@ object LlmQueries {
       // per-bucket pair array materialization loses to the codegen'd join
       // there (measured within one session at sf0.1: self-join 1.33 s,
       // grouped 1.51 s, r6's persist+count 1.56 s). Rule: bucket size picks
-      // the form — LlmOps.simhashNearDups auto-dispatches 32↔64 on the
-      // corpus-size crossover; this key pins the 32-bit branch explicitly.
+      // the form; no corpus-size crossover between the two keys is
+      // measured, so the caller picks the 32-bit or the 64-lane key.
       LlmOps.simhashNearDups32(docsWithDups(t(s, d, "documents")))
         .orderBy(col("a"), col("b"))),
 
@@ -440,8 +457,7 @@ object LlmQueries {
       // grouped pair generation over 20-bit blocks (expected bucket
       // N/2^20); the 60-bit mask keeps Spark's `div` (truncate) and
       // DuckDB's `//` (floor) on the same non-negative domain — full
-      // rationale on LlmOps.simhashNearDups64. This key pins the 64-lane
-      // branch of LlmOps.simhashNearDups explicitly.
+      // rationale on LlmOps.simhashNearDups64.
       LlmOps.simhashNearDups64(docsWithDups(t(s, d, "documents")))
         .orderBy(col("a"), col("b"))),
 
@@ -608,43 +624,29 @@ object LlmQueries {
 
     // cluster collapse: connected components over the LSH candidate pairs —
     // the keep-one-per-duplicate-cluster step after candidate generation
-    "dedup_clusters" -> ((s, d) => {
-      val docs = docsWithDups(t(s, d, "documents"))
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val pairs = LlmOps.minhashCandidatesFrom(sh, "doc_id").persist()
-      val clusters =
-        LlmOps.duplicateClusters(docs.select(col("doc_id")), "doc_id", pairs)
-      pairs.unpersist() // materialized inside duplicateClusters; see dedup_corpus
-      clusters.orderBy(col("doc_id"))
-    }),
+    "dedup_clusters" -> ((s, d) =>
+      candidateClusters(docsWithDups(t(s, d, "documents")),
+        LlmOps.duplicateClusters(_, _, _))
+        .orderBy(col("doc_id"))),
 
     // fully-distributed cluster labels: alternating large-star/small-star
     // contraction (SoCC'14) — NO driver state, O(log² n) rounds on ANY
     // topology (label propagation needs diameter rounds; a 10⁶-doc
     // near-dup CHAIN is its worst case and this tier's design case).
     // Same min-id labels as dedup_clusters — same oracle.
-    "dedup_clusters_dist" -> ((s, d) => {
-      val docs = docsWithDups(t(s, d, "documents"))
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val pairs = LlmOps.minhashCandidatesFrom(sh, "doc_id").persist()
-      val clusters = LlmOps.distributedClustersStar(
-        docs.select(col("doc_id")), "doc_id", pairs)
-      pairs.unpersist()
-      clusters.orderBy(col("doc_id"))
-    }),
+    "dedup_clusters_dist" -> ((s, d) =>
+      candidateClusters(docsWithDups(t(s, d, "documents")),
+        LlmOps.distributedClustersStar(_, _, _))
+        .orderBy(col("doc_id"))),
 
     // the dedup AUDIT report: cluster-size histogram + the doc share a
     // keep-one collapse would remove at each size — the number a curation
     // owner reads before choosing hard drop / best-keeper / soft weights
-    "dedup_cluster_stats" -> ((s, d) => {
-      val docs = docsWithDups(t(s, d, "documents"))
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val pairs = LlmOps.minhashCandidatesFrom(sh, "doc_id").persist()
-      val clusters =
-        LlmOps.duplicateClusters(docs.select(col("doc_id")), "doc_id", pairs)
-      pairs.unpersist()
-      LlmOps.clusterSizeStats(clusters, "doc_id")
-    }),
+    "dedup_cluster_stats" -> ((s, d) =>
+      LlmOps.clusterSizeStats(
+        candidateClusters(docsWithDups(t(s, d, "documents")),
+          LlmOps.duplicateClusters(_, _, _)),
+        "doc_id")),
 
     // soft dedup: keep EVERY doc but weight it 1/cluster_size, so a
     // doc duplicated k× contributes one doc's worth of training loss in
@@ -655,12 +657,8 @@ object LlmQueries {
     // join shuffles on cluster_id, already the clusters frame's natural
     // key, and no step holds a cluster in one task.
     "dedup_weights" -> ((s, d) => {
-      val docs = docsWithDups(t(s, d, "documents"))
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val pairs = LlmOps.minhashCandidatesFrom(sh, "doc_id").persist()
-      val clusters =
-        LlmOps.duplicateClusters(docs.select(col("doc_id")), "doc_id", pairs)
-      pairs.unpersist()
+      val clusters = candidateClusters(docsWithDups(t(s, d, "documents")),
+        LlmOps.duplicateClusters(_, _, _))
       val sizes = clusters.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cluster_size"))
       clusters.join(sizes, Seq("cluster_id"))

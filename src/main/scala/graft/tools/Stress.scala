@@ -616,11 +616,11 @@ object Stress {
     // pressure). lmScore auto-selects at LmCacheCrossoverDocs; both
     // sides stay measured.
     bench(s"LM trigram quality score two-explode ${nDocs / 1000000}M docs", nDocs) {
-      graft.ext.LlmOps.lmScoreTwoExplode(docs)
+      graft.ext.LlmOps.lmScoreBy(docs, Seq("doc_id"), None, 4096, cached = false)
         .agg(sum(col("n_grams")), avg(col("avg_logp"))).collect()
     }
     bench(s"LM trigram quality score cached-gram ${nDocs / 1000000}M docs", nDocs) {
-      val sc = graft.ext.LlmOps.lmScoreCached(docs)
+      val sc = graft.ext.LlmOps.lmScoreBy(docs, Seq("doc_id"), None, 4096, cached = true)
       sc.agg(sum(col("n_grams")), avg(col("avg_logp"))).collect()
       sc.unpersist()
     }

@@ -338,18 +338,23 @@ class AnnIndexSpec extends SparkSpec {
       (0, Seq[java.lang.Float](7.5f)),             // ragged: shorter vector
       (1, Seq[java.lang.Float](1e9f, 2f)),         // large but inside DECIMAL(20,10)
       (1, Seq[java.lang.Float](4f, 5f, 6f, 7f)),
-      (2, Seq[java.lang.Float](null, null))        // all-null position → null element
+      (2, Seq[java.lang.Float](null, null)),       // all-null position → null element
+      (3, Seq[java.lang.Float]()),                 // empty-array group: no row
+      (4, null)                                    // null-array group: no row
     ).toDF("cid", "embedding").repartition(3)
     def collect(df: DataFrame) = df.collect()
-      .map(r => (r.getInt(0), r.getSeq[Any](1).toList)).sortBy(_._1).toList
-    val one = collect(LlmOps.updateCentroids(rows, nGroups = 3))
-    val two = collect(LlmOps.updateCentroids(rows, nGroups = Int.MaxValue))
+      .map(r => (r.getInt(0), Option(r.getSeq[Any](1)).map(_.toList))).sortBy(_._1).toList
+    def mean(df: DataFrame, g: Int) =
+      LlmOps.decimalVecMean(df, Seq("cid"), "embedding", nGroups = g)
+    val one = collect(mean(rows, 5))
+    val two = collect(mean(rows, Int.MaxValue))
     assert(one == two, s"\none: $one\ntwo: $two")
+    assert(one.map(_._1) == List(0, 1, 2), s"element-free groups must yield no row: $one")
     // decimal-precision overflow THROWS on both forms (ANSI default):
     val big = Seq((0, Seq(1e15f, 2f))).toDF("cid", "embedding").repartition(2)
     for (g <- Seq(1, Int.MaxValue))
       intercept[Exception] {
-        LlmOps.updateCentroids(big, nGroups = g).collect()
+        mean(big, g).collect()
       }
     // and on the real corpus: same trained centroids either way
     val emb = baseCorpus(100).repartition(2)

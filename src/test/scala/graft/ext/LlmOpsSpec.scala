@@ -112,7 +112,7 @@ class LlmOpsSpec extends SparkSpec {
     val uf = LlmOps.duplicateClusters(ids, "doc_id", pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(uf == expected)
-    // distributed label-propagation path (forced via a zero byte budget)
+    // distributed star-contraction path (forced via a zero byte budget)
     val dist = LlmOps.duplicateClusters(ids, "doc_id", pairs, driverEdgeBudgetBytes = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == expected)
@@ -341,25 +341,6 @@ class LlmOpsSpec extends SparkSpec {
       LlmOps.knnJoin(e, 3, saltChunk = chunk).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(knnSet(16) == knnSet(Int.MaxValue))
-  }
-
-  test("scale-form auto-selection: simhash 32↔64 at the corpus-size crossover") {
-    val d = docs(
-      1L -> "the quick brown fox jumps over the lazy dog again and again",
-      2L -> "the quick brown fox jumps over the lazy dog again and again",
-      3L -> "entirely different words about spark catalyst tungsten codegen shuffles")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val below = LlmOps.simhashNearDups(d, corpusSizeHint = Some(1000L))
-    assert(below.columns.toSeq == Seq("a", "b", "hamming"))
-    assert(rows(below) == rows(LlmOps.simhashNearDups32(d)),
-      "at/below the crossover the 32-bit branch must run")
-    val above = LlmOps.simhashNearDups(d,
-      corpusSizeHint = Some(LlmOps.SimhashCrossoverDocs + 1))
-    assert(rows(above) == rows(LlmOps.simhashNearDups64(d)),
-      "above the crossover the 64-lane branch must run")
-    // no hint → a count pass decides; this 3-doc corpus picks the 32 branch
-    assert(rows(LlmOps.simhashNearDups(d)) == rows(LlmOps.simhashNearDups32(d)))
   }
 
   test("scale-form auto-selection: pack shard width at the measured crossover") {
@@ -800,7 +781,8 @@ class LlmOpsSpec extends SparkSpec {
   test("distributedClustersStar collapses a long CHAIN in O(log n) rounds") {
     // a 2000-node path graph is label propagation's worst case (one round
     // per diameter unit = 2000 rounds); star contraction must finish it
-    // inside the default 25-round budget and label everything 0
+    // inside the default 25-round budget and label everything 0 — both
+    // called directly and as duplicateClusters' above-the-gate path
     val n = 2000L
     val ids = spark.range(n).select(col("id").as("doc_id"))
     val chain = spark.range(n - 1)
@@ -819,6 +801,33 @@ class LlmOpsSpec extends SparkSpec {
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before + 1,
       s"only the result's checkpoint may stay persisted: $before -> $after")
+    val viaGate = LlmOps.duplicateClusters(ids, "doc_id", chain,
+      driverEdgeBudgetBytes = 0L).collect()
+    assert(viaGate.length == n && viaGate.forall(_.getLong(1) == 0L),
+      "duplicateClusters above its gate must label every chain node 0")
+  }
+
+  test("cluster registry keys release their shingle and pair caches") {
+    // each key's only lasting state is star's result checkpoint
+    // (dedup_clusters_dist); the shingle table and the candidate pairs
+    // are released before the result is returned
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val kept = Map("dedup_clusters" -> 0, "dedup_clusters_dist" -> 1,
+      "dedup_cluster_stats" -> 0, "dedup_weights" -> 0)
+    // the results stay referenced: the persistent-RDD registry holds its
+    // RDDs weakly, so a collected frame's checkpoint could vanish mid-count
+    val results = kept.toSeq.map { case (key, grows) =>
+      val before = sc.getPersistentRDDs.size
+      val df = graft.SparkEntry.queries(key)(spark, sf("sf0.001"))
+      assert(df.collect().nonEmpty, key)
+      val after = sc.getPersistentRDDs.size
+      assert(after - before == grows,
+        s"$key: persisted RDDs $before -> $after, expected +$grows")
+      df
+    }
+    assert(results.size == kept.size)
   }
 
   // min-id connected-component labels from a driver union-find: every root

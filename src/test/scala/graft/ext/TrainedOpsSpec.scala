@@ -71,7 +71,7 @@ class TrainedOpsSpec extends SparkSpec {
 
   test("kmeans property: every assignment is the rounded-cosine argmax, min-cid ties") {
     // random corpora stress what the planted fixture can't: arbitrary
-    // dims/c, dead cells (updateCentroids emits only populated cids),
+    // dims/c, dead cells (decimalVecMean emits only populated cids),
     // near-ties. Plain-Scala reference mirrors the operator's arithmetic
     // exactly: double dot in array order, graft_round's half-away-from-
     // zero, smallest-cid tie-break. Fixed-seed sampling, same pattern as
@@ -188,9 +188,10 @@ class TrainedOpsSpec extends SparkSpec {
        "are value-identical") {
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val a = LlmOps.lmScoreTwoExplode(docs).orderBy("doc_id").collect()
+    val a = LlmOps.lmScoreBy(docs, Seq("doc_id"), None, 4096, cached = false)
+      .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val cached = LlmOps.lmScoreCached(docs)
+    val cached = LlmOps.lmScoreBy(docs, Seq("doc_id"), None, 4096, cached = true)
     val b = cached.orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     cached.unpersist()

@@ -58,7 +58,7 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     ("crossJoin(broadcast(withCnorm(cents)))",
       "LlmOps.assignCells: the k-means centroid table — ≤ c rows by construction"),
     ("g.join(broadcast(vocab), Seq(\"h\"), \"left\")",
-      "LlmOps.lmScore: the LM vocabulary — ≤ vocabK rows by .limit(vocabK)"),
+      "LlmOps.lmScoreBy (lmScore, ccnetBuckets): the LM vocabulary — ≤ vocabK rows by .limit(vocabK)"),
     ("merged.crossJoin(broadcast(exact))",
       "AggQueries.distinct_users_sketch: groupless global exact-count aggregate — exactly 1 row"),
     ("ap.crossJoin(broadcast(ex))",
@@ -71,14 +71,12 @@ class BroadcastGateLintSpec extends AnyFunSuite {
       "LlmOps.ivfSearchBatch: the query batch — gated at QueryBatchMaxRows (require before any broadcast)"),
     ("crossJoin(broadcast(tots))",
       "LlmOps.dsirSelect: groupless global word-total aggregate — exactly 1 row"),
-    ("crossJoin(broadcast(nRef))",
-      "LlmOps.ccnetBuckets: groupless reference-gram-mass aggregate — exactly 1 row"),
     ("scored.join(broadcast(thr), Seq(\"lang\"))",
       "LlmOps.ccnetBuckets: per-language tercile thresholds — one row per language (bounded by the lang cardinality, a corpus property the lang_dist family already treats as report-sized)"),
     ("feats.join(broadcast(lam), Seq(\"bucket\"))",
       "LlmOps.dsirSelect: the bucket log-ratio table — ≤ `buckets` rows by construction (one row per hash bucket)"),
     ("crossJoin(broadcast(tot))",
-      "LlmOps.lmScore / clusterSizeStats: groupless global aggregate (gram count / label count) — exactly 1 row"),
+      "LlmOps.lmScoreBy / clusterSizeStats: groupless global aggregate (gram mass / label count) — exactly 1 row"),
     ("broadcast(cand.select(col(\"vec_id\")))",
       "LlmOps.quantizedSearchCodes: rescore candidate ids — ≤ k·overfetch rows by .limit(k * overfetch)"),
     ("pairs.crossJoin(broadcast(capped))",
@@ -88,7 +86,7 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     ("crossJoin(broadcast(withCnorm(coarse)))",
       "LlmOps.kmeansAssignToHier stage 1: the coarse quantizer — ≤ √c rows by kmeansCoarse construction"),
     ("subs.join(broadcast(cbs), Seq(\"sub\"))",
-      "LlmOps.pqAssign: the PQ codebook table — ≤ m·ks rows by construction (the pqSeed/pqUpdate aggregates)"),
+      "LlmOps.pqAssign: the PQ codebook table — ≤ m·ks rows by construction (the pqSeed/decimalVecMean aggregates)"),
     ("crossJoin(broadcast(pqCbRow(cbs)))",
       "LlmOps.pqEncode: the m·ks codebook rows grouped to ONE row — bounded by the (m, ks) literals"),
     ("broadcast(ensureFns(query).select(col(\"embedding\").as(\"qm\")))",
