@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.NONE
 
 /** LLM training-data pipeline operators (SURVEY §2.11 + north-star brief):
   * exact/MinHash/SimHash/n-gram-Jaccard/embedding-cosine deduplication,
@@ -30,6 +31,29 @@ object LlmOps {
     graft.functions.GraftFunctions.ensure(df.sparkSession)
     df
   }
+
+  /** The one cache scope of this library's operators: persists each of
+    * `caches` (in order, so a later cache reads an earlier one's relation)
+    * unless it is already cached — an operator's materialized result handed
+    * in is taken over as is — runs `body`, and unpersists every one of them
+    * in `finally`, on failure too. A frame the body returns must not read a
+    * released cache lazily: return it through [[materialized]].
+    */
+  private[graft] def released[T](caches: DataFrame*)(body: => T): T = {
+    caches.foreach(c => if (c.storageLevel == NONE) c.persist())
+    try body finally caches.foreach(_.unpersist())
+  }
+
+  /** `df` persisted and counted, so it outlives the caches it reads; the
+    * caller owns the result. A frame already cached is returned as is.
+    */
+  private[graft] def materialized(df: DataFrame): DataFrame =
+    if (df.storageLevel != NONE) df
+    else {
+      df.persist()
+      try { df.count(); df }
+      catch { case e: Throwable => df.unpersist(); throw e }
+    }
 
   /** Portable 60-bit hash of a SQL string expression with a seed expression:
     * first 15 hex chars of md5 → BIGINT. Collision prob ~2^-60 per pair.
@@ -88,13 +112,14 @@ object LlmOps {
     ensureFns(df).withColumn("bands",
       expr(s"graft_band_hash(sig, $bands, $r, 15)"))
 
-  /** (id, shingles) **materialized** (persisted). Materializing here matters
-    * twice over: (a) the shingle pipeline runs once, not once per downstream
-    * consumer/join side — at 100 TB recomputing shingling per join side is
-    * the dominant cost; (b) downstream expression trees reference the
-    * `shingles` attribute of a compact cached relation instead of re-inlining
-    * the whole text→words→shingles HOF chain, which keeps analysis/planning
-    * linear (measured locally: 71s → <1s for the LSH self-join).
+  /** (id, shingles), lazy. An operator that reads it more than once scopes
+    * it with [[released]]: the shingle pipeline then runs once, not once
+    * per consumer or join side — at 100 TB recomputing shingling per join
+    * side is the dominant cost — and downstream expression trees reference
+    * the `shingles` attribute of a compact cached relation instead of
+    * re-inlining the text→words→shingles chain, which keeps analysis and
+    * planning linear (measured locally: 71s → <1s for the LSH self-join).
+    * A single consumer reads it uncached: a cache then only adds a write.
     */
   def shingleTable(docs: DataFrame, idCol: String): DataFrame =
     // r15 spread the scan here; r16 REMOVED it (driver bench adjudication):
@@ -104,29 +129,25 @@ object LlmOps {
     // corpus_overlap 0.48×, dedup_clusters 0.75× vs r14. The spread stays
     // where the per-row kernel dominates (gramPositions, lmGrams, the
     // levenshtein texts side).
-    withShingles(withWords(docs))
-      .select(col(idCol), col("shingles")).persist()
+    withShingles(withWords(docs)).select(col(idCol), col("shingles"))
 
-  /** Single home of the sig→band→explode construction: returns the
-    * PERSISTED signature table (caller must unpersist once its consumer
-    * materializes) and the lazy banded frame built on it. The signature
-    * column is materialized before banding+explode: Generate (explode)
+  /** Single home of the sig→band→explode construction: the (id, sig)
+    * signature table and the banded frame built on it, both lazy. Callers
+    * that band for a join scope the signature table with [[released]]: it
+    * is materialized before banding+explode, because Generate (explode)
     * triggers project collapsing that would otherwise inline the whole
     * signature expression into the per-band output.
     */
   private def sigAndBanded(sh: DataFrame, idCol: String, k: Int,
                            bands: Int, r: Int): (DataFrame, DataFrame) = {
-    val sigT = withMinhashSig(sh, k).select(col(idCol), col("sig")).persist()
+    val sigT = withMinhashSig(sh, k).select(col(idCol), col("sig"))
     val banded = withBandHashes(sigT, bands, r)
       .select(col(idCol), explode(col("bands")).as("band"))
     (sigT, banded)
   }
 
   /** (id, band-hash) pairs, one row per band, built from a [[shingleTable]].
-    *
-    * Ad-hoc/probe use only — the internal signature cache lives until
-    * session end. The pipeline entry points ([[minhashCandidatesFrom]],
-    * [[oversizedBuckets]]) manage and release their caches themselves.
+    * Lazy and cache-free.
     */
   def bandedSignatures(sh: DataFrame, idCol: String, k: Int = 8,
                        bands: Int = 4, r: Int = 2): DataFrame =
@@ -137,16 +158,11 @@ object LlmOps {
     * bucket sizes, no cartesian product.
     */
   def minhashCandidates(docs: DataFrame, idCol: String, k: Int = 8,
-                        bands: Int = 4, r: Int = 2): DataFrame = {
-    // the shingle table — the largest LSH intermediate — is released as
-    // soon as the (eagerly materialized) pairs no longer need it
-    val sh = shingleTable(docs, idCol)
-    try minhashCandidatesFrom(sh, idCol, k, bands, r)
-    finally { sh.unpersist(); () }
-  }
+                        bands: Int = 4, r: Int = 2): DataFrame =
+    minhashCandidatesFrom(shingleTable(docs, idCol), idCol, k, bands, r)
 
-  /** As [[minhashCandidates]] but reusing an existing (persisted)
-    * [[shingleTable]]. The band table is persisted too: the self-join must
+  /** As [[minhashCandidates]] but over an existing [[shingleTable]]. The
+    * signature and band tables are cached for the call: the self-join must
     * not compute signatures once per side.
     *
     * `maxBucket` caps the quadratic blowup of a degenerate bucket (e.g.
@@ -157,28 +173,16 @@ object LlmOps {
     */
   def minhashCandidatesFrom(sh: DataFrame, idCol: String, k: Int = 8,
                             bands: Int = 4, r: Int = 2,
-                            maxBucket: Int = 1000,
-                            materialize: Boolean = true): DataFrame = {
+                            maxBucket: Int = 1000): DataFrame = {
     // the signature and band tables are orders of magnitude larger than
     // the candidate pairs (per-doc arrays vs the near-dup subset) —
-    // materialize the pairs eagerly so both intermediates can be RELEASED
+    // materialize the pairs eagerly so both intermediates are RELEASED
     // here instead of squatting on executor storage until session end
     // (measured: at 5M docs the leaked caches caused eviction thrash and
     // ~50% run-to-run variance). Callers get a small persisted result.
-    // materialize=false returns the LAZY plan (for plan audits/explain —
-    // the intermediates then live until session end, probe use only).
-    if (!materialize) {
-      val (_, banded) = sigAndBanded(sh, idCol, k, bands, r)
-      return pairsPlan(banded, cappedBands(banded, maxBucket), idCol)
-    }
-    val (sigT, banded0) = sigAndBanded(sh, idCol, k, bands, r)
-    val banded = banded0.persist()
-    val pairs = pairsPlan(banded, cappedBands(banded, maxBucket), idCol)
-      .persist()
-    pairs.count() // materialize BEFORE dropping the caches it derives from
-    banded.unpersist()
-    sigT.unpersist()
-    pairs
+    val (sigT, banded) = sigAndBanded(sh, idCol, k, bands, r)
+    released(sigT, banded)(
+      materialized(pairsPlan(banded, cappedBands(banded, maxBucket), idCol)))
   }
 
   /** The band buckets the `maxBucket` cap excludes from pairing — TINY by
@@ -208,7 +212,7 @@ object LlmOps {
 
   /** [[minhashCandidatesFrom]] plus coverage accounting FOLDED into the
     * same aggregation: the capped-band set is computed once from the cached
-    * band table, persisted (tiny by construction), counted for the
+    * band table, cached too (tiny by construction), counted for the
     * coverage report, and reused as the pair join's anti-join exclusion —
     * the pair job no longer re-aggregates the band table a second time
     * (the r7 shape paid one extra full hash-agg pass over the cache
@@ -219,16 +223,12 @@ object LlmOps {
   def candidatesWithCoverage(sh: DataFrame, idCol: String, k: Int = 8,
                              bands: Int = 4, r: Int = 2,
                              maxBucket: Int = 1000): (DataFrame, Long) = {
-    val (sigT, banded0) = sigAndBanded(sh, idCol, k, bands, r)
-    val banded = banded0.persist()
-    val capped = cappedBands(banded, maxBucket).persist()
-    val nCapped = capped.count()
-    val pairs = pairsPlan(banded, capped, idCol).persist()
-    pairs.count() // materialize BEFORE dropping the caches it derives from
-    capped.unpersist()
-    banded.unpersist()
-    sigT.unpersist()
-    (pairs, nCapped)
+    val (sigT, banded) = sigAndBanded(sh, idCol, k, bands, r)
+    val capped = cappedBands(banded, maxBucket)
+    released(sigT, banded, capped) {
+      val nCapped = capped.count()
+      (materialized(pairsPlan(banded, capped, idCol)), nCapped)
+    }
   }
 
   /** Buckets skipped by the `maxBucket` cap, with their sizes. Eagerly
@@ -238,11 +238,8 @@ object LlmOps {
   def oversizedBuckets(sh: DataFrame, idCol: String, maxBucket: Int,
                        k: Int = 8, bands: Int = 4, r: Int = 2): DataFrame = {
     val (sigT, banded) = sigAndBanded(sh, idCol, k, bands, r)
-    val out = banded.groupBy("band").count().filter(col("count") > maxBucket)
-      .persist()
-    out.count()
-    sigT.unpersist()
-    out
+    released(sigT)(materialized(
+      banded.groupBy("band").count().filter(col("count") > maxBucket)))
   }
 
   /** 32-bit SimHash over the word multiset: bit j is the sign of the sum of
@@ -700,6 +697,18 @@ object LlmOps {
     distributedClustersStar(ids, idCol, pairs)
   }
 
+  /** (idCol, cluster_id) near-duplicate clusters of `docs` and the number
+    * of LSH buckets the `maxBucket` cap excluded. The candidate pairs are
+    * released once clustered: every [[duplicateClusters]] path consumes
+    * them eagerly (the union-find collect, the star loop's checkpoints).
+    */
+  private def clustersWithCoverage(docs: DataFrame, idCol: String,
+                                   maxBucket: Int): (DataFrame, Long) = {
+    val (pairs, capped) =
+      candidatesWithCoverage(shingleTable(docs, idCol), idCol, maxBucket = maxBucket)
+    (released(pairs)(duplicateClusters(docs.select(col(idCol)), idCol, pairs)), capped)
+  }
+
   /** The dedup end product with coverage accounting: one canonical (min-id)
     * doc per duplicate cluster, each row carrying `capped_lsh_buckets` —
     * the number of LSH buckets the `maxBucket` cap excluded from candidate
@@ -709,11 +718,7 @@ object LlmOps {
     * column; all other columns pass through.
     */
   def dedupCorpus(docs: DataFrame, idCol: String, maxBucket: Int = 1000): DataFrame = {
-    val sh = shingleTable(docs, idCol)
-    val (pairs, capped) = candidatesWithCoverage(sh, idCol, maxBucket = maxBucket)
-    sh.unpersist() // pairs are materialized; the shingle cache is done
-    val clusters = duplicateClusters(docs.select(col(idCol)), idCol, pairs)
-    pairs.unpersist() // clusters no longer reference them (collected/looped)
+    val (clusters, capped) = clustersWithCoverage(docs, idCol, maxBucket)
     docs.join(clusters, idCol)
       .filter(col(idCol) === col("cluster_id"))
       .drop("cluster_id")
@@ -732,11 +737,7 @@ object LlmOps {
     */
   def dedupCorpusBest(docs: DataFrame, idCol: String,
                       maxBucket: Int = 1000): DataFrame = {
-    val sh = shingleTable(docs, idCol)
-    val (pairs, capped) = candidatesWithCoverage(sh, idCol, maxBucket = maxBucket)
-    sh.unpersist()
-    val clusters = duplicateClusters(docs.select(col(idCol)), idCol, pairs)
-    pairs.unpersist()
+    val (clusters, capped) = clustersWithCoverage(docs, idCol, maxBucket)
     val keepers = docs.select(col(idCol), length(col("text")).as("len"))
       .join(clusters, idCol)
       .groupBy(col("cluster_id"))
@@ -1009,7 +1010,7 @@ object LlmOps {
     * real multimodal corpus needs: per-modality pair generators each see
     * only their own channel, the union of their edges feeds ONE
     * connected-components pass ([[duplicateClusters]]: driver union-find
-    * under the edge gate, label-propagation fixpoint above it). Output
+    * under the edge gate, star contraction above it). Output
     * (idCol, cluster_id) over the union of both tables' ids; cluster_id
     * = the component's smallest id, singletons label themselves.
     *
@@ -1031,50 +1032,45 @@ object LlmOps {
   def multimodalClusters(docs: DataFrame, images: DataFrame,
                          idCol: String = "doc_id"): DataFrame = {
     // r16 (guide §6 scan reuse): the text, audio and video channels each
-    // re-scanned the same payload lineage — one NARROW (id, text) persist
-    // feeds all three fingerprint passes and releases as soon as the
-    // (near-dup-sized) edge union materializes. The id frame deliberately
-    // reads `docs` directly: it needs only the pruned id column and
-    // evaluates after the payload cache is gone.
-    val payload = docs.select(col(idCol), col("text")).persist()
+    // re-scanned the same payload lineage — one NARROW (id, text) cache
+    // feeds all three fingerprint passes. The id frame deliberately reads
+    // `docs` directly: it needs only the pruned id column and evaluates
+    // after the payload cache is gone.
+    val payload = docs.select(col(idCol), col("text"))
     // §2.6 (overlap independent jobs): the text channel materializes its
-    // pairs EAGERLY inside minhashCandidates (persist + count + cache
-    // release) while the other three channels — lazy until an action —
+    // pairs inside minhashCandidates while the other three channels
     // materialize their own edge union on a second driver thread; the
     // two pipelines' jobs backfill each other's straggler tails. The
     // final union-distinct over two already-distinct edge sets is
     // value-identical to the single five-way distinct it replaces.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val textPairsF = Future(
-      minhashCandidates(payload, idCol).select(col("a"), col("b"))
-    )(ExecutionContext.global)
-    val otherPairsF = Future {
-      val imagePairs =
-        hammingPairsWithCoverage(imagePhashBlocked(images, "vec_id", "embedding"),
-          "phash", radius = 2)._1.select(col("a"), col("b"))
-      val audioPairs =
-        hammingPairsWithCoverage(audioFingerprintBlocked(payload, idCol, "text"),
-          "afp", radius = 2)._1.select(col("a"), col("b"))
-      val videoPairs =
-        videoFramePairsWithCoverage(payload, idCol)._1.select(col("a"), col("b"))
-      val u = imagePairs.unionByName(audioPairs).unionByName(videoPairs)
-        .distinct().persist()
-      u.count()
-      u
-    }(ExecutionContext.global)
-    val textPairs = Await.result(textPairsF, Duration.Inf)
-    val otherPairs = Await.result(otherPairsF, Duration.Inf)
-    val pairs = textPairs.unionByName(otherPairs).distinct().persist()
-    pairs.count() // materialize the edge union BEFORE dropping the payload
-    otherPairs.unpersist()
-    payload.unpersist()
+    val edges = released(payload) {
+      val textPairsF = Future(minhashCandidates(payload, idCol))(ExecutionContext.global)
+      val otherPairsF = Future {
+        val imagePairs =
+          hammingPairsWithCoverage(imagePhashBlocked(images, "vec_id", "embedding"),
+            "phash", radius = 2)._1.select(col("a"), col("b"))
+        val audioPairs =
+          hammingPairsWithCoverage(audioFingerprintBlocked(payload, idCol, "text"),
+            "afp", radius = 2)._1.select(col("a"), col("b"))
+        val videoPairs =
+          videoFramePairsWithCoverage(payload, idCol)._1.select(col("a"), col("b"))
+        materialized(imagePairs.unionByName(audioPairs).unionByName(videoPairs).distinct())
+      }(ExecutionContext.global)
+      // both channels finish before any cache goes, and each one's edges
+      // are released whether or not the other failed
+      val channels = Seq(textPairsF, otherPairsF)
+        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      released(channels.flatMap(_.toOption): _*) {
+        val Seq(textPairs, otherPairs) = channels.map(_.get)
+        materialized(textPairs.unionByName(otherPairs).distinct())
+      }
+    }
     val ids = docs.select(col(idCol))
       .unionByName(images.select(col("vec_id").as(idCol)))
       .distinct()
-    val clusters = duplicateClusters(ids, idCol, pairs)
-    pairs.unpersist() // driver path collected the edges; lazy plan done with them
-    clusters
+    released(edges)(duplicateClusters(ids, idCol, edges))
   }
 
   /** Measured packing crossover (STRESS.md PackProbe table: single-window
@@ -1310,6 +1306,41 @@ object LlmOps {
       .withColumn("contaminated", col("contam_ratio") >= threshold)
   }
 
+  /** Byte model for [[purge]]'s flagged-id broadcast gate: one id row. */
+  val BytesPerBroadcastId = 64L
+
+  /** The end product of decontamination: the corpus minus a flagged id
+    * set, as an anti-join. Same adversarial-scale hazard as the minhash
+    * candidate set: the flagged side is CONTAMINATION-proportional — tiny
+    * for a clean corpus, half the corpus in the adversarial regime — so a
+    * hard-wired broadcast hint is an OOM, not a plan choice. One bounded
+    * collect of the distinct flagged ids — at most one id past the byte
+    * budget — picks the join shape: under the budget the corpus anti-joins
+    * a broadcast local relation of the collected ids (corpus never
+    * shuffles, and the flagged lineage is evaluated exactly once); over it
+    * the hint is simply DROPPED — a plain shuffled anti-join on the id,
+    * which AQE may still re-plan to broadcast at runtime if the actual
+    * size allows, and which re-evaluates the flagged lineage once. Both
+    * shapes are row-identical; only the id column moves on the flagged
+    * side ([[BytesPerBroadcastId]]/row model).
+    *
+    * The returned anti-join is LAZY and nothing is persisted (ADVICE r8):
+    * the result is ~the whole corpus, and pinning corpus-scale data in
+    * executor storage until session end is the exact pressure the byte
+    * gates exist to avoid. The corpus is read exactly once either way.
+    */
+  def purge(corpus: DataFrame, flagged: DataFrame, idCol: String,
+            flaggedBroadcastBudgetBytes: Long = 64L << 20): DataFrame = {
+    val ids = flagged.select(col(idCol)).distinct()
+    val maxIds = flaggedBroadcastBudgetBytes / BytesPerBroadcastId
+    val local = ids.limit(math.min(maxIds + 1, Int.MaxValue.toLong).toInt).collect()
+    if (local.length <= maxIds) {
+      val idRel = corpus.sparkSession
+        .createDataFrame(java.util.Arrays.asList(local: _*), ids.schema)
+      corpus.join(broadcast(idRel), Seq(idCol), "left_anti")
+    } else corpus.join(ids, Seq(idCol), "left_anti")
+  }
+
   /** [[decontaminate]] for benchmark sides too big to broadcast: a composite
     * eval suite can hold 10^8+ distinct n-grams — GBs as a hash-join build
     * side, but ~115 MB as a 1%-fpp bloom filter. Three stages:
@@ -1336,70 +1367,19 @@ object LlmOps {
     * prefilter+verify shape that survives a benchmark side beyond broadcast
     * size.
     */
-  /** The end product of decontamination: the corpus minus a flagged id
-    * set, as an anti-join. Same adversarial-scale hazard as the minhash
-    * candidate set: the flagged side is CONTAMINATION-proportional — tiny
-    * for a clean corpus, half the corpus in the adversarial regime — so a
-    * hard-wired broadcast hint is an OOM, not a plan choice. One eager
-    * count over the flagged ids picks the join shape: under the byte
-    * budget the anti-join broadcasts (corpus never shuffles); over it the
-    * hint is simply DROPPED — a plain shuffled anti-join on the id, which
-    * AQE may still re-plan to broadcast at runtime if the actual size
-    * allows. Both shapes are row-identical; only the id column moves on
-    * the flagged side ([[BytesPerBroadcastId]]/row model).
-    *
-    * The returned anti-join is LAZY and nothing is persisted (ADVICE r8):
-    * the result is ~the whole corpus, and pinning corpus-scale data in
-    * executor storage until session end is the exact pressure the byte
-    * gates exist to avoid. Cost: the flagged→distinct lineage recomputes
-    * once when the caller materializes (the flagged side is
-    * contamination-report-sized, not corpus-sized); the corpus is read
-    * exactly once either way.
-    */
-  val BytesPerBroadcastId = 64L
-
-  def purge(corpus: DataFrame, flagged: DataFrame, idCol: String,
-            flaggedBroadcastBudgetBytes: Long = 64L << 20): DataFrame = {
-    // r16: the flagged-id lineage is typically the WHOLE decontaminate
-    // chain (corpus gram explode + join + agg) and was evaluated twice —
-    // once by the gate count here and again when the caller materialized
-    // the returned anti-join. The distinct id set is flagged-proportional
-    // (the gate's own premise), so persist it across the two references —
-    // the minhashCandidatesFrom small-persisted-result discipline.
-    val ids = flagged.select(col(idCol)).distinct().persist()
-    val n = ids.count()
-    if (n <= flaggedBroadcastBudgetBytes / BytesPerBroadcastId)
-      corpus.join(broadcast(ids), Seq(idCol), "left_anti")
-    else {
-      // adversarial regime (flagged ~ half the corpus): do NOT pin a
-      // corpus-scale id set in executor storage (r8 ADVICE) — release the
-      // cache and let the anti-join recompute the flagged lineage once,
-      // exactly the pre-r16 behavior
-      ids.unpersist()
-      corpus.join(ids, Seq(idCol), "left_anti")
-    }
-  }
-
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, idCol: String,
-                         threshold: Double, fpp: Double = 0.01,
-                         materialize: Boolean = true): DataFrame = {
+                         threshold: Double, fpp: Double = 0.01): DataFrame = {
     import java.io.ByteArrayOutputStream
     import java.nio.charset.StandardCharsets.UTF_8
     import org.apache.spark.util.sketch.BloomFilter
 
     // The benchmark gram set drives THREE passes (size count, bloom build,
     // verify join) — cache it across them and release once the small
-    // result is materialized, same discipline as decontaminateMinhash.
-    // materialize=false skips caching/materializing the OUTPUT only; the
-    // benchmark-side jobs (gram count + bloom build) still run eagerly —
-    // the bloom must exist to build the returned plan at all. Plan-audit
-    // callers therefore pay the (small-side) benchmark work, and the
-    // passes each recompute the DISTINCT.
-    val benchGrams0 = withShingles(withWords(ensureFns(benchmark)))
+    // result is materialized.
+    val benchGrams = withShingles(withWords(ensureFns(benchmark)))
       .select(explode(array_distinct(col("shingles"))).as("g"))
       .distinct()
-    val benchGrams = if (materialize) benchGrams0.persist() else benchGrams0
-    try {
+    released(benchGrams) {
       // One count on the SMALL side to size the bloom; the corpus is untouched.
       val n = math.max(benchGrams.count(), 1L)
       val bloom = benchGrams.where(col("g").isNotNull).rdd
@@ -1415,15 +1395,30 @@ object LlmOps {
         .select(col(idCol), array_distinct(col("shingles")).as("sh"))
         .select(col(idCol), size(col("sh")).as("n_shingles"), explode(col("sh")).as("g"))
         .where(mightMatch)
-      val out = corpusGrams.join(benchGrams, "g")
+      materialized(corpusGrams.join(benchGrams, "g")
         .groupBy(col(idCol), col("n_shingles"))
         .agg(count(lit(1)).as("n_shared"))
         .withColumn("contam_ratio",
           round6(col("n_shared").cast("double") / col("n_shingles").cast("double")))
-        .withColumn("contaminated", col("contam_ratio") >= threshold)
-      if (materialize) { val p = out.persist(); p.count(); p } else out
-    } finally { if (materialize) { benchGrams.unpersist(); () } }
+        .withColumn("contaminated", col("contam_ratio") >= threshold))
+    }
   }
+
+  /** Byte model for the candidate-broadcast gate in
+    * [[decontaminateMinhash]]: a broadcast candidate row carries two long
+    * ids plus the joined benchmark shingle array (k grams × ~24 UTF-8 bytes
+    * plus array/row overhead) — budgeted at 1 KiB per candidate. Like
+    * [[BytesPerDriverEdge]], deliberately pessimistic: the gate guards
+    * against executor/driver OOM, not against a slightly-too-small
+    * broadcast.
+    */
+  val BytesPerBroadcastCandidate = 1024L
+
+  /** True iff `nCandidates` (candidate, benchmark-shingles) rows fit the
+    * broadcast budget under the [[BytesPerBroadcastCandidate]] model.
+    */
+  def fitsCandBroadcastGate(nCandidates: Long, budgetBytes: Long): Boolean =
+    nCandidates <= budgetBytes / BytesPerBroadcastCandidate
 
   /** Paraphrase-level benchmark decontamination: corpus docs whose word-
     * 3-gram Jaccard similarity to ANY benchmark doc clears `threshold`.
@@ -1443,64 +1438,41 @@ object LlmOps {
     *  3. report: per-corpus-doc match count + max Jaccard.
     *
     * Same cache discipline as [[minhashCandidatesFrom]]: the wide
-    * intermediates (shingle + signature tables) are persisted, the small
-    * result is materialized, then every upstream cache is released.
+    * intermediates (shingle + signature tables) are cached for the call,
+    * the small result is materialized, then every upstream cache is
+    * released.
     *
     * Reference analog: content-similarity validation,
     * lab/exercises/06-validation-monitoring.md:90-179, lifted from
     * row-sampling to corpus-vs-benchmark LSH.
     */
-  /** Byte model for the candidate-broadcast gate in
-    * [[decontaminateMinhash]]: a broadcast candidate row carries two long
-    * ids plus the joined benchmark shingle array (k grams × ~24 UTF-8 bytes
-    * plus array/row overhead) — budgeted at 1 KiB per candidate. Like
-    * [[BytesPerDriverEdge]], deliberately pessimistic: the gate guards
-    * against executor/driver OOM, not against a slightly-too-small
-    * broadcast.
-    */
-  val BytesPerBroadcastCandidate = 1024L
-
-  /** True iff `nCandidates` (candidate, benchmark-shingles) rows fit the
-    * broadcast budget under the [[BytesPerBroadcastCandidate]] model.
-    */
-  def fitsCandBroadcastGate(nCandidates: Long, budgetBytes: Long): Boolean =
-    nCandidates <= budgetBytes / BytesPerBroadcastCandidate
-
   def decontaminateMinhash(corpus: DataFrame, benchmark: DataFrame,
                            idCol: String, threshold: Double = 0.5,
                            candBroadcastBudgetBytes: Long = 64L << 20): DataFrame = {
     val cSh = shingleTable(ensureFns(corpus), idCol)
     val bSh = shingleTable(ensureFns(benchmark), idCol)
-    try {
-      val (cSig, cBand) = sigAndBanded(cSh, idCol, k = 8, bands = 4, r = 2)
-      val (bSig, bBand) = sigAndBanded(bSh, idCol, k = 8, bands = 4, r = 2)
-      try {
-        // Candidate count scales with the number of CORPUS docs sharing a
-        // band with the benchmark — in an adversarially contaminated corpus
-        // (the exact situation decontamination exists for) it is unbounded.
-        // The pairs are persisted and COUNTED before the verify stage picks
-        // its join shape: under the byte gate the candidates broadcast into
-        // the corpus shingle scan (corpus stays shuffle-free); over it,
-        // [[minhashVerify]] falls back to a shuffle equi-join of cSh with
-        // the candidates on the doc id — the corpus pays one exchange
-        // instead of the driver/executors paying an unbounded broadcast.
-        val cand = cBand
-          .join(broadcast(bBand.withColumnRenamed(idCol, "bench_id")), "band")
-          .select(col(idCol), col("bench_id")).distinct()
-          .persist()
-        try {
-          val nCand = cand.count()
-          val verified = minhashVerify(cSh, bSh, cand, idCol, threshold,
-            broadcastCands = fitsCandBroadcastGate(nCand, candBroadcastBudgetBytes))
-          val out = verified.groupBy(col(idCol))
-            .agg(count(lit(1)).as("n_bench_matches"),
-              max(col("jac")).as("max_jaccard"))
-            .persist()
-          out.count() // materialize BEFORE the upstream caches are released
-          out
-        } finally { cand.unpersist(); () }
-      } finally { cSig.unpersist(); bSig.unpersist(); () }
-    } finally { cSh.unpersist(); bSh.unpersist(); () }
+    val (cSig, cBand) = sigAndBanded(cSh, idCol, k = 8, bands = 4, r = 2)
+    val (bSig, bBand) = sigAndBanded(bSh, idCol, k = 8, bands = 4, r = 2)
+    // Candidate count scales with the number of CORPUS docs sharing a
+    // band with the benchmark — in an adversarially contaminated corpus
+    // (the exact situation decontamination exists for) it is unbounded.
+    // The pairs are cached and COUNTED before the verify stage picks
+    // its join shape: under the byte gate the candidates broadcast into
+    // the corpus shingle scan (corpus stays shuffle-free); over it,
+    // [[minhashVerify]] falls back to a shuffle equi-join of cSh with
+    // the candidates on the doc id — the corpus pays one exchange
+    // instead of the driver/executors paying an unbounded broadcast.
+    val cand = cBand
+      .join(broadcast(bBand.withColumnRenamed(idCol, "bench_id")), "band")
+      .select(col(idCol), col("bench_id")).distinct()
+    released(cSh, bSh, cSig, bSig, cand) {
+      val nCand = cand.count()
+      val verified = minhashVerify(cSh, bSh, cand, idCol, threshold,
+        broadcastCands = fitsCandBroadcastGate(nCand, candBroadcastBudgetBytes))
+      materialized(verified.groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_bench_matches"),
+          max(col("jac")).as("max_jaccard")))
+    }
   }
 
   /** The exact-Jaccard verify stage of [[decontaminateMinhash]], in both
@@ -1744,52 +1716,24 @@ object LlmOps {
     * duplicate test is per-gram-value independent, so the gram stream
     * splits by hash range: pass `i` explodes the corpus, keeps grams with
     * `pmod(h, passes) = i`, and runs ONLY that slice through the
-    * two-level duplicate test (so at most ~1/passes of the gram table is
-    * ever live on shuffle disk as the semi-join's probe side — and none
-    * of it when AQE broadcasts the slice's duplicated-gram set); the
-    * surviving duplicated positions (output-proportional, tiny next to
-    * the gram table) union across passes and one final doc-keyed
-    * exchange merges spans. Each pass re-runs the codegen'd explode
-    * (streaming CPU) to avoid holding the whole gram table on shuffle
-    * disk at once (the ~100 GB the 10M-doc STRESS form needed).
-    * Measured at 2M docs (SubstrProbe, r10 window form): staged ×4 was
-    * FASTER than the single shuffle (48.6 s vs 72.7 s) — quarter-sized
-    * sorts spill less — so above the spill threshold the dial wins on
-    * both disk and wall-clock; below it the re-explode CPU makes
-    * passes = 1 the right default. NOTE the hash-range split bounds
-    * VOLUME, not per-key skew — a single hot gram lands wholly in one
-    * pass; the per-key term is bounded by the two-level count inside
-    * each pass (see [[duplicatedSpans]]), which is why staging composes
-    * with it instead of replacing it. Output is pass-count-invariant
-    * (spec-pinned); `passes = 1` IS [[duplicatedSpans]].
-    */
-  def duplicatedSpansStaged(docs: DataFrame, idCol: String, k: Int = 20,
-                            passes: Int = 4): DataFrame = {
-    require(passes >= 1, s"passes must be >= 1, got $passes")
-    val grams = gramPositions(docs, idCol, k)
-    val dupPos = (0 until passes).map { i =>
-        dupPositions(
-          grams.filter(pmod(col("h"), lit(passes.toLong)) === i), idCol)
-      }.reduce(_ unionByName _)
-    mergeSpans(dupPos, idCol, k)
-  }
-
-  /** [[duplicatedSpansStaged]] with each pass run as its OWN action whose
-    * (output-proportional, tiny) duplicated positions land in
-    * `workDir/pass_i` — the form whose peak-disk bound actually holds on
-    * a shared box. The lazy staged form unions every pass into ONE job,
-    * and Spark retains every stage's shuffle files until their
-    * dependencies are garbage-collected — so all `passes` gram-slice
-    * shuffles coexist on disk and the "~1/passes" bound is aspirational.
-    * Here pass i's action completes, its lineage goes unreferenced, and
-    * the context cleaner reclaims its shuffle files (nudged with an
-    * explicit GC — the same mechanism spark.cleaner.periodicGC relies
-    * on) before pass i+1 shuffles a byte. Peak disk ≈ one slice + the
-    * accumulated position parquet (output-proportional). Output is
-    * bit-identical to [[duplicatedSpans]] (same per-slice duplicate
-    * test, same merge — spec-pinned); use when the single-job form's
-    * total shuffle footprint exceeds the cluster's shuffle capacity,
-    * e.g. the 10M-doc STRESS row on this box.
+    * two-level duplicate test, as its OWN action whose (output-
+    * proportional, tiny) duplicated positions land in `workDir/pass_i`.
+    * Spark retains a stage's shuffle files until their dependencies are
+    * garbage-collected, so one job over all passes would keep every
+    * gram-slice shuffle on disk at once; here pass i's action completes,
+    * its lineage goes unreferenced, and the context cleaner reclaims its
+    * shuffle files (nudged with an explicit GC — the same mechanism
+    * spark.cleaner.periodicGC relies on) before pass i+1 shuffles a byte.
+    * Peak disk ≈ one slice + the accumulated position parquet (output-
+    * proportional). Each pass re-runs the codegen'd explode (streaming
+    * CPU), so below the spill threshold `passes = 1` is the right choice.
+    * The hash-range split bounds VOLUME, not per-key skew — a single hot
+    * gram lands wholly in one pass; the per-key term is bounded by the
+    * two-level count inside each pass (see [[duplicatedSpans]]). Output is
+    * bit-identical to [[duplicatedSpans]] at every pass count (same
+    * per-slice duplicate test, same merge — spec-pinned); use when the
+    * single-job form's total shuffle footprint exceeds the cluster's
+    * shuffle capacity, e.g. the 10M-doc row of STRESS.md.
     */
   def duplicatedSpansStagedToDisk(docs: DataFrame, idCol: String,
                                   workDir: String, k: Int = 20,
@@ -2569,14 +2513,14 @@ object LlmOps {
     */
   def semanticDedupWith(emb0: DataFrame, cents: DataFrame, threshold: Double,
                         maxCell: Int = DefaultMaxCell): DataFrame = {
-    val assigned = kmeansAssignTo(emb0, cents).persist()
+    val assigned = kmeansAssignTo(emb0, cents)
     val pairs = embeddingNearDups(
       assigned.select(col("vec_id"), col("cid").as("label"), col("embedding")),
       threshold, maxCell)
-    val dropped = pairs.select(col("b").as("vec_id")).distinct()
-      .withColumn("is_dup", lit(true)).persist()
-    dropped.count() // materialize the small dup set off the cached
-    assigned.unpersist() // assignment, then release the corpus-sized cache
+    // the small dup set materializes off the cached assignment, then the
+    // corpus-sized cache is released
+    val dropped = released(assigned)(materialized(
+      pairs.select(col("b").as("vec_id")).distinct().withColumn("is_dup", lit(true))))
     assigned.join(dropped, Seq("vec_id"), "left_outer")
       .select(col("vec_id"), col("cid"),
         coalesce(col("is_dup"), lit(false)).as("dropped"))
@@ -3220,26 +3164,22 @@ object LlmOps {
     // referenced THREE times (the decontaminate gram side, the purge
     // corpus side, and again when the caller materialized the lazy
     // result), each reference re-running the dedup join + keeper
-    // election. It now persists for the call, the (contamination-
-    // proportional, small) flagged id set materializes off it once, and
+    // election. It is now cached for the call, the (contamination-
+    // proportional, small) flagged id set is collected off it once, and
     // the NARROW manifest output (5 columns, no text) materializes
-    // eagerly so both caches release here — the decontaminateBloom
-    // discipline: eager small results, no corpus-sized cache outliving
-    // the call.
+    // eagerly so the cache releases here — eager small results, no
+    // corpus-sized cache outliving the call.
     val kept = dedupCorpusBest(corpus, idCol).drop("capped_lsh_buckets")
-      .persist()
-    val flagged = decontaminate(kept, benchmark, idCol, threshold)
-      .filter(col("contaminated")).select(col(idCol))
-    val gated = purge(kept, flagged, idCol)
-      .withColumn("n_tokens", size(split(col("text"), " ")))
-      .filter(col("n_tokens") >= minTokens && col("n_tokens") <= maxTokens)
-    val out = graft.core.Ops.shardShuffle(gated, idCol, numShards, seed)
-      .select(col(idCol), col("lang"), col("n_tokens"),
-        col("shard"), col("ord"))
-      .persist()
-    out.count() // materialize BEFORE releasing the kept cache it reads
-    kept.unpersist()
-    out
+    released(kept) {
+      val flagged = decontaminate(kept, benchmark, idCol, threshold)
+        .filter(col("contaminated")).select(col(idCol))
+      val gated = purge(kept, flagged, idCol)
+        .withColumn("n_tokens", size(split(col("text"), " ")))
+        .filter(col("n_tokens") >= minTokens && col("n_tokens") <= maxTokens)
+      materialized(graft.core.Ops.shardShuffle(gated, idCol, numShards, seed)
+        .select(col(idCol), col("lang"), col("n_tokens"),
+          col("shard"), col("ord")))
+    }
   }
 
   // ---- char-n-gram LM quality scoring (the CCNet-style LM filter) ----
@@ -3330,10 +3270,9 @@ object LlmOps {
   private[graft] def lmScoreBy(docs: DataFrame, keys: Seq[String], ref: Option[Column],
                                vocabK: Int, cached: Boolean): DataFrame = {
     // spreadSmall (r15): md5-per-trigram is the LM-score kernel cost
-    val g0 = ensureFns(spreadSmall(docs)).select(
+    val g = ensureFns(spreadSmall(docs)).select(
       keys.map(col) ++ ref.map(_.as("is_ref")) :+
         explode(expr("graft_gram_hash(text, 3, ':lm', 15)")).as("h"): _*)
-    val g = if (cached) g0.persist() else g0
     val counts = ref.fold(g)(_ => g.filter(col("is_ref")))
       .groupBy(col("h")).agg(count(lit(1)).as("c"))
     val tot = ensureFns(ref.fold(docs)(r => docs.filter(r))).agg(
@@ -3346,13 +3285,7 @@ object LlmOps {
           log10(lit(0.5) / col("n"))).as("logp"): _*)
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_grams"), round6(avg(col("logp"))).as("avg_logp"))
-    if (!cached) scored
-    else {
-      val out = scored.persist()
-      out.count() // materialize BEFORE dropping the gram cache it derives from
-      g.unpersist()
-      out
-    }
+    if (cached) released(g)(materialized(scored)) else scored
   }
 
   /** Quality-weighted sampling (the DCLM/FineWeb-style soft filter): each
@@ -3456,11 +3389,7 @@ object LlmOps {
     if (mode == "append")
       storeSigLen(docs.sparkSession, path).foreach(n => require(n == k,
         s"signature store at $path was written with k=$n; append uses k=$k"))
-    // r16: the shingle table has exactly ONE consumer here (the signature
-    // write) — the shingleTable persist bought nothing and paid cache
-    // materialization for the corpus-sized shingle arrays. Same
-    // expressions, unpersisted chain.
-    withMinhashSig(withShingles(withWords(docs)), k)
+    withMinhashSig(shingleTable(docs, idCol), k)
       .select(col(idCol), col("sig"))
       .write.mode(mode).parquet(path)
   }
@@ -3477,18 +3406,23 @@ object LlmOps {
   def batchNearDups(batch: DataFrame, idCol: String, threshold: Double,
                     k: Int = 8, bands: Int = 4, r: Int = 2): DataFrame = {
     val sh = shingleTable(batch, idCol)
-    val cand = minhashCandidatesFrom(sh, idCol, k, bands, r)
-    val out = cand
-      .join(sh.select(col(idCol).as("a"), col("shingles").as("sa")), "a")
-      .join(sh.select(col(idCol).as("b"), col("shingles").as("sb")), "b")
+    released(sh) {
+      val cand = minhashCandidatesFrom(sh, idCol, k, bands, r)
+      released(cand)(materialized(jaccardVerified(cand, sh, sh, idCol, threshold)))
+    }
+  }
+
+  /** The exact n-gram Jaccard verify of candidate pairs (a, b): each side's
+    * shingles join in by id — `aSh` for `a`, `bSh` for `b` — and pairs
+    * below `threshold` drop. Output (a, b, jac).
+    */
+  private def jaccardVerified(cand: DataFrame, aSh: DataFrame, bSh: DataFrame,
+                              idCol: String, threshold: Double): DataFrame =
+    cand
+      .join(aSh.select(col(idCol).as("a"), col("shingles").as("sa")), "a")
+      .join(bSh.select(col(idCol).as("b"), col("shingles").as("sb")), "b")
       .select(col("a"), col("b"), jaccard(col("sa"), col("sb")).as("jac"))
       .filter(col("jac") >= threshold)
-      .persist()
-    out.count() // materialize BEFORE dropping the caches it derives from
-    cand.unpersist()
-    sh.unpersist()
-    out
-  }
 
   /** First row's signature length of the store at `path`, or None when the
     * store doesn't exist yet. The store is k-uniform by construction
@@ -3587,7 +3521,7 @@ object LlmOps {
     val bSh = shingleTable(batch, idCol)
     val bBand = withBandHashes(withMinhashSig(bSh, k), bands, r)
       .select(col(idCol).as("a"), explode(col("bands")).as("band"))
-    // candidate pairs persist across their two references (the corpus
+    // candidate pairs are cached across their two references (the corpus
     // semi-join and the verify join) — without it the store-band scan and
     // band equi-join run twice per materialization.
     // a == b pairs are excluded: ids are unique across store+batch (the
@@ -3597,35 +3531,27 @@ object LlmOps {
     // dup itself out of a re-run micro-batch; see IngestPipeline).
     val cand = bBand.join(sBand, "band").filter(col("a") =!= col("b"))
       .select(col("a"), col("b")).distinct()
-      .persist()
-    // verify: the corpus pays text cost only for candidate docs. When the
-    // candidate set is small (the typical probe — duplicates are rare),
-    // the ids also push down as an OR-of-equals predicate so a
-    // [[writeLandedCorpus]]-laid-out corpus prunes row groups and pays
-    // candidate-proportional BYTES too; the semi-join stays on either way
-    // (exactness never depends on the pushdown). Bounded driver collect:
-    // ≤ CandidateInFilterMaxIds + 1 rows by the limit.
-    val bIdRows = cand.select(col("b")).distinct()
-      .limit(CandidateInFilterMaxIds + 1).collect()
-    val prunable =
-      if (bIdRows.nonEmpty && bIdRows.length <= CandidateInFilterMaxIds)
-        corpus.filter(bIdRows.map(r => corpus(idCol) === lit(r.get(0)))
-          .reduce(_ || _))
-      else corpus
-    val candCorpus = prunable.join(cand.select(col("b")),
-      prunable(idCol) === col("b"), "left_semi")
-    val cSh = shingleTable(candCorpus, idCol)
-    val out = cand
-      .join(bSh.select(col(idCol).as("a"), col("shingles").as("sa")), "a")
-      .join(cSh.select(col(idCol).as("b"), col("shingles").as("sb")), "b")
-      .select(col("a"), col("b"), jaccard(col("sa"), col("sb")).as("jac"))
-      .filter(col("jac") >= threshold)
-      .persist()
-    out.count() // materialize BEFORE dropping the caches it derives from
-    cand.unpersist()
-    bSh.unpersist()
-    cSh.unpersist()
-    out
+    released(bSh, cand) {
+      // verify: the corpus pays text cost only for candidate docs. When the
+      // candidate set is small (the typical probe — duplicates are rare),
+      // the ids also push down as an OR-of-equals predicate so a
+      // [[writeLandedCorpus]]-laid-out corpus prunes row groups and pays
+      // candidate-proportional BYTES too; the semi-join stays on either way
+      // (exactness never depends on the pushdown). Bounded driver collect:
+      // ≤ CandidateInFilterMaxIds + 1 rows by the limit.
+      val bIdRows = cand.select(col("b")).distinct()
+        .limit(CandidateInFilterMaxIds + 1).collect()
+      val prunable =
+        if (bIdRows.nonEmpty && bIdRows.length <= CandidateInFilterMaxIds)
+          corpus.filter(bIdRows.map(r => corpus(idCol) === lit(r.get(0)))
+            .reduce(_ || _))
+        else corpus
+      val candCorpus = prunable.join(cand.select(col("b")),
+        prunable(idCol) === col("b"), "left_semi")
+      // the candidate corpus shingles have one consumer: read uncached
+      materialized(jaccardVerified(cand, bSh, shingleTable(candCorpus, idCol),
+        idCol, threshold))
+    }
   }
 
   /** CCNet-style paragraph-level deduplication (Wenzek et al.,
@@ -4185,7 +4111,6 @@ object LlmOps {
       .withColumn("bucket", expr(s"${hashSql("w", "'dsir'")} % $buckets"))
       .groupBy(col("doc_id"), col("is_t"), col("bucket"))
       .agg(count(lit(1)).as("n"))
-      .persist()
     val stats = feats.groupBy(col("bucket"))
       .agg(sum(when(col("is_t"), col("n")).otherwise(lit(0L))).as("cnt_t"),
         sum(col("n")).as("cnt_r"))
@@ -4213,17 +4138,14 @@ object LlmOps {
         ((expr(hashSql("cast(doc_id as string)", "'gum'")) % lit(1048576L))
           .cast("double") + lit(0.5)) / lit(1048576.0))
       .withColumn("gumbel", round6(-log(-log(col("u")))))
-    val out = gum.join(scored, Seq("doc_id"), "left")
+    // the tiny selection materializes, then the features are released
+    released(feats)(materialized(gum.join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
         coalesce(col("logw_dec").cast("double"), lit(0.0)).as("logw"),
         col("gumbel"))
       .withColumn("skey", round6(col("logw") + col("gumbel")))
       .orderBy(col("skey").desc, col("doc_id"))
-      .limit(kSelect)
-      .persist()
-    out.count() // materialize the tiny selection, then release the features
-    feats.unpersist()
-    out
+      .limit(kSelect)))
   }
 
   /** LSH banding parameter sweep — the tuning table a curation owner reads
@@ -4239,8 +4161,8 @@ object LlmOps {
     *    banding actually produces (hot buckets above `maxBucket` excluded
     *    and counted, same contract as [[minhashCandidatesFrom]]).
     *
-    * Scale shape: the corpus is shingled and signed ONCE (both tables
-    * persisted, released before return); each config adds one narrow
+    * Scale shape: the corpus is shingled and signed ONCE (the signature
+    * table cached, released before return); each config adds one narrow
     * band-hash map over the signature table, and all configs share ONE
     * (config, band)-keyed self-join — the sweep costs one extra shuffle
     * column over a single-config run, not configs× pipelines. The output
@@ -4254,16 +4176,15 @@ object LlmOps {
       "minhashTune configs must all split the same signature length")
     val k = configs.head match { case (b, r) => b * r }
     val sess = docs.sparkSession
-    val sh = shingleTable(docs, idCol)
-    val sigT = withMinhashSig(sh, k).select(col(idCol), col("sig")).persist()
+    val sigT = withMinhashSig(shingleTable(docs, idCol), k).select(col(idCol), col("sig"))
     val banded = configs.map { case (b, r) =>
       withBandHashes(sigT, b, r)
         .select(lit(b).as("nb"), lit(r).as("nr"), col(idCol),
           explode(col("bands")).as("band"))
-    }.reduce(_ unionByName _).persist()
+    }.reduce(_ unionByName _)
     val hot = banded.groupBy(col("nb"), col("nr"), col("band"))
       .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucket)
-      .select(col("nb"), col("nr"), col("band")).persist()
+      .select(col("nb"), col("nr"), col("band"))
     val ok = banded.join(hot, Seq("nb", "nr", "band"), "left_anti")
     val pairCounts = ok.select(col("nb"), col("nr"), col("band"),
         col(idCol).as("a"))
@@ -4276,7 +4197,8 @@ object LlmOps {
       .agg(count(lit(1)).as("n_hot_buckets"))
     import sess.implicits._
     val cfg = configs.toDF("nb", "nr")
-    val out = cfg
+    // the configs-row report materializes, then the caches are released
+    released(sigT, banded, hot)(materialized(cfg
       .join(pairCounts, Seq("nb", "nr"), "left")
       .join(hotCounts, Seq("nb", "nr"), "left")
       .select(col("nb").as("bands"), col("nr").as("rows_per_band"),
@@ -4290,11 +4212,7 @@ object LlmOps {
           col("nr").cast("double")), col("nb").cast("double"))).as("p090"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         coalesce(col("n_hot_buckets"), lit(0L)).as("n_hot_buckets"))
-      .orderBy(col("bands").desc)
-      .persist()
-    out.count() // materialize the configs-row report, then drop the caches
-    Seq(banded, hot, sigT, sh).foreach(_.unpersist())
-    out
+      .orderBy(col("bands").desc)))
   }
 
   // ---------------------------------------------------------------------
@@ -5048,7 +4966,7 @@ object LlmOps {
     val spark = a.sparkSession
     val shA = shingleTable(a, idCol)
     val shB = shingleTable(b, idCol)
-    try {
+    released(shA, shB) {
       val gA = shA.select(explode(col("shingles")).as("g")).distinct()
         .select(col("g"), lit(1L).as("in_a"), lit(0L).as("in_b"))
       val gB = shB.select(explode(col("shingles")).as("g")).distinct()
@@ -5076,7 +4994,7 @@ object LlmOps {
       val rows = report.collect() // 1 row by construction (two corpus folds)
       spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), report.schema)
-    } finally { shA.unpersist(); shB.unpersist(); () }
+    }
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020, the filter
@@ -5131,7 +5049,7 @@ object LlmOps {
           .when(col("avg_logp") <= col("t_hi"), lit("middle"))
           .otherwise(lit("head")).as("ppl_bucket"))
       .orderBy(col("doc_id"))
-    if (big) { val m = out.persist(); m.count(); scored.unpersist(); m } else out
+    if (big) released(scored)(materialized(out)) else out
   }
 
   /** Cluster-balanced diversity sampling (the coverage-sampling half of

@@ -26,20 +26,15 @@ object LlmQueries {
           col("lang"), col("source"), col("n_chars")))
 
   /** Near-duplicate cluster labels (doc_id, cluster_id) of `docs`: LSH
-    * candidate pairs over the shingle table, then connected components
-    * through `cluster`. Both caches are released before returning: the
-    * candidate pairs are materialized before the shingle table goes, and
-    * every clustering path consumes its pairs eagerly (the union-find
-    * collect, the star loop's checkpoints).
+    * candidate pairs, then connected components through `cluster`. The
+    * pairs are released before returning: every clustering path consumes
+    * them eagerly (the union-find collect, the star loop's checkpoints).
     */
   private def candidateClusters(
       docs: DataFrame,
       cluster: (DataFrame, String, DataFrame) => DataFrame): DataFrame = {
-    val sh = LlmOps.shingleTable(docs, "doc_id")
-    val pairs = try LlmOps.minhashCandidatesFrom(sh, "doc_id")
-      finally { sh.unpersist(); () }
-    try cluster(docs.select(col("doc_id")), "doc_id", pairs)
-    finally { pairs.unpersist(); () }
+    val pairs = LlmOps.minhashCandidates(docs, "doc_id")
+    LlmOps.released(pairs)(cluster(docs.select(col("doc_id")), "doc_id", pairs))
   }
 
   private val docsDupSql: String =
@@ -462,17 +457,9 @@ object LlmQueries {
         .orderBy(col("a"), col("b"))),
 
     // exact n-gram Jaccard over LSH candidates (verify step after banding)
-    "dedup_ngram_jaccard" -> ((s, d) => {
-      val docs = docsWithDups(t(s, d, "documents"))
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val cands = LlmOps.minhashCandidatesFrom(sh, "doc_id")
-      cands
-        .join(sh.select(col("doc_id").as("a"), col("shingles").as("sa")), "a")
-        .join(sh.select(col("doc_id").as("b"), col("shingles").as("sb")), "b")
-        .select(col("a"), col("b"), LlmOps.jaccard(col("sa"), col("sb")).as("jac"))
-        .filter(col("jac") >= 0.5)
-        .orderBy(col("a"), col("b"))
-    }),
+    "dedup_ngram_jaccard" -> ((s, d) =>
+      LlmOps.batchNearDups(docsWithDups(t(s, d, "documents")), "doc_id", 0.5)
+        .orderBy(col("a"), col("b"))),
 
     // edit-distance verify tier over the same LSH candidates: normalized
     // Levenshtein ≤ 0.2 (the byte-level near-dup check — catches small
@@ -494,8 +481,7 @@ object LlmQueries {
     // form; the oracle pins it.
     "dedup_edit_distance" -> ((s, d) => {
       val docs = docsWithDups(t(s, d, "documents"))
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val cands = LlmOps.minhashCandidatesFrom(sh, "doc_id")
+      val cands = LlmOps.minhashCandidates(docs, "doc_id")
       // the pair list broadcasts onto the text table, so the levenshtein
       // kernel runs in the TEXT side's stage — spread it (r15): on a
       // one-row-group corpus it is otherwise a single task

@@ -77,7 +77,7 @@ object DumpPlans {
       "bpe_encode" -> "BPE apply half (r15): the trained merge table applies to the DISTINCT-word table only — ≤20 stacked codegen'd graft_bpe_merge kernels over word-table-sized rows (the same Zipf collapse training rides), localCheckpointed once; the corpus-sized work is ONE exploded-words equi-join to the encoded table plus ONE map-combined per-doc aggregate; apply/train parity (apply_ok) is a word-table-sized join check, and the DuckDB oracle trains its own 20 rounds in SQL so every count is independently derived",
       "hybrid_search_rrf" -> "RRF hybrid retrieval (r15): each branch keeps its audited bounded shape — BM25's in-row term filter + map-combined tf agg + TakeOrdered, dense cosine's broadcast-query scan + TakeOrdered — so the corpus is never exchanged at row width on either side; the rank windows and the full-outer fusion join run on the two branch LISTS (≤ k·overfetch rows each, a CONSTANT — the single-partition WindowExec is bounded by the upstream limit, not by data)",
       "dsir_select" -> "DSIR importance resampling (r15): ONE corpus pass into the per-(doc, bucket) feature table (map-combined — ≤ B rows per doc survive each mapper), persisted and reused by the B-row bucket stats and the scoring join; the log-ratio table broadcasts (B = 64 rows), the Gumbel draw is a narrow md5 expression, selection is a TakeOrdered — the corpus never self-joins, never windows, and is never exchanged at row width; the dumped plan is the materialized top-k extraction (cache-release policy, the dedup_clusters pattern)",
-      "minhash_tune" -> "LSH parameter sweep (r15): the corpus is shingled and 16-perm-signed ONCE (persisted); each (bands, r) config adds one narrow band-hash map over the signature table and ALL configs share ONE (config, band)-keyed self-join — the sweep costs one extra shuffle column, not configs× pipelines; hot buckets cap out of pairing exactly as minhashCandidatesFrom; the dumped plan is the 4-row report extraction (cache-release policy)",
+      "minhash_tune" -> "LSH parameter sweep (r15): the corpus is shingled and 16-perm-signed ONCE (cached for the call); each (bands, r) config adds one narrow band-hash map over the signature table and ALL configs share ONE (config, band)-keyed self-join — the sweep costs one extra shuffle column, not configs× pipelines; hot buckets cap out of pairing exactly as minhashCandidatesFrom; the dumped plan is the 4-row report extraction (cache-release policy)",
       "ccnet_buckets" -> "CCNet perplexity terciles (r15): ONE codegen'd gram explode feeds both the reference count-agg and the scoring join (persisted once above the lmScore crossover); vocab (≤vocabK rows) and the 1-row reference mass broadcast; the per-doc avg shuffles once on doc_id; thresholds are a lang-cardinality agg broadcast back as an equi-join — the corpus never sorts (exact terciles come from element access into per-lang score lists, percentile_approx is the documented 100 TB swap)",
       "cluster_balanced_sample" -> "k-means coverage sample (r15): training/assignment are the audited kmeans shapes (c-row centroid broadcast, narrow 8-byte argmax partials); the per-cell cap is a graft_topk bounded heap inside ONE hash-aggregate — ≤cap entries per cell per mapper, never a corpus window — and the output is ≤ c·cap rows with per-cell population from the same agg")
 

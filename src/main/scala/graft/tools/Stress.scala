@@ -180,10 +180,8 @@ object Stress {
         .filter(col("cnt") > 1).agg(count(lit(1))).collect()
     }
     bench(s"minhash LSH candidates ${nDocs / 1000000}M docs", nDocs) {
-      val sh = graft.ext.LlmOps.shingleTable(docs, "doc_id")
-      try graft.ext.LlmOps.minhashCandidatesFrom(sh, "doc_id")
-        .agg(count(lit(1))).collect()
-      finally sh.unpersist()
+      val pairs = graft.ext.LlmOps.minhashCandidates(docs, "doc_id")
+      try pairs.agg(count(lit(1))).collect() finally pairs.unpersist()
     }
     bench(s"winnow fingerprints ${nDocs / 1000000}M docs", nDocs) {
       graft.ext.LlmOps.withWinnowFingerprints(docs)
@@ -720,17 +718,12 @@ object Stress {
     }
     // gate-engagement proof for the report: count the candidate pairs the
     // gated run saw and record the gate's verdict at the default budget.
-    // (Runs AFTER every timed row: bandedSignatures leaves its signature
-    // cache behind until session end — probe use only.)
-    val nCand = {
-      val cSh = graft.ext.LlmOps.shingleTable(advCorpus, "doc_id")
-      val bSh = graft.ext.LlmOps.shingleTable(advBench, "doc_id")
-      try graft.ext.LlmOps.bandedSignatures(cSh, "doc_id")
-        .join(graft.ext.LlmOps.bandedSignatures(bSh, "doc_id")
-          .withColumnRenamed("doc_id", "bench_id"), "band")
-        .select(col("doc_id"), col("bench_id")).distinct().count()
-      finally { cSh.unpersist(); bSh.unpersist(); () }
-    }
+    val nCand = graft.ext.LlmOps
+      .bandedSignatures(graft.ext.LlmOps.shingleTable(advCorpus, "doc_id"), "doc_id")
+      .join(graft.ext.LlmOps
+        .bandedSignatures(graft.ext.LlmOps.shingleTable(advBench, "doc_id"), "doc_id")
+        .withColumnRenamed("doc_id", "bench_id"), "band")
+      .select(col("doc_id"), col("bench_id")).distinct().count()
     val gateVerdict =
       if (graft.ext.LlmOps.fitsCandBroadcastGate(nCand, 64L << 20))
         "ADMITS them (gate did NOT engage — investigate)"

@@ -74,21 +74,18 @@ object VarianceProbe {
             .otherwise(col("text")).as("text"),
           col("lang"), col("source"), col("n_chars")))
     med5("clusters stage: shingles") {
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      sh.agg(sum(size(col("shingles")))).collect()
-      sh.unpersist()
+      LlmOps.shingleTable(docs, "doc_id").agg(sum(size(col("shingles")))).collect()
     }
     med5("clusters stage: pairs") {
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      LlmOps.minhashCandidatesFrom(sh, "doc_id").agg(count(lit(1))).collect()
-      sh.unpersist()
+      val pairs = LlmOps.minhashCandidates(docs, "doc_id")
+      pairs.agg(count(lit(1))).collect()
+      pairs.unpersist()
     }
     med5("clusters stage: collapse") {
-      val sh = LlmOps.shingleTable(docs, "doc_id")
-      val pairs = LlmOps.minhashCandidatesFrom(sh, "doc_id").persist()
+      val pairs = LlmOps.minhashCandidates(docs, "doc_id")
       noop(LlmOps.duplicateClusters(docs.select(col("doc_id")), "doc_id",
         pairs))
-      pairs.unpersist(); sh.unpersist()
+      pairs.unpersist()
     }
     spark.stop()
   }

@@ -44,44 +44,41 @@ class LlmOpsSpec extends SparkSpec {
       (7L, "completely different content about catalyst and tungsten engines")
     val d = docs(rows: _*)
     val sh = LlmOps.shingleTable(d, "doc_id")
-    try {
-      sh.count() // materialize the shingle cache OUTSIDE the audited windows
-      var out: (org.apache.spark.sql.DataFrame, Long) = null
-      val newJobs = countJobs("cov-folded") {
-        out = LlmOps.candidatesWithCoverage(sh, "doc_id", maxBucket = 3)
-      }
-      val (pairs, capped) = out
-      assert(capped > 0 && pairs.count() == 0,
-        "cap=3 must exclude the 6-doc buckets and report them")
-      // the r7 shape, replicated: the bucket-count aggregation ran once for
-      // the capped count and AGAIN inline as the pair join's semi filter
-      val oldJobs = countJobs("cov-r7-shape") {
-        val banded = LlmOps.bandedSignatures(sh, "doc_id").persist()
-        val counts = banded.groupBy("band").count()
-        assert(counts.filter(col("count") > 3).count() > 0)
-        val small = banded.join(counts.filter(col("count") <= 3).select("band"), "band")
-        val p = small.as("x").join(small.as("y"), "band")
-          .filter(col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-          .distinct().persist()
-        assert(p.count() == 0)
-        banded.unpersist(); p.unpersist()
-      }
-      assert(newJobs < oldJobs,
-        s"folding the capped count must save jobs: $newJobs vs r7-shape $oldJobs")
-      // and the pair join's own plan carries no count aggregation at all —
-      // the only Aggregate left is the pair distinct
-      import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-      import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-      val countAggs = pairs.queryExecution.optimizedPlan.collect {
-        case a: Aggregate if a.aggregateExpressions.exists(_.find {
-          case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[Count]
-          case _ => false
-        }.isDefined) => a
-      }
-      assert(countAggs.isEmpty,
-        s"the pair join must not re-aggregate the band table:\n${pairs.queryExecution.optimizedPlan}")
-    } finally { sh.unpersist(); () }
+    var out: (org.apache.spark.sql.DataFrame, Long) = null
+    val newJobs = countJobs("cov-folded") {
+      out = LlmOps.candidatesWithCoverage(sh, "doc_id", maxBucket = 3)
+    }
+    val (pairs, capped) = out
+    assert(capped > 0 && pairs.count() == 0,
+      "cap=3 must exclude the 6-doc buckets and report them")
+    // the r7 shape, replicated: the bucket-count aggregation ran once for
+    // the capped count and AGAIN inline as the pair join's semi filter
+    val oldJobs = countJobs("cov-r7-shape") {
+      val banded = LlmOps.bandedSignatures(sh, "doc_id").persist()
+      val counts = banded.groupBy("band").count()
+      assert(counts.filter(col("count") > 3).count() > 0)
+      val small = banded.join(counts.filter(col("count") <= 3).select("band"), "band")
+      val p = small.as("x").join(small.as("y"), "band")
+        .filter(col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+        .distinct().persist()
+      assert(p.count() == 0)
+      banded.unpersist(); p.unpersist()
+    }
+    assert(newJobs < oldJobs,
+      s"folding the capped count must save jobs: $newJobs vs r7-shape $oldJobs")
+    // and the pair join's own plan carries no count aggregation at all —
+    // the only Aggregate left is the pair distinct
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val countAggs = pairs.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.find {
+        case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[Count]
+        case _ => false
+      }.isDefined) => a
+    }
+    assert(countAggs.isEmpty,
+      s"the pair join must not re-aggregate the band table:\n${pairs.queryExecution.optimizedPlan}")
   }
 
   test("dedupCorpus surfaces capped-bucket coverage in the corpus output") {
@@ -682,6 +679,22 @@ class LlmOpsSpec extends SparkSpec {
     assert(out(4L) == 4L, s"unlinked item must self-label: $out")
   }
 
+  test("multimodal clusters: a failing channel throws and releases every cache") {
+    // the image channel cannot hash a string embedding, while the text,
+    // audio and video channels run; the call must fail only after both
+    // channel threads finished, with the payload cache and the text pairs
+    // released
+    val prose = "the quick brown fox jumps over the lazy dog again and again today"
+    val d = docs(1L -> prose, 2L -> prose,
+      3L -> "entirely different words about spark catalyst tungsten codegen")
+    val imgs = Seq((1L, "not an embedding")).toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    intercept[Exception](LlmOps.multimodalClusters(d, imgs).collect())
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"a failed call left persisted RDDs: $leaked")
+  }
+
   test("multimodal clusters: a pair linked ONLY by shared video frames co-clusters") {
     // r10 verdict item 3: videoFrameNearDups existed but its edges never
     // reached the cross-modal pass. Construct a pair no OTHER channel
@@ -808,17 +821,27 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("cluster registry keys release their shingle and pair caches") {
-    // each key's only lasting state is star's result checkpoint
-    // (dedup_clusters_dist); the shingle table and the candidate pairs
-    // are released before the result is returned
+    // each key's only lasting state is the result it hands back (a
+    // materialized frame, or star's checkpoint for dedup_clusters_dist):
+    // shingle tables, signature and band tables, candidate pairs and
+    // every other intermediate are released before the result returns
     val sc = spark.sparkContext
-    spark.catalog.clearCache()
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val kept = Map("dedup_clusters" -> 0, "dedup_clusters_dist" -> 1,
-      "dedup_cluster_stats" -> 0, "dedup_weights" -> 0)
+      "dedup_cluster_stats" -> 0, "dedup_weights" -> 0,
+      "dedup_ngram_jaccard" -> 1, "dedup_edit_distance" -> 1,
+      "training_manifest" -> 1, "decontaminate_purge" -> 0,
+      "dedup_multimodal" -> 0, "dedup_minhash" -> 1,
+      "decontaminate_bloom" -> 1, "decontaminate_minhash" -> 1,
+      "dedup_incremental" -> 1, "dedup_semantic" -> 1,
+      "dsir_select" -> 1, "minhash_tune" -> 1)
     // the results stay referenced: the persistent-RDD registry holds its
     // RDDs weakly, so a collected frame's checkpoint could vanish mid-count
     val results = kept.toSeq.map { case (key, grows) =>
+      // every key starts from an empty cache: two keys materializing the
+      // same plan (dedup_minhash's pairs are dedup_edit_distance's
+      // candidates) must not share one cache entry
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       val before = sc.getPersistentRDDs.size
       val df = graft.SparkEntry.queries(key)(spark, sf("sf0.001"))
       assert(df.collect().nonEmpty, key)

@@ -41,8 +41,8 @@ class BroadcastGateLintSpec extends AnyFunSuite {
       "LlmOps.decontaminate: benchmark n-gram set — benchmark suites are contractually small (plan-audited)"),
     ("broadcast(benchGramsAttr)",
       "LlmOps.contaminationReport: attributed benchmark n-gram table — same bench-suite-small contract as decontaminate; beyond-broadcast suites go through decontaminateBloom first"),
-    ("corpus.join(broadcast(ids), Seq(idCol), \"left_anti\")",
-      "LlmOps.purge: executes only in the n <= flaggedBroadcastBudgetBytes/BytesPerBroadcastId branch — the byte gate is the enclosing if"),
+    ("corpus.join(broadcast(idRel), Seq(idCol), \"left_anti\")",
+      "LlmOps.purge: a local relation of the collected flagged ids — executes only when at most flaggedBroadcastBudgetBytes/BytesPerBroadcastId ids came back from the limit(budget + 1) collect; the byte gate is the enclosing if"),
     ("acc.crossJoin(broadcast(df.agg(nd(c).as(s\"__${c}__nd\"))))",
       "Ops.profileTable exact regime: groupless global aggregate — exactly 1 row per column subtree"),
     ("broadcast(bBand",

@@ -39,20 +39,34 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** The physical plan that computed a materialized (persisted) result:
+    * its executedPlan is only a scan of the cache, so read the cached
+    * relation's own plan, with every AQE query stage inlined.
+    */
+  private def cachedPhysical(df: DataFrame): SparkPlan = {
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val cached = df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedPlan
+    }.getOrElse(fail(s"not a cached frame:\n${df.queryExecution.withCachedData}"))
+    def inline(p: SparkPlan): SparkPlan = p.transformUp {
+      case a: AdaptiveSparkPlanExec => inline(a.executedPlan)
+      case s: QueryStageExec => inline(s.plan)
+    }
+    inline(cached)
+  }
+
   test("audit: the LIVE LSH candidate join is an equi-join, no cartesian") {
-    // the registry queries eagerly materialize pairs (cache-release
-    // policy), so their executedPlan shows a cached scan — audit the lazy
-    // plan instead via materialize=false
+    // the pairs are materialized (cache-release policy), so audit the plan
+    // that computed them
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val sh = graft.ext.LlmOps.shingleTable(docs, "doc_id")
+    val pairs = graft.ext.LlmOps.minhashCandidates(docs, "doc_id")
     try {
-      val plan = graft.ext.LlmOps
-        .minhashCandidatesFrom(sh, "doc_id", materialize = false)
-        .queryExecution.executedPlan.toString
+      val plan = cachedPhysical(pairs).toString
       assert(!plan.contains("CartesianProduct"), plan)
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
       assert(plan.contains("band"), plan)
-    } finally { sh.unpersist(); () }
+    } finally { pairs.unpersist(); () }
   }
 
   test("audit: simhash dedup family is cache-free — one job, no InMemoryRelation") {
@@ -108,10 +122,9 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val bench = docs.filter(col("doc_id") % 10 === 0)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    val qe = graft.ext.LlmOps
-      .decontaminateBloom(corpus, bench, "doc_id", 0.5, materialize = false)
-      .queryExecution
-    val plan = qe.executedPlan.toString
+    val out = graft.ext.LlmOps.decontaminateBloom(corpus, bench, "doc_id", 0.5)
+    val phys = try cachedPhysical(out) finally { out.unpersist(); () }
+    val plan = phys.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("graft_might_contain"),
       s"the bloom prefilter must survive optimization:\n$plan")
@@ -124,10 +137,6 @@ class PlanAuditSpec extends SparkSpec {
     def probeFilters(p: SparkPlan) = p.collect {
       case f: FilterExec
         if f.condition.find(_.isInstanceOf[graft.functions.BloomMightContain]).isDefined => f
-    }
-    val phys = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
     }
     val joins = phys.collect { case j: BaseJoinExec => j }
     assert(joins.nonEmpty, s"expected a verify join:\n$plan")
@@ -206,15 +215,13 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val cSh = graft.ext.LlmOps.shingleTable(docs.filter(col("doc_id") % 10 =!= 0), "doc_id")
     val bSh = graft.ext.LlmOps.shingleTable(docs.filter(col("doc_id") % 10 === 0), "doc_id")
-    try {
-      import spark.implicits._
-      val cand = Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "bench_id")
-      val plan = physical(graft.ext.LlmOps
-        .minhashVerify(cSh, bSh, cand, "doc_id", 0.5, broadcastCands = true))
-      assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-        s"broadcast-path verify must not exchange anything:\n$plan")
-      assert(plan.toString.contains("BroadcastHashJoin"), plan.toString)
-    } finally { cSh.unpersist(); bSh.unpersist(); () }
+    import spark.implicits._
+    val cand = Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "bench_id")
+    val plan = physical(graft.ext.LlmOps
+      .minhashVerify(cSh, bSh, cand, "doc_id", 0.5, broadcastCands = true))
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"broadcast-path verify must not exchange anything:\n$plan")
+    assert(plan.toString.contains("BroadcastHashJoin"), plan.toString)
   }
 
   test("audit: decontaminate_minhash fallback verifies via a shuffled equi-join") {
@@ -242,10 +249,7 @@ class PlanAuditSpec extends SparkSpec {
         s"candidate verify must shuffle-join on the doc id:\n$plan")
       assert(plan.toString.indexOf("CartesianProduct") < 0, plan.toString)
       assert(plan.toString.indexOf("BroadcastNestedLoopJoin") < 0, plan.toString)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      cSh.unpersist(); bSh.unpersist(); ()
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 
   test("audit: dedup_image_phash pairing stays bucketed — grouped, join-free") {
@@ -453,13 +457,11 @@ class PlanAuditSpec extends SparkSpec {
   test("audit: LSH band join key is int64, not string") {
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val sh = graft.ext.LlmOps.shingleTable(docs, "doc_id")
-    try {
-      val banded = graft.ext.LlmOps.bandedSignatures(sh, "doc_id")
-      assert(banded.schema("band").dataType ==
-        org.apache.spark.sql.types.LongType,
-        "the LSH self-join key must be an 8-byte integer, not a hex string")
-      assert(banded.select(col("band")).distinct().count() > 1)
-    } finally { sh.unpersist(); () }
+    val banded = graft.ext.LlmOps
+      .bandedSignatures(graft.ext.LlmOps.shingleTable(docs, "doc_id"), "doc_id")
+    assert(banded.schema("band").dataType ==
+      org.apache.spark.sql.types.LongType,
+      "the LSH self-join key must be an 8-byte integer, not a hex string")
+    assert(banded.select(col("band")).distinct().count() > 1)
   }
 }
