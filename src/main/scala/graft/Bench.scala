@@ -38,8 +38,9 @@ object Bench {
     val iterations = sys.env.get("SPARK_GRAFT_BENCH_ITERS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3)
     // Discarded warmup attempt per key (r14, adjudicating the r12-r13
-    // sim_search_pq variance): VarianceProbe measured its first sample at
-    // 7.6s decaying monotonically to a 2.5s steady state with per-stage
+    // sim_search_pq variance): VarianceProbe (last present at commit
+    // 511b9b3) measured its first sample at 7.6s decaying monotonically
+    // to a 2.5s steady state with per-stage
     // splits summing to ~1.9s — the spread is PLAN-ANALYSIS + CODEGEN
     // warmup of the registry's deepest expression trees, not data-path
     // work, and whether the median-of-3 caught a cold sample was the

@@ -656,57 +656,86 @@ object LlmOps {
   def fitsDriverGate(nEdges: Long, budgetBytes: Long): Boolean =
     nEdges <= budgetBytes / BytesPerDriverEdge
 
-  /** Connected components over candidate duplicate pairs: every doc gets
-    * `cluster_id` = the smallest doc id reachable through pair edges (its
+  /** Star contraction's round cap; O(log² n) rounds stay far below it on
+    * every graph the specs pin (a 2000-node chain included).
+    */
+  private val StarMaxRounds = 25
+
+  /** Connected components over candidate duplicate pairs: every id gets
+    * `cluster_id` = the smallest id reachable through pair edges (its
     * own id if unpaired). Downstream dedup keeps one row per cluster_id.
+    * Ids must be numeric: a null or non-numeric `a`/`b` fails with
+    * "id is not numeric" on both paths.
     *
     * Candidate pairs are orders of magnitude smaller than the corpus by
     * construction (they're the near-duplicates). Below the
-    * [[fitsDriverGate]] byte budget, exact union-find on the driver + a
-    * broadcast label join beats a multi-round distributed fixpoint (each
-    * round is several scheduled jobs); above it, the edges stay
-    * distributed and [[distributedClustersStar]] contracts them in
-    * O(log² n) rounds on any topology. Ids must be numeric on both paths.
+    * [[fitsDriverGate]] byte budget the pairs are collected, an exact
+    * union-find runs on the driver and the labels join back as a
+    * broadcast local table: a count, a collect and the label join. Above
+    * it the edges stay distributed and star contraction
+    * ([[starClusters]]) labels them in O(log² n) rounds on any topology,
+    * each round several scheduled jobs. A zero budget forces the star
+    * rounds. The star result is materialized and owned by the caller
+    * (`unpersist()` releases it); the union-find result holds no cache.
     */
-  def duplicateClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
-                        driverEdgeBudgetBytes: Long = 512L << 20): DataFrame = {
-    if (fitsDriverGate(pairs.count(), driverEdgeBudgetBytes)) {
-      val edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val next = parent(c); parent(c) = r; c = next }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val labels = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-        .map(x => (x, find(x)))
-      val spark = ids.sparkSession
-      import spark.implicits._
-      val labDf = labels.toSeq.toDF(idCol, "cluster_id")
-      return ids.select(col(idCol)).distinct()
-        .join(broadcast(labDf), Seq(idCol), "left_outer")
-        .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+  def distributedClustersStar(ids: DataFrame, idCol: String, pairs: DataFrame,
+                              driverEdgeBudgetBytes: Long = 512L << 20): DataFrame = {
+    // fail LOUDLY on a non-numeric (or null) id, before greatest/least
+    // (which skip nulls) or a getLong can see it: the long cast yields
+    // null and the star rounds' null-dropping filters would silently
+    // discard every such edge, self-labelling its docs (r11 ADVICE)
+    def asLongId(c: Column): Column =
+      when(c.cast("long").isNull,
+        raise_error(concat(
+          lit("distributedClustersStar: id is not numeric: "),
+          coalesce(c.cast("string"), lit("null")))))
+        .otherwise(c.cast("long"))
+    val edges = pairs.select(asLongId(col("a")).as("a"), asLongId(col("b")).as("b"))
+    // the RDD count is one job; Dataset.count's global aggregate is two
+    // under AQE (its shuffle stage, then the final stage)
+    if (fitsDriverGate(pairs.rdd.count(), driverEdgeBudgetBytes))
+      unionFindClusters(ids, idCol, edges)
+    else starClusters(ids, idCol, edges)
+  }
+
+  /** Exact min-id labels by a driver union-find over the collected (long)
+    * `edges`, joined to the ids as a broadcast local table.
+    */
+  private def unionFindClusters(ids: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
+    val local = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val next = parent(c); parent(c) = r; c = next }
+      r
     }
-    distributedClustersStar(ids, idCol, pairs)
+    local.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    val labels = local.flatMap { case (a, b) => Seq(a, b) }.distinct
+      .map(x => (x, find(x)))
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val labDf = labels.toSeq.toDF(idCol, "cluster_id")
+    ids.select(col(idCol)).distinct()
+      .join(broadcast(labDf), Seq(idCol), "left_outer")
+      .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
   }
 
   /** (idCol, cluster_id) near-duplicate clusters of `docs` and the number
     * of LSH buckets the `maxBucket` cap excluded. The candidate pairs are
-    * released once clustered: every [[duplicateClusters]] path consumes
-    * them eagerly (the union-find collect, the star loop's checkpoints).
+    * released once clustered: both [[distributedClustersStar]] paths
+    * consume them eagerly (the union-find collect, the star loop's
+    * checkpoints).
     */
   private def clustersWithCoverage(docs: DataFrame, idCol: String,
                                    maxBucket: Int): (DataFrame, Long) = {
     val (pairs, capped) =
       candidatesWithCoverage(shingleTable(docs, idCol), idCol, maxBucket = maxBucket)
-    (released(pairs)(duplicateClusters(docs.select(col(idCol)), idCol, pairs)), capped)
+    (released(pairs)(distributedClustersStar(docs.select(col(idCol)), idCol, pairs)), capped)
   }
 
   /** The dedup end product with coverage accounting: one canonical (min-id)
@@ -1009,8 +1038,8 @@ object LlmOps {
     * text, B ↔ C by image ⇒ one cluster). This is the collapse step a
     * real multimodal corpus needs: per-modality pair generators each see
     * only their own channel, the union of their edges feeds ONE
-    * connected-components pass ([[duplicateClusters]]: driver union-find
-    * under the edge gate, star contraction above it). Output
+    * connected-components pass ([[distributedClustersStar]]: driver
+    * union-find under the edge gate, star contraction above it). Output
     * (idCol, cluster_id) over the union of both tables' ids; cluster_id
     * = the component's smallest id, singletons label themselves.
     *
@@ -1070,7 +1099,7 @@ object LlmOps {
     val ids = docs.select(col(idCol))
       .unionByName(images.select(col("vec_id").as(idCol)))
       .distinct()
-    released(edges)(duplicateClusters(ids, idCol, edges))
+    released(edges)(distributedClustersStar(ids, idCol, edges))
   }
 
   /** Measured packing crossover (STRESS.md PackProbe table: single-window
@@ -3643,14 +3672,14 @@ object LlmOps {
 
   /** Distributed connected components by alternating LARGE-STAR /
     * SMALL-STAR rounds (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC 2014 §3) — the fully-distributed tier of
-    * the [[duplicateClusters]] family, which runs it above its driver
-    * gate. No driver state AT ALL: where the union-find path collects the
-    * (byte-gated) edge list and label propagation would need one round
-    * per unit of graph DIAMETER (a 10⁶-doc near-dup chain = 10⁶ rounds —
-    * chains are exactly what boilerplate-mutation near-dups produce), star
-    * contraction converges in O(log² n) rounds on ANY topology because
-    * each round halves component height by pointer doubling.
+    * MapReduce and Beyond", SoCC 2014 §3) over long (a, b) `edges` — the
+    * path [[distributedClustersStar]] takes above its driver gate. The
+    * edges never reach the driver: where label propagation would need one
+    * round per unit of graph DIAMETER (a 10⁶-doc near-dup chain = 10⁶
+    * rounds — chains are exactly what boilerplate-mutation near-dups
+    * produce), star contraction converges in O(log² n) rounds on ANY
+    * topology because each round halves component height by pointer
+    * doubling.
     *
     * One round = three edge-set-sized exchanges in four Spark jobs:
     * large-star links every node's strictly-LARGER neighbors to the
@@ -3664,12 +3693,12 @@ object LlmOps {
     * xxhash64 (collision ~2^-64 per round) — no fingerprint job. At the
     * fixpoint every component is a star centered at its minimum id, so a
     * non-root's label is its ONE converged edge and roots label themselves
-    * (spec-pinned against [[duplicateClusters]] and union-find). Superseded
-    * rounds' checkpoints are released; only the result's stays persisted.
+    * (spec-pinned against the union-find path and a reference union-find).
+    * The labels are materialized and every round's checkpoint, the last
+    * included, is released, so the returned frame is the only state left.
     * On a cluster, swap localCheckpoint for a reliable checkpoint dir.
     */
-  def distributedClustersStar(ids: DataFrame, idCol: String, pairs: DataFrame,
-                              maxIters: Int = 25): DataFrame = {
+  private def starClusters(ids: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
     val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     def largeStar(e: DataFrame): DataFrame =
       e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -3682,20 +3711,9 @@ object LlmOps {
           struct(col("u"), col("m").as("v")))))
         .filter(col("u") =!= col("v"))
         .distinct()
-    // fail LOUDLY on a non-numeric (or null) id: the long cast yields
-    // null and the downstream null-dropping filters would silently
-    // discard every such edge, self-labelling all docs — the driver
-    // union-find path fails loudly on the same input, and the two
-    // operators share a contract (r11 ADVICE)
-    def asLongId(c: Column): Column =
-      when(c.cast("long").isNull,
-        raise_error(concat(
-          lit("distributedClustersStar: id is not numeric: "),
-          coalesce(c.cast("string"), lit("null")))))
-        .otherwise(c.cast("long"))
-    def checkpoint(edges: DataFrame): (DataFrame, Map[String, Any]) = {
+    def checkpoint(in: DataFrame): (DataFrame, Map[String, Any]) = {
       val fp = org.apache.spark.sql.Observation()
-      val cp = edges.observe(fp, count(lit(1)), sum(xxhash64(col("u"), col("v"))
+      val cp = in.observe(fp, count(lit(1)), sum(xxhash64(col("u"), col("v"))
         .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).localCheckpoint(true)
       (cp, fp.get)
     }
@@ -3704,13 +3722,12 @@ object LlmOps {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
-    var (e, fp) = checkpoint(pairs
-      .select(asLongId(greatest(col("a"), col("b"))).as("u"),
-        asLongId(least(col("a"), col("b"))).as("v"))
+    var (e, fp) = checkpoint(edges
+      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
     var iters = 0
     var converged = false
-    while (!converged && iters < maxIters) {
+    while (!converged && iters < StarMaxRounds) {
       val (next, fpNext) = checkpoint(smallStar(largeStar(e)))
       converged = fpNext == fp
       release(e)
@@ -3718,12 +3735,13 @@ object LlmOps {
       fp = fpNext
       iters += 1
     }
-    if (!converged) release(e)
-    require(converged, s"star contraction did not converge in $maxIters rounds")
-    ids.select(col(idCol)).distinct()
-      .join(e.select(col("u").as(idCol), col("v").as("cluster_id")),
-        Seq(idCol), "left_outer")
-      .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+    try {
+      require(converged, s"star contraction did not converge in $StarMaxRounds rounds")
+      materialized(ids.select(col(idCol)).distinct()
+        .join(e.select(col("u").as(idCol), col("v").as("cluster_id")),
+          Seq(idCol), "left_outer")
+        .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id")))
+    } finally release(e)
   }
 
   /** Cluster-size histogram over near-duplicate cluster labels — the
@@ -3891,7 +3909,7 @@ object LlmOps {
     * never depends on the regime (spec-pinned equal outputs).
     *
     * `idCol` is a PK per the diff family's contract (non-null, unique);
-    * like [[duplicateClusters]], a null id fails loudly in the small
+    * like [[distributedClustersStar]], a null id fails loudly in the small
     * regime rather than silently diverging between regimes.
     */
   def purgeByIds(corpus: DataFrame, requests: DataFrame, idCol: String): DataFrame = {
@@ -4278,7 +4296,7 @@ object LlmOps {
     * BPE's rounds are inherently sequential, so R rounds cost R scheduled
     * scans (measured 69 s for 20 rounds at the sf1 tier vs ~2 s on the
     * driver) — while production vocabularies need thousands of rounds.
-    * This is the [[duplicateClusters]] pattern: exact driver compute below
+    * This is the [[distributedClustersStar]] pattern: exact driver compute below
     * a byte gate, the distributed fixpoint above it.
     */
   def bpeFitsDriver(nWords: Long, totalChars: Long,

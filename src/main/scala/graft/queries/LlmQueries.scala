@@ -612,17 +612,18 @@ object LlmQueries {
     // the keep-one-per-duplicate-cluster step after candidate generation
     "dedup_clusters" -> ((s, d) =>
       candidateClusters(docsWithDups(t(s, d, "documents")),
-        LlmOps.duplicateClusters(_, _, _))
+        LlmOps.distributedClustersStar(_, _, _))
         .orderBy(col("doc_id"))),
 
-    // fully-distributed cluster labels: alternating large-star/small-star
-    // contraction (SoCC'14) — NO driver state, O(log² n) rounds on ANY
-    // topology (label propagation needs diameter rounds; a 10⁶-doc
-    // near-dup CHAIN is its worst case and this tier's design case).
-    // Same min-id labels as dedup_clusters — same oracle.
+    // the same operator with a zero driver budget, so the pairs never
+    // reach the driver: alternating large-star/small-star contraction
+    // (SoCC'14), O(log² n) rounds on ANY topology (label propagation
+    // needs diameter rounds; a 10⁶-doc near-dup CHAIN is its worst case
+    // and this path's design case). Same min-id labels as dedup_clusters
+    // — same oracle, so the oracle keeps checking the star rounds.
     "dedup_clusters_dist" -> ((s, d) =>
       candidateClusters(docsWithDups(t(s, d, "documents")),
-        LlmOps.distributedClustersStar(_, _, _))
+        LlmOps.distributedClustersStar(_, _, _, driverEdgeBudgetBytes = 0L))
         .orderBy(col("doc_id"))),
 
     // the dedup AUDIT report: cluster-size histogram + the doc share a
@@ -631,7 +632,7 @@ object LlmQueries {
     "dedup_cluster_stats" -> ((s, d) =>
       LlmOps.clusterSizeStats(
         candidateClusters(docsWithDups(t(s, d, "documents")),
-          LlmOps.duplicateClusters(_, _, _)),
+          LlmOps.distributedClustersStar(_, _, _)),
         "doc_id")),
 
     // soft dedup: keep EVERY doc but weight it 1/cluster_size, so a
@@ -644,7 +645,7 @@ object LlmQueries {
     // key, and no step holds a cluster in one task.
     "dedup_weights" -> ((s, d) => {
       val clusters = candidateClusters(docsWithDups(t(s, d, "documents")),
-        LlmOps.duplicateClusters(_, _, _))
+        LlmOps.distributedClustersStar(_, _, _))
       val sizes = clusters.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cluster_size"))
       clusters.join(sizes, Seq("cluster_id"))

@@ -49,7 +49,7 @@ object DumpPlans {
       "sim_search_ivfpq" -> "IVFADC (r11): the coarse quantizer's nprobe probed-cell ids, ranked on the driver over the local centroid table, filter the (vec_id, cid, codes) index as `cid IN (...)` literals (over a cid-partitioned store read that filter partition-prunes), the ADC scan ranks only those cells' codes, rescore joins the candidate ids broadcast; the only data-sized exchange anywhere is the BUILD-time assignment argmax combine, paid once per corpus snapshot",
       "training_manifest" -> "end-to-end composition (r11): every stage keeps its standalone plan shape — the LSH keeper election's cached signature/cluster passes, the decontaminate broadcast-gated benchmark grams, the byte-gated purge anti-join, then the token gate and shard assignment as narrow per-row maps over the survivor stream; composing adds NO new shuffle beyond the stages' own",
       "dedup_paragraph" -> "CCNet paragraph dedup (r11): segment explode is a narrow generator; the corpus-wide frequency pass is a map-combined hash agg on the segment hash (a 10⁹×-duplicated boilerplate paragraph collapses to one row per map task BEFORE the shuffle) and the count attach is an AQE-splittable equi-join — the two shapes the gram-hash window could never use; reassembly groups on the doc id, bounded by doc length",
-      "dedup_clusters_dist" -> "star-contraction CC (r11): the dumped plan is the final label extraction — per-round plans are localCheckpoint-truncated (each round references its input several times; without truncation the logical plan doubles per round), so the printed tree stays round-count-independent; every round is two edge-set-sized equi-join/agg shuffles, no driver state, no window",
+      "dedup_clusters_dist" -> "star-contraction CC (r11): the key passes a zero driver budget, so distributedClustersStar runs its star rounds instead of the driver union-find; each round is two per-node-minimum windows and a distinct over the edge set, localCheckpoint-truncated (each round references its input several times; without truncation the logical plan doubles per round) with the convergence fingerprint observed on the checkpoint pass; the labels are materialized, so the dumped plan is a scan of the cached labels and stays round-count-independent",
       "dedup_edit_distance" -> "Levenshtein verify tier (r11): candidates come from the SAME banded LSH equi-join minhash uses; the O(len²) distance evaluates inline (codegen'd levenshtein) on candidate pairs only — the corpus text joins to the pair list by id, never self-joins",
       "quality_histogram" -> "score histogram (r11): inherits lmScore's plan (narrow gram explode, charset-bounded count agg, 1-row total attach); the histogram itself is one map-combined agg on floor(score) — fixed-width buckets, never an ntile (no global sort)",
       "distinct_users_sketch" -> "persisted-sketch distinct (r11, envelope r12): per-day HLL sketches build in one hash agg (datasketches buffers combine map-side), the union agg merges |days| KB-sized sketches — the events table is never re-shuffled; at 100 TB the daily sketches persist and the merge reads NO events. The registry output adds an exact countDistinct harness pass (1-row × 1-row BNLJ attach) so the driver gate sees a three-axis row — verification cost, not the scale path",
@@ -71,7 +71,7 @@ object DumpPlans {
       "connector_agg_pushdown" -> "DSv2 aggregate pushdown (r13): the pushed branch is a bare projection over the source's ONE pre-aggregated row — no aggregate node, no exchange; the unpushed harness branch keeps its repartition + two-stage aggregate, and the two 1-row results meet in a bounded BNLJ",
       "ann_index_append" -> "ANN delta maintenance (r13; retrain-realism + drift recording r14): the dumped plan is the post-append serve over the base-trained store — probed-cell partition-pruned store scan with the query vector as a literal, drift columns as literals; the lifecycle's other jobs (base-only train, build stats, append, post-health scan) share ONE localCheckpointed corpus read, and the append's delta-proportional contract stays metrics-pinned in AnnIndexSpec",
       "embedding_pca_apply" -> "PCA apply + report (r14): the dumped plan is the 1-row driver-assembled report; the data-path jobs inside it are (a) ONE map-combined k-width moment pass over the projection, where each projected coordinate is a codegen'd graft_dot against a LITERAL basis vector with centering folded into a driver constant — no centered array, no broadcast, nothing exchanged — and (b) two broadcast-query corpus scans into TakeOrdered (original-space top-10, projected-space pool-50) plus a 50-row exact rescore; driver state O(k² + pool)",
-      "bpe_train" -> "BPE vocabulary induction (r14): the dumped plan is the 1-row report; the training regime below bpeFitsDriver collects the (word, cnt) table once (byte-gated, the duplicateClusters pattern) and loops in memory; ABOVE the gate each round is one map-combined adjacent-pair hash aggregate over the checkpointed word table + a 1-row argmax collect + a stacked codegen'd graft_bpe_merge projection, lineage re-checkpointed every 8 rounds — regimes spec-pinned output-identical; the corpus is read exactly once either way (the Zipf word-table collapse)",
+      "bpe_train" -> "BPE vocabulary induction (r14): the dumped plan is the 1-row report; the training regime below bpeFitsDriver collects the (word, cnt) table once (byte-gated, the distributedClustersStar pattern) and loops in memory; ABOVE the gate each round is one map-combined adjacent-pair hash aggregate over the checkpointed word table + a 1-row argmax collect + a stacked codegen'd graft_bpe_merge projection, lineage re-checkpointed every 8 rounds — regimes spec-pinned output-identical; the corpus is read exactly once either way (the Zipf word-table collapse)",
       "connector_batch_write" -> "DSv2 batched write (r14): the dumped plan is the per-pk summary local relation; the interesting plan is the WRITE job, where the sink's RequiresDistributionAndOrdering declaration makes Spark insert the clustering exchange + sort on pk — WriteSinkSpec pins the resulting contiguity (exactly ceil(rows/batchSize) pk-pure batches, each pk in one task), the per-task rate pacing, and the error-budget abort through BatchWrite.abort",
       "connector_migrate" -> "connector-shaped migrate end-to-end (r15): the dumped plan is the 1-row summary local relation; the real plan is the single migrate wave captured in ConnectorMigrateSpec from the LIVE write job — DSv2 range scan with the writetime floor ABSORBED (pushed=[GreaterThanOrEqual(wt,…)]), payload pruned from the read schema, the 4 below-floor input slices eliminated at planning, then tag/transform/increment as narrow codegen'd projections, ONE clustering exchange + sort demanded by the sink's declared distribution, and pk-pure batched V2 writes under a JOB-global error budget (task-local fast abort, commit-time total enforcement, accumulator-fed mid-job watcher); ledgered + resumable like every migrate",
       "bpe_encode" -> "BPE apply half (r15): the trained merge table applies to the DISTINCT-word table only — ≤20 stacked codegen'd graft_bpe_merge kernels over word-table-sized rows (the same Zipf collapse training rides), localCheckpointed once; the corpus-sized work is ONE exploded-words equi-join to the encoded table plus ONE map-combined per-doc aggregate; apply/train parity (apply_ok) is a word-table-sized join check, and the DuckDB oracle trains its own 20 rounds in SQL so every count is independently derived",

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -30,6 +31,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       waitedMs += 100
     }
     last
+  }
+
+  /** The physical plan that computed a materialized (persisted) result:
+    * its executedPlan is only a scan of the cache, so read the cached
+    * relation's own plan, with every AQE query stage inlined. Caches it
+    * reads stay `InMemoryTableScan` leaves. `initial` reads the plan AQE
+    * started from instead of the one it ran: on an input where a join
+    * side turns out empty, AQE replaces the ran plan by an empty relation
+    * and the planned operators are no longer in it.
+    */
+  def cachedPhysical(df: DataFrame, initial: Boolean = false): SparkPlan = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val cached = df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedPlan
+    }.getOrElse(fail(s"not a cached frame:\n${df.queryExecution.withCachedData}"))
+    def inline(p: SparkPlan): SparkPlan = p.transformUp {
+      case a: AdaptiveSparkPlanExec => inline(if (initial) a.initialPlan else a.executedPlan)
+      case s: QueryStageExec => inline(s.plan)
+    }
+    inline(cached)
   }
 }
 

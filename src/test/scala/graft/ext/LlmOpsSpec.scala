@@ -68,17 +68,18 @@ class LlmOpsSpec extends SparkSpec {
     assert(newJobs < oldJobs,
       s"folding the capped count must save jobs: $newJobs vs r7-shape $oldJobs")
     // and the pair join's own plan carries no count aggregation at all —
-    // the only Aggregate left is the pair distinct
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    val countAggs = pairs.queryExecution.optimizedPlan.collect {
-      case a: Aggregate if a.aggregateExpressions.exists(_.find {
-        case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[Count]
-        case _ => false
-      }.isDefined) => a
+    // the only Aggregate left is the pair distinct. `pairs` is persisted,
+    // so its optimized plan is a bare InMemoryRelation: walk the physical
+    // plan that computed it, where the caches it reads are leaves. The
+    // pairs are empty here, so read the plan AQE started from
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val phys = cachedPhysical(pairs, initial = true)
+    val countAggs = phys.collect {
+      case a: BaseAggregateExec
+        if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Count]) => a
     }
-    assert(countAggs.isEmpty,
-      s"the pair join must not re-aggregate the band table:\n${pairs.queryExecution.optimizedPlan}")
+    assert(countAggs.isEmpty, s"the pair join must not re-aggregate the band table:\n$phys")
   }
 
   test("dedupCorpus surfaces capped-bucket coverage in the corpus output") {
@@ -99,18 +100,18 @@ class LlmOpsSpec extends SparkSpec {
     assert(open.forall(_.getAs[Long]("capped_lsh_buckets") == 0L))
   }
 
-  test("duplicateClusters: chains collapse to the min id, singletons keep their own") {
+  test("clusters: chains collapse to the min id, singletons keep their own") {
     import spark.implicits._
     // chain 1-2-3 (transitive through 2), pair 5-6, singleton 9
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
     val ids = Seq(1L, 2L, 3L, 5L, 6L, 9L).toDF("doc_id")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L)
     // driver union-find path
-    val uf = LlmOps.duplicateClusters(ids, "doc_id", pairs)
+    val uf = LlmOps.distributedClustersStar(ids, "doc_id", pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(uf == expected)
     // distributed star-contraction path (forced via a zero byte budget)
-    val dist = LlmOps.duplicateClusters(ids, "doc_id", pairs, driverEdgeBudgetBytes = 0L)
+    val dist = LlmOps.distributedClustersStar(ids, "doc_id", pairs, driverEdgeBudgetBytes = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == expected)
   }
@@ -128,10 +129,10 @@ class LlmOpsSpec extends SparkSpec {
     // both sides of it
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
     val ids = Seq(1L, 2L, 3L, 5L, 6L, 9L).toDF("doc_id")
-    val atBoundary = LlmOps.duplicateClusters(ids, "doc_id", pairs,
+    val atBoundary = LlmOps.distributedClustersStar(ids, "doc_id", pairs,
         driverEdgeBudgetBytes = 3 * LlmOps.BytesPerDriverEdge) // exactly fits
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val belowBoundary = LlmOps.duplicateClusters(ids, "doc_id", pairs,
+    val belowBoundary = LlmOps.distributedClustersStar(ids, "doc_id", pairs,
         driverEdgeBudgetBytes = 3 * LlmOps.BytesPerDriverEdge - 1) // forced distributed
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(atBoundary == belowBoundary)
@@ -782,9 +783,9 @@ class LlmOpsSpec extends SparkSpec {
     }
   }
 
-  test("distributedClustersStar matches duplicateClusters on the registry chain") {
-    // the star-contraction tier must produce the exact min-id labels the
-    // union-find path does — same contract, zero driver state
+  test("dedup_clusters_dist matches dedup_clusters on the registry chain") {
+    // the star rounds (dedup_clusters_dist's zero driver budget) must
+    // produce the exact min-id labels the union-find path does
     val a = graft.SparkEntry.queries("dedup_clusters")(spark, sf("sf0.001"))
     val b = graft.SparkEntry.queries("dedup_clusters_dist")(spark, sf("sf0.001"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
@@ -793,9 +794,9 @@ class LlmOpsSpec extends SparkSpec {
 
   test("distributedClustersStar collapses a long CHAIN in O(log n) rounds") {
     // a 2000-node path graph is label propagation's worst case (one round
-    // per diameter unit = 2000 rounds); star contraction must finish it
-    // inside the default 25-round budget and label everything 0 — both
-    // called directly and as duplicateClusters' above-the-gate path
+    // per diameter unit = 2000 rounds); star contraction (forced by a zero
+    // driver budget) must finish it inside the 25-round cap and label
+    // everything 0, and so must the driver union-find at the default
     val n = 2000L
     val ids = spark.range(n).select(col("id").as("doc_id"))
     val chain = spark.range(n - 1)
@@ -803,7 +804,8 @@ class LlmOpsSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.size
     var labels: Array[org.apache.spark.sql.Row] = null
     val jobs = countJobs("star-chain") {
-      labels = LlmOps.distributedClustersStar(ids, "doc_id", chain).collect()
+      labels = LlmOps.distributedClustersStar(ids, "doc_id", chain,
+        driverEdgeBudgetBytes = 0L).collect()
     }
     assert(labels.forall(_.getLong(1) == 0L),
       "every chain node must label to the minimum id 0")
@@ -813,16 +815,48 @@ class LlmOpsSpec extends SparkSpec {
     assert(jobs <= 60, s"star contraction took $jobs jobs on the chain")
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before + 1,
-      s"only the result's checkpoint may stay persisted: $before -> $after")
-    val viaGate = LlmOps.duplicateClusters(ids, "doc_id", chain,
-      driverEdgeBudgetBytes = 0L).collect()
+      s"only the materialized result may stay persisted: $before -> $after")
+    var viaGate: Array[org.apache.spark.sql.Row] = null
+    val gateJobs = countJobs("uf-chain") {
+      viaGate = LlmOps.distributedClustersStar(ids, "doc_id", chain).collect()
+    }
     assert(viaGate.length == n && viaGate.forall(_.getLong(1) == 0L),
-      "duplicateClusters above its gate must label every chain node 0")
+      "the union-find path must label every chain node 0")
+    // the pair count, the edge collect and the label join
+    assert(gateJobs <= 6, s"the union-find path took $gateJobs jobs on the chain")
+  }
+
+  test("distributedClustersStar: unpersist on the star result releases all it persisted") {
+    // the result is the only state a call leaves, and the caller can
+    // release it: no round's checkpoint stays behind
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    val ids = Seq(1L, 2L, 3L, 5L, 6L, 9L).toDF("doc_id")
+    val before = sc.getPersistentRDDs.size
+    val out = LlmOps.distributedClustersStar(ids, "doc_id", pairs, driverEdgeBudgetBytes = 0L)
+    assert(out.collect().length == 6)
+    out.unpersist(blocking = true)
+    assert(sc.getPersistentRDDs.size == before,
+      s"persisted RDDs $before -> ${sc.getPersistentRDDs.size} after unpersist")
+  }
+
+  test("distributedClustersStar: a null id fails loudly on both paths") {
+    // (null, 3) must not become the self-loop (3, 3) and vanish
+    val pairs = Seq((None: Option[Long], Some(3L)), (Some(1L), Some(2L))).toDF("a", "b")
+    val ids = Seq(1L, 2L, 3L).toDF("doc_id")
+    for (budget <- Seq(512L << 20, 0L)) {
+      val e = intercept[Exception] {
+        LlmOps.distributedClustersStar(ids, "doc_id", pairs, budget).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains("id is not numeric")), s"budget $budget: $msgs")
+    }
   }
 
   test("cluster registry keys release their shingle and pair caches") {
     // each key's only lasting state is the result it hands back (a
-    // materialized frame, or star's checkpoint for dedup_clusters_dist):
+    // materialized frame, dedup_clusters_dist's star labels included):
     // shingle tables, signature and band tables, candidate pairs and
     // every other intermediate are released before the result returns
     val sc = spark.sparkContext
@@ -888,15 +922,16 @@ class LlmOpsSpec extends SparkSpec {
       "cycle" -> (0L until n).map(i => (i, (i + 1) % n)),
       "duplicates and self-loops" ->
         (path ++ path.map(_.swap) ++ path ++ (0L until n).map(i => (i, i)))) ++ randoms
-    // ids past every edge stay singletons
+    // ids past every edge stay singletons; a zero budget runs the star
+    // rounds, the default the driver union-find
     val ids = 0L until n + 5
-    graphs.foreach { case (name, edges) =>
+    for ((name, edges) <- graphs; budget <- Seq(0L, 512L << 20)) {
       val out = LlmOps.distributedClustersStar(ids.toDF("doc_id"), "doc_id",
-          edges.toDF("a", "b"))
+          edges.toDF("a", "b"), budget)
         .collect().map(r => r.getLong(0) -> r.getLong(1))
       assert(out.length == ids.length && out.map(_._1).distinct.length == ids.length,
-        s"$name: one row per id, got ${out.length}")
-      assert(out.toMap == unionFindLabels(ids, edges), s"$name: labels differ")
+        s"$name at budget $budget: one row per id, got ${out.length}")
+      assert(out.toMap == unionFindLabels(ids, edges), s"$name at budget $budget: labels differ")
     }
   }
 

@@ -28,7 +28,7 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     ("broadcast(cappedCellsFromBuckets(",
       "LlmOps knnJoin/embeddingNearDups: groupless global aggregate over the bucket-count table — exactly 1 row"),
     ("broadcast(labDf)",
-      "LlmOps.duplicateClusters: labels of collected edges — behind fitsDriverGate (byte-budgeted)"),
+      "LlmOps.distributedClustersStar (union-find path): labels of collected edges — behind fitsDriverGate (byte-budgeted)"),
     ("crossJoin(broadcast(q))",
       "LlmOps ivfSearch/lshSearch: the single query vector — 1 row by contract"),
     ("crossJoin(broadcast(qp))",

@@ -39,23 +39,6 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  /** The physical plan that computed a materialized (persisted) result:
-    * its executedPlan is only a scan of the cache, so read the cached
-    * relation's own plan, with every AQE query stage inlined.
-    */
-  private def cachedPhysical(df: DataFrame): SparkPlan = {
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val cached = df.queryExecution.withCachedData.collectFirst {
-      case r: InMemoryRelation => r.cacheBuilder.cachedPlan
-    }.getOrElse(fail(s"not a cached frame:\n${df.queryExecution.withCachedData}"))
-    def inline(p: SparkPlan): SparkPlan = p.transformUp {
-      case a: AdaptiveSparkPlanExec => inline(a.executedPlan)
-      case s: QueryStageExec => inline(s.plan)
-    }
-    inline(cached)
-  }
-
   test("audit: the LIVE LSH candidate join is an equi-join, no cartesian") {
     // the pairs are materialized (cache-release policy), so audit the plan
     // that computed them
