@@ -2631,7 +2631,8 @@ object LlmOps {
     * [[kmeansAssignToHier]] against a deliberately-bounded index)
     * instead of silently OOMing the driver or shipping a multi-GB
     * broadcast. Parquet bytes underestimate the in-memory rows ~2×; the
-    * budget carries that slack.
+    * budget carries that slack. One Spark job: the collect (the schema is
+    * read from one footer on the driver, [[graft.Tables.parquet]]).
     */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String,
@@ -2645,7 +2646,7 @@ object LlmOps {
         s"$budgetBytes-byte centroid collect/broadcast budget. Retrain " +
         "with a smaller cHint, raise budgetBytes deliberately, or serve " +
         "assignment hierarchically (kmeansAssignToHier).")
-    val onDisk = spark.read.parquet(path).select(col("cid"), col("cvec"))
+    val onDisk = graft.Tables.parquet(spark, path).select(col("cid"), col("cvec"))
     spark.createDataFrame(onDisk.collect().toSeq.asJava, onDisk.schema)
   }
 
@@ -2710,13 +2711,14 @@ object LlmOps {
         // column-pruned. Concurrent appenders are out of contract either
         // way — single-writer is the caller's replay-ledger discipline.
         delta.join(
-          delta.sparkSession.read.parquet(path).select(col("vec_id")),
+          graft.Tables.parquet(delta.sparkSession, path).select(col("vec_id")),
           Seq("vec_id"), "left_anti").localCheckpoint()
     cellWriter(kmeansAssignAuto(d0, cents)).mode("append").parquet(path)
   }
 
   /** Serve ONE query from the cell-partitioned assignment store in at most
-    * three Spark jobs — [[ivfSearchCells]] over the store read: the query
+    * two Spark jobs — [[ivfSearchCells]] over the store read (its schema
+    * from one footer on the driver, [[graft.Tables.parquet]]): the query
     * collect, the local centroid ranking (no job), then ONE scan of only
     * the probed cells into TakeOrdered (the `cid IN (...)` literals are the
     * hive partition filter; task input metrics pinned in AnnIndexSpec).
@@ -2732,7 +2734,7 @@ object LlmOps {
   def annAssignedSearch(spark: org.apache.spark.sql.SparkSession,
                         assignPath: String, cents: DataFrame,
                         query: DataFrame, nprobe: Int, k: Int): DataFrame =
-    ivfSearchCells(spark.read.parquet(assignPath), cents, query, nprobe, k)
+    ivfSearchCells(graft.Tables.parquet(spark, assignPath), cents, query, nprobe, k)
 
   /** Health of the stored index against the CURRENT corpus. Two staleness
     * rules, both against the build-time baseline:
@@ -2756,7 +2758,7 @@ object LlmOps {
                      corpusSizeHint: Option[Long] = None,
                      centsHint: Option[DataFrame] = None): AnnIndexHealth = {
     val spark = emb0.sparkSession
-    val st = spark.read.parquet(annStatsPath(path))
+    val st = graft.Tables.parquet(spark, annStatsPath(path))
       .select(col("n"), col("c"), col("mean_cos")).head()
     val (nIndexed, cIndex, meanBuild) =
       (st.getLong(0), st.getInt(1), st.getDouble(2))
@@ -3460,7 +3462,7 @@ object LlmOps {
   private def storeSigLen(spark: org.apache.spark.sql.SparkSession,
                           path: String): Option[Int] =
     scala.util.Try(
-      spark.read.parquet(path).select(size(col("sig")).as("n")).head())
+      graft.Tables.parquet(spark, path).select(size(col("sig")).as("n")).head())
       .toOption.map(_.getInt(0))
 
   // ---- signature store lifecycle: delete / compact ----
@@ -3491,8 +3493,8 @@ object LlmOps {
     */
   def liveSignatures(spark: org.apache.spark.sql.SparkSession,
                      path: String, idCol: String): DataFrame = {
-    val store = spark.read.parquet(path)
-    scala.util.Try(spark.read.parquet(storeTombstonePath(path))).toOption match {
+    val store = graft.Tables.parquet(spark, path)
+    scala.util.Try(graft.Tables.parquet(spark, storeTombstonePath(path))).toOption match {
       case Some(ts) => store.join(ts.select(col(idCol)), Seq(idCol), "left_anti")
       case None => store
     }

@@ -62,7 +62,7 @@ final case class DataFrameSource(df: DataFrame) extends MigrateSource {
 
 /** Read a parquet table — the file-based origin double. */
 final case class ParquetSource(path: String) extends MigrateSource {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = graft.Tables.parquet(spark, path)
 }
 
 /** The bucket-partitioned parquet target [[MigrateJob]] has always written:

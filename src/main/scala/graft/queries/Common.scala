@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   *    and the oracle SQL carries the same ORDER BY;
   *  - aggregates over doubles are cast to DECIMAL *before* summing (decimal
   *    addition is exact and associative; double addition is order-dependent);
-  *  - `events.ts` is nanosecond-precision parquet, read as raw int64 nanos
-  *    via an explicit schema ([[Common.eventsSchema]]) — any ts-derived
-  *    output or sort key goes through unix_micros (Spark) / epoch_us
-  *    (DuckDB) so both engines see the same int64.
+  *  - `events.ts` has shipped in three on-disk shapes, which
+  *    [[Common.events]] normalizes to `ts_us` (epoch micros) — any
+  *    ts-derived output or sort key goes through unix_micros (Spark) /
+  *    epoch_us (DuckDB) so both engines see the same int64.
   */
 object Common {
   type Q = (SparkSession, String) => DataFrame
@@ -26,7 +26,7 @@ object Common {
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.ensure(s)
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.Tables.parquet(s, s"$dir/$name.parquet")
   }
 
   /** events.parquet raw-int64 schema, for the two `ts` shapes Spark 4's
@@ -62,36 +62,39 @@ object Common {
     * on-disk type. The testdata has shipped `ts` in three shapes across
     * rounds — parquet TIMESTAMP(NANOS), TIMESTAMP(MICROS), and the GenSf
     * tiers' plain int64 nanos — so the shape is detected from the file
-    * footer (driver-side only, no job): a µs/ns timestamp type reads
-    * natively; int64-backed shapes read through [[eventsSchema]] with
-    * `ts div 1000` (integer division — a double division would lose
-    * precision above 2^53 ns).
+    * footer, read on the driver by [[graft.Tables.parquet]] (no job for the
+    * two shapes inference accepts): a µs timestamp type reuses that read;
+    * int64-backed shapes read through [[eventsSchema]] with `ts div 1000`
+    * (integer division — a double division would lose precision above
+    * 2^53 ns).
     */
-  private def eventsRawUs(s: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    inferredTsType(s, path) match {
-      case Some(TimestampType) | Some(TimestampNTZType) =>
-        // native µs timestamp (NTZ cast is wall-clock-preserving: sessions
-        // here are UTC-pinned, same convention as usOf)
-        s.read.parquet(path)
-          .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
-      case _ =>
+  private def eventsRawUs(s: SparkSession, path: String): DataFrame =
+    nativeTsEvents(s, path) match {
+      // NTZ cast is wall-clock-preserving: sessions here are UTC-pinned,
+      // same convention as usOf
+      case Some(df) => df.withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
+      case None =>
         s.read.schema(eventsSchema).parquet(path)
           .withColumn("ts_us", expr("ts div 1000"))
     }
-  }
 
-  /** Footer-inferred type of `ts`, or None for the one shape inference
-    * REJECTS (parquet TIMESTAMP(NANOS) → PARQUET_TYPE_ILLEGAL). Only that
-    * rejection maps to None: a missing path, permission error, or corrupt
-    * footer propagates — treating those as "the NANOS shape" would
-    * resurface later as a confusing schema-mismatch error far from the
-    * real cause.
+  /** The footer-inferred read of events when its `ts` is a native µs
+    * timestamp; None for the int64-backed shapes: plain int64 nanos, and
+    * the one shape inference REJECTS (parquet TIMESTAMP(NANOS) →
+    * PARQUET_TYPE_ILLEGAL, raised by Spark's own inference once the driver
+    * footer read hands the read back to it). Only that rejection maps to
+    * None: a missing path, permission error, or corrupt footer propagates
+    * — treating those as "the NANOS shape" would resurface later as a
+    * confusing schema-mismatch error far from the real cause.
     */
-  private def inferredTsType(s: SparkSession, path: String)
-      : Option[org.apache.spark.sql.types.DataType] =
-    try s.read.parquet(path).schema.find(_.name == "ts").map(_.dataType)
-    catch { case e: Throwable if isNanosRejection(e) => None }
+  private def nativeTsEvents(s: SparkSession, path: String): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val inferred =
+      try Some(graft.Tables.parquet(s, path))
+      catch { case e: Throwable if isNanosRejection(e) => None }
+    inferred.filter(_.schema.find(_.name == "ts").map(_.dataType)
+      .exists(t => t == TimestampType || t == TimestampNTZType))
+  }
 
   /** True when the failure (or any of its causes) is parquet's
     * illegal-type inference rejection — the TIMESTAMP(NANOS) signature.
@@ -111,15 +114,13 @@ object Common {
     * tier's shape (and the oracle harness's BIGINT shim keeps working).
     */
   def eventsRawNanos(s: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    inferredTsType(s, path) match {
-      case Some(TimestampType) | Some(TimestampNTZType) =>
+    nativeTsEvents(s, path) match {
+      case Some(df) =>
         // native µs timestamp: nanos must be synthesized (µs × 1000)
-        s.read.parquet(path)
-          .withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
+        df.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
           .select(cols.map(col): _*)
-      case _ =>
+      case None =>
         // int64-backed shapes (TIMESTAMP(NANOS) or plain int64 nanos): the
         // on-disk value IS nanos — pass it through byte-for-byte instead of
         // round-tripping via ts_us, which would truncate sub-µs precision

@@ -121,7 +121,7 @@ object IoQueries {
       val path = scratch("export_partitioned", d)
       t(s, d, "documents").write.mode("overwrite")
         .partitionBy("lang").parquet(path)
-      s.read.parquet(path).filter(col("lang") === "en")
+      graft.Tables.parquet(s, path).filter(col("lang") === "en")
         .agg(count(lit(1)).as("n"),
           sum(col("n_chars")).as("sum_chars"),
           min(col("doc_id")).as("min_id"),
@@ -155,7 +155,7 @@ object IoQueries {
         .repartition(SmallFilesWriteTasks, col("lang"), col("b"))
         .write.mode("overwrite").option("maxRecordsPerFile", 100)
         .partitionBy("lang", "b").parquet(path)
-      val perFile = s.read.parquet(path)
+      val perFile = graft.Tables.parquet(s, path)
         .groupBy(col("lang"), input_file_name().as("f"))
         .agg(count(lit(1)).as("rows_in_file"))
       perFile.groupBy(col("lang"))
@@ -193,14 +193,14 @@ object IoQueries {
         .write.mode("overwrite").option("maxRecordsPerFile", 100)
         .partitionBy("lang", "b").parquet(smallPath)
       def audit(path: String, filesCol: String, rowsCol: String) =
-        s.read.parquet(path)
+        graft.Tables.parquet(s, path)
           .groupBy(col("lang"), input_file_name().as("f"))
           .agg(count(lit(1)).as("rif"))
           .groupBy(col("lang"))
           .agg(count(lit(1)).cast("bigint").as(filesCol),
             sum(col("rif")).as(rowsCol))
       val before = audit(smallPath, "files_before", "n_rows")
-      s.read.parquet(smallPath).drop("b")
+      graft.Tables.parquet(s, smallPath).drop("b")
         .withColumn("b", pmod(col("doc_id"), lit(CompactWriteBuckets)).cast("int"))
         .repartition(SmallFilesWriteTasks, col("lang"), col("b"))
         .write.mode("overwrite").option("maxRecordsPerFile", 1000)

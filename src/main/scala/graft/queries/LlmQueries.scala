@@ -1298,7 +1298,7 @@ object LlmQueries {
       // corpus, same centroids ⇒ mean_cos_now == mean_cos_build, drift
       // rule can't fire) — derived from the persisted build stats with no
       // corpus scan; only the √N size rule can trip
-      val st = s.read.parquet(cent.stripSuffix("/") + "_stats")
+      val st = graft.Tables.parquet(s, cent.stripSuffix("/") + "_stats")
         .select(col("n"), col("c")).head()
       val reasonPre =
         if (LlmOps.kmeansAutoC(st.getLong(0)) > 2.0 * st.getInt(1)) "size"

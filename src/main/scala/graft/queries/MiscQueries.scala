@@ -183,8 +183,8 @@ object MiscQueries {
       val df = t(s, d, "orders")
       df.write.mode("overwrite").parquet(s"$base/origin")
       df.write.mode("overwrite").parquet(s"$base/target")
-      val o = s.read.parquet(s"$base/origin")
-      val tg = s.read.parquet(s"$base/target")
+      val o = graft.Tables.parquet(s, s"$base/origin")
+      val tg = graft.Tables.parquet(s, s"$base/target")
       // Parity check the way the reference validates (count gate + row-hash
       // compare, 06-validation-monitoring.md:36-151), made scale-safe: an
       // order-independent multiset fingerprint — count + exact decimal SUM
@@ -240,7 +240,7 @@ object MiscQueries {
         columnsToExclude = Seq("o_orderpriority"))
       graft.migrate.MigrateJob.transformOnly(t(s, d, "orders"), cfg)
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path).agg(
+      graft.Tables.parquet(s, path).agg(
         count(lit(1)).as("n"),
         sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("sum_price"),

@@ -176,8 +176,8 @@ object DualWrite {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(interval))
       .foreachBatch { (_: DataFrame, _: Long) =>
-        val o = spark.read.parquet(originPath).count()
-        val t = spark.read.parquet(targetPath).count()
+        val o = graft.Tables.parquet(spark, originPath).count()
+        val t = graft.Tables.parquet(spark, targetPath).count()
         report(o, t)
       }
       .start()

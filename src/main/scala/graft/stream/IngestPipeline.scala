@@ -166,8 +166,8 @@ object IngestPipeline {
     // FS-agnostic existence probes: first batch has neither a landed
     // corpus nor a store — everything survives and seeds both
     val landed = scala.util.Try(
-      spark.read.parquet(cfg.targetPath).select(col("doc_id"), col("text")))
-    val storeReadable = scala.util.Try(spark.read.parquet(storePath)).isSuccess
+      graft.Tables.parquet(spark, cfg.targetPath).select(col("doc_id"), col("text")))
+    val storeReadable = scala.util.Try(graft.Tables.parquet(spark, storePath)).isSuccess
     val survivors =
       if (landed.isFailure || !storeReadable) afterIntra.persist()
       else {

@@ -243,7 +243,7 @@ class AnnIndexSpec extends SparkSpec {
       nprobe = 1, k = 5)))
   }
 
-  test("annAssignedSearch runs in at most 3 Spark jobs") {
+  test("annAssignedSearch runs in at most 2 Spark jobs") {
     val path = dir("jobs")
     val qPath = dir("jobs_query")
     val idx = dir("jobs_index")
@@ -259,10 +259,23 @@ class AnnIndexSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSeq
     }
     assert(got.length == 5)
-    // query collect + the pruned store scan's top-k, and at most one more
-    // the file source may spend listing or planning; ranking the local
-    // centroid table runs none
-    assert(jobs <= 3, s"annAssignedSearch took $jobs jobs")
+    // query collect + the pruned store scan's top-k; the store's schema is
+    // read from one footer on the driver and ranking the local centroid
+    // table runs none
+    assert(jobs <= 2, s"annAssignedSearch took $jobs jobs")
+  }
+
+  test("readAnnIndex runs in at most 1 Spark job") {
+    val idx = dir("read_jobs_index")
+    LlmOps.writeAnnIndex(baseCorpus(40), idx, cHint = Some(2), iters = 2)
+    var n = 0
+    val jobs = countJobs("read-ann-index") {
+      n = LlmOps.readAnnIndex(spark, idx).collect().length
+    }
+    assert(n == 2)
+    // the centroid collect; the schema comes from the driver footer read
+    // and collecting the local table runs none
+    assert(jobs <= 1, s"readAnnIndex took $jobs jobs")
   }
 
   test("hierarchical assignment matches flat on well-separated clusters " +
