@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.NONE
 
@@ -54,6 +54,17 @@ object LlmOps {
       try { df.count(); df }
       catch { case e: Throwable => df.unpersist(); throw e }
     }
+
+  /** The rows of `df` if it has at most `maxRows` of them, else None. The
+    * one driver-side gate of this library's operators: a single
+    * `limit(maxRows + 1)` collect both decides the gate and hands the
+    * under-budget branch its rows, so no count job precedes it and the
+    * input is read once. The limit clamps to Int.MaxValue.
+    */
+  private[graft] def boundedCollect(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    val rows = df.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length <= maxRows) Some(rows) else None
+  }
 
   /** Portable 60-bit hash of a SQL string expression with a seed expression:
     * first 15 hex chars of md5 → BIGINT. Collision prob ~2^-60 per pair.
@@ -283,8 +294,8 @@ object LlmOps {
     * edge (where Spark's BigDecimal path and the DuckDB oracle's own
     * double-math round already disagree with each other). Used on every
     * similarity-score column because Spark's `round` costs a BigDecimal
-    * conversion PER VALUE — on the pairwise hot path the SaltProbe anatomy
-    * measured it at more than the 64-dim dot product itself.
+    * conversion PER VALUE — on the pairwise hot path a cost anatomy
+    * (NOTES.md, sf1) measured it at more than the 64-dim dot product itself.
     */
   def round6(c: Column): Column = roundAt(c, 6)
 
@@ -650,12 +661,6 @@ object LlmOps {
     */
   val BytesPerDriverEdge = 160L
 
-  /** True iff `nEdges` candidate pairs fit the driver-side union-find
-    * budget under the [[BytesPerDriverEdge]] model.
-    */
-  def fitsDriverGate(nEdges: Long, budgetBytes: Long): Boolean =
-    nEdges <= budgetBytes / BytesPerDriverEdge
-
   /** Star contraction's round cap; O(log² n) rounds stay far below it on
     * every graph the specs pin (a 2000-node chain included).
     */
@@ -668,14 +673,15 @@ object LlmOps {
     * "id is not numeric" on both paths.
     *
     * Candidate pairs are orders of magnitude smaller than the corpus by
-    * construction (they're the near-duplicates). Below the
-    * [[fitsDriverGate]] byte budget the pairs are collected, an exact
-    * union-find runs on the driver and the labels join back as a
-    * broadcast local table: a count, a collect and the label join. Above
-    * it the edges stay distributed and star contraction
+    * construction (they're the near-duplicates). One [[boundedCollect]]
+    * of at most `driverEdgeBudgetBytes` / [[BytesPerDriverEdge]] + 1 edges
+    * decides the path: when all of them came back, an exact union-find
+    * runs on the driver over those rows and the labels join back as a
+    * broadcast local table: the bounded collect and the label join.
+    * Otherwise the edges stay distributed and star contraction
     * ([[starClusters]]) labels them in O(log² n) rounds on any topology,
     * each round several scheduled jobs. A zero budget forces the star
-    * rounds. The star result is materialized and owned by the caller
+    * rounds whenever there is a pair. The star result is materialized and owned by the caller
     * (`unpersist()` releases it); the union-find result holds no cache.
     */
   def distributedClustersStar(ids: DataFrame, idCol: String, pairs: DataFrame,
@@ -691,18 +697,17 @@ object LlmOps {
           coalesce(c.cast("string"), lit("null")))))
         .otherwise(c.cast("long"))
     val edges = pairs.select(asLongId(col("a")).as("a"), asLongId(col("b")).as("b"))
-    // the RDD count is one job; Dataset.count's global aggregate is two
-    // under AQE (its shuffle stage, then the final stage)
-    if (fitsDriverGate(pairs.rdd.count(), driverEdgeBudgetBytes))
-      unionFindClusters(ids, idCol, edges)
-    else starClusters(ids, idCol, edges)
+    boundedCollect(edges, driverEdgeBudgetBytes / BytesPerDriverEdge) match {
+      case Some(rows) => unionFindClusters(ids, idCol, rows)
+      case None => starClusters(ids, idCol, edges)
+    }
   }
 
   /** Exact min-id labels by a driver union-find over the collected (long)
-    * `edges`, joined to the ids as a broadcast local table.
+    * edge `rows`, joined to the ids as a broadcast local table.
     */
-  private def unionFindClusters(ids: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
-    val local = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def unionFindClusters(ids: DataFrame, idCol: String, rows: Array[Row]): DataFrame = {
+    val local = rows.map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -813,8 +818,8 @@ object LlmOps {
     // other pairing family already carries (minhash maxBucket,
     // embedding DefaultMaxCell, video maxPostings). Uniform-hash theory
     // says buckets are ~N/2^bits, but DEGENERATE fingerprint classes
-    // (constant-envelope audio, flat images, periodic text — BlockProbe
-    // measured a 21-bit audio block bucket holding 3.5% of a synthetic
+    // (constant-envelope audio, flat images, periodic text — NOTES.md
+    // records a 21-bit audio block bucket holding 3.5% of a synthetic
     // corpus) collapse onto few values, and one such bucket's grouped
     // pair generation is quadratic. A pair is only lost if ALL
     // radius+1 of its blocks are hot — the same residual-miss contract
@@ -1361,13 +1366,12 @@ object LlmOps {
   def purge(corpus: DataFrame, flagged: DataFrame, idCol: String,
             flaggedBroadcastBudgetBytes: Long = 64L << 20): DataFrame = {
     val ids = flagged.select(col(idCol)).distinct()
-    val maxIds = flaggedBroadcastBudgetBytes / BytesPerBroadcastId
-    val local = ids.limit(math.min(maxIds + 1, Int.MaxValue.toLong).toInt).collect()
-    if (local.length <= maxIds) {
-      val idRel = corpus.sparkSession
-        .createDataFrame(java.util.Arrays.asList(local: _*), ids.schema)
-      corpus.join(broadcast(idRel), Seq(idCol), "left_anti")
-    } else corpus.join(ids, Seq(idCol), "left_anti")
+    boundedCollect(ids, flaggedBroadcastBudgetBytes / BytesPerBroadcastId) match {
+      case Some(local) =>
+        val idRel = toLocalRelation(ids, local)
+        corpus.join(broadcast(idRel), Seq(idCol), "left_anti")
+      case None => corpus.join(ids, Seq(idCol), "left_anti")
+    }
   }
 
   /** [[decontaminate]] for benchmark sides too big to broadcast: a composite
@@ -1443,12 +1447,6 @@ object LlmOps {
     */
   val BytesPerBroadcastCandidate = 1024L
 
-  /** True iff `nCandidates` (candidate, benchmark-shingles) rows fit the
-    * broadcast budget under the [[BytesPerBroadcastCandidate]] model.
-    */
-  def fitsCandBroadcastGate(nCandidates: Long, budgetBytes: Long): Boolean =
-    nCandidates <= budgetBytes / BytesPerBroadcastCandidate
-
   /** Paraphrase-level benchmark decontamination: corpus docs whose word-
     * 3-gram Jaccard similarity to ANY benchmark doc clears `threshold`.
     * [[decontaminate]]/[[decontaminateBloom]] count shared grams per doc —
@@ -1485,19 +1483,20 @@ object LlmOps {
     // Candidate count scales with the number of CORPUS docs sharing a
     // band with the benchmark — in an adversarially contaminated corpus
     // (the exact situation decontamination exists for) it is unbounded.
-    // The pairs are cached and COUNTED before the verify stage picks
-    // its join shape: under the byte gate the candidates broadcast into
+    // One [[boundedCollect]] of the pairs picks the verify stage's join
+    // shape: under the byte gate the collected candidates broadcast into
     // the corpus shingle scan (corpus stays shuffle-free); over it,
-    // [[minhashVerify]] falls back to a shuffle equi-join of cSh with
-    // the candidates on the doc id — the corpus pays one exchange
-    // instead of the driver/executors paying an unbounded broadcast.
+    // [[minhashVerify]] falls back to a shuffle equi-join of cSh with the
+    // cached candidates (no second band join) on the doc id — the corpus
+    // pays one exchange instead of an unbounded broadcast.
     val cand = cBand
       .join(broadcast(bBand.withColumnRenamed(idCol, "bench_id")), "band")
       .select(col(idCol), col("bench_id")).distinct()
     released(cSh, bSh, cSig, bSig, cand) {
-      val nCand = cand.count()
-      val verified = minhashVerify(cSh, bSh, cand, idCol, threshold,
-        broadcastCands = fitsCandBroadcastGate(nCand, candBroadcastBudgetBytes))
+      val local = boundedCollect(cand, candBroadcastBudgetBytes / BytesPerBroadcastCandidate)
+        .map(toLocalRelation(cand, _))
+      val verified = minhashVerify(cSh, bSh, local.getOrElse(cand), idCol, threshold,
+        broadcastCands = local.isDefined)
       materialized(verified.groupBy(col(idCol))
         .agg(count(lit(1)).as("n_bench_matches"),
           max(col("jac")).as("max_jaccard")))
@@ -1926,10 +1925,11 @@ object LlmOps {
     * [[kmeansCentroids]] materialization contract — exact doubles, no
     * persistence, size bounded by the caller's literal).
     */
-  private def toLocalRelation(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
+  private def toLocalRelation(df: DataFrame): DataFrame = toLocalRelation(df, df.collect())
+
+  /** `rows` collected from `df`, as a LocalRelation-backed DataFrame. */
+  private def toLocalRelation(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
 
   /** Assign the corpus to an existing centroid table — build the index once
     * with [[kmeansCentroids]], then reuse it across assignment + search.
@@ -2018,7 +2018,8 @@ object LlmOps {
         val kept = cs.map { case (cid, cv) => (cid, l2norm(cv), cv) }
           .filter(_._2 > 0)
         val dims = kept.map(_._3.length).distinct
-        if (kept.nonEmpty && kept.size <= MaxLocalAssignCells && dims.size == 1)
+        if (kept.nonEmpty && dims.size == 1 &&
+            kept.size.toLong * dims.head * 8 <= MaxLocalAssignBytes)
           assignCellsLocal(emb, kept, cents.schema("cid").dataType)
         else assignCellsJoin(emb, cents)
       case None => assignCellsJoin(emb, cents)
@@ -2027,7 +2028,7 @@ object LlmOps {
   /** The r14 crossJoin + groupBy argmax shape — the fallback when the
     * centroid table is not a bounded local relation (or is degenerate:
     * empty after the zero-norm drop, mixed-dim, over
-    * [[MaxLocalAssignCells]]).
+    * [[MaxLocalAssignBytes]]).
     */
   private def assignCellsJoin(emb: DataFrame, cents: DataFrame): DataFrame =
     argmaxCell(emb,
@@ -2035,16 +2036,17 @@ object LlmOps {
         .select(col("vec_id"), col("cid"),
           (dot("embedding", "cvec") / (col("nrm") * col("cnrm"))).as("ccos_raw")))
 
-  /** Cells bound for the JOIN-FREE local assignment path: the flattened
-    * centroid matrix rides the plan as a literal installed into codegen as
-    * a reference object — 4096 cells × 64 dims × 8 B = 2 MB, comfortably a
-    * task-binary-sized constant. Flat assignment above
+  /** Byte bound for the JOIN-FREE local assignment path: the flattened
+    * centroid matrix (cells × dim doubles) rides the plan as a literal
+    * installed into codegen as a reference object — 2 MB, e.g. 4096 cells
+    * at dim 64 or ~170 at dim 1536, comfortably a task-binary-sized
+    * constant. Flat assignment above
     * [[HierAssignCrossoverC]] only happens when a caller asks for it
     * ([[kmeansAssignTo]] directly, e.g. a flat store written through
     * [[writeAssignedCells]]); past THIS bound the crossJoin shape takes
     * over (broadcast transport).
     */
-  private[graft] val MaxLocalAssignCells = 4096
+  private[graft] val MaxLocalAssignBytes = 4096L * 64 * 8
 
   /** The centroid rows of a driver-LOCAL centroid table — Some only when
     * the plan is already a LocalRelation ([[kmeansCentroids]] /
@@ -2472,19 +2474,22 @@ object LlmOps {
     * same cells at the same (cents, nprobe, k) — round6 cosine, cell ties
     * to the smaller cid, rank ties to the smaller vec_id (spec-pinned for
     * both cell frames). The batch is gated at [[QueryBatchMaxRows]] (the
-    * broadcast contract). Output: (qid, vec_id, cos), k rows per query.
+    * broadcast contract) by one [[boundedCollect]], whose rows are the
+    * local query table both the probe ranking and the final join read.
+    * Output: (qid, vec_id, cos), k rows per query.
     */
   def ivfSearchBatch(assigned: DataFrame, queries: DataFrame, cents: DataFrame,
                      nprobe: Int, k: Int): DataFrame = {
-    val q = ensureFns(queries)
+    val qs = ensureFns(queries)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qv"))
       .withColumn("qnrm", sqrt(expr("graft_dot(qv, qv)")))
       .filter(col("qnrm") > 0)
-    val qn = q.count()
-    require(qn <= QueryBatchMaxRows,
-      s"query batch $qn exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
+    val qRows = boundedCollect(qs, QueryBatchMaxRows)
+    require(qRows.isDefined,
+      s"query batch exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
         "window the query stream into bounded batches upstream")
+    val q = toLocalRelation(qs, qRows.get)
     // bounded: ≤ Q·nprobe rows — the probe join's build side, and its
     // distinct cids the partition-pruning literal set (read locally, no job)
     val probed = toLocalRelation(q.crossJoin(broadcast(withCnorm(cents)))
@@ -3568,15 +3573,14 @@ object LlmOps {
       // the ids also push down as an OR-of-equals predicate so a
       // [[writeLandedCorpus]]-laid-out corpus prunes row groups and pays
       // candidate-proportional BYTES too; the semi-join stays on either way
-      // (exactness never depends on the pushdown). Bounded driver collect:
-      // ≤ CandidateInFilterMaxIds + 1 rows by the limit.
-      val bIdRows = cand.select(col("b")).distinct()
-        .limit(CandidateInFilterMaxIds + 1).collect()
+      // (exactness never depends on the pushdown).
       val prunable =
-        if (bIdRows.nonEmpty && bIdRows.length <= CandidateInFilterMaxIds)
-          corpus.filter(bIdRows.map(r => corpus(idCol) === lit(r.get(0)))
-            .reduce(_ || _))
-        else corpus
+        boundedCollect(cand.select(col("b")).distinct(), CandidateInFilterMaxIds) match {
+          case Some(bIdRows) if bIdRows.nonEmpty =>
+            corpus.filter(bIdRows.map(r => corpus(idCol) === lit(r.get(0)))
+              .reduce(_ || _))
+          case _ => corpus
+        }
       val candCorpus = prunable.join(cand.select(col("b")),
         prunable(idCol) === col("b"), "left_semi")
       // the candidate corpus shingles have one consumer: read uncached
@@ -3783,18 +3787,24 @@ object LlmOps {
   val ExactPercentileCrossoverRows = 50L * 1000 * 1000
   val ExactPercentileCrossoverBytes = 4L * 1024 * 1024 * 1024
 
+  /** [[spreadSmall]]'s per-core thresholds: 64 Ki rows, or 8 MB when the
+    * optimizer has no row count.
+    */
+  private val SpreadMinRowsPerTask = 65536L
+  private val SpreadMinBytesPerTask = 8L * 1024 * 1024
+
   /** Scale-adaptive scan spread for CPU-HEAVY, BYTE-LIGHT kernels (r15;
     * guide §2.5's "input skew — one huge unsplittable file" case): a
     * single-row-group parquet file cannot be split, so a per-row kernel
     * whose cost is invisible to byte-based sizing (gram hashing,
     * shingling, levenshtein) runs at scan parallelism — one task — no
     * matter how many cores the session has. When the optimizer's own
-    * stats say the input is SMALL (under `minRowsPerTask` rows per
-    * scheduler core, or when no row count exists under `minBytesPerTask`
-    * bytes per core — both conf-overridable),
-    * redistribute round-robin across the cores so the kernel stage uses
-    * them; at scale the stats exceed the threshold (or are UNKNOWN) and
-    * the frame passes through UNCHANGED — no exchange in the plan, the
+    * stats say the input is SMALL (under [[SpreadMinRowsPerTask]] rows
+    * per scheduler core, or when no row count exists under
+    * [[SpreadMinBytesPerTask]] bytes per core), redistribute round-robin
+    * across the cores so the kernel stage uses them; at scale the stats
+    * exceed the threshold (or are UNKNOWN) and the frame passes through
+    * UNCHANGED — no exchange in the plan, the
     * file splits already exceed the core count. Round-robin repartition
     * is deterministic (sort-before-repartition is on by default,
     * SPARK-23207) and every consumer here is partitioning-independent
@@ -3802,12 +3812,8 @@ object LlmOps {
     * bit-identical either way.
     */
   private[graft] def spreadSmall(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val cores = sess.sparkContext.defaultParallelism
-    val minRows = sess.conf.get("spark.graft.spread.minRowsPerTask", "65536").toLong
-    val minBytes = sess.conf.get("spark.graft.spread.minBytesPerTask",
-      (8L * 1024 * 1024).toString).toLong
-    statsSaySmall(df, cores * minRows, cores * minBytes) match {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    statsSaySmall(df, cores * SpreadMinRowsPerTask, cores * SpreadMinBytesPerTask) match {
       case Some(true) => df.repartition(cores)
       case _ => df
     }
@@ -3901,8 +3907,8 @@ object LlmOps {
     * Scale shape, two regimes (the [[minhashProbe]] pushdown pattern):
     * a real deletion batch is tiny relative to the corpus, so when the
     * request set is ≤ [[CandidateInFilterMaxIds]] distinct ids (probed
-    * with a bounded `limit(max+1).collect()` — never an unbounded
-    * driver read) the purge compiles to a PLAIN SCAN FILTER
+    * with one [[boundedCollect]] — never an unbounded driver read) the
+    * purge compiles to a PLAIN SCAN FILTER
     * `NOT id IN (…)`: no join, no exchange, and on a
     * [[writeLandedCorpus]]-style id-sorted layout the predicate prunes
     * at the row-group level. Above the gate it falls back to a
@@ -3915,20 +3921,20 @@ object LlmOps {
     * regime rather than silently diverging between regimes.
     */
   def purgeByIds(corpus: DataFrame, requests: DataFrame, idCol: String): DataFrame = {
-    val idRows = requests.select(col(idCol)).distinct()
-      .limit(CandidateInFilterMaxIds + 1).collect()
-    require(idRows.forall(_.get(0) != null),
-      s"purgeByIds: null $idCol in the request table — the id is a PK " +
-        "(diff-family contract); a null request row cannot name a document")
-    if (idRows.length <= CandidateInFilterMaxIds)
-      // null-safe (r12 ADVICE): a null CORPUS id makes `id IN (…)` NULL,
-      // which a plain NOT would drop while the anti-join regime keeps the
-      // row (null never equals a join key) — the regimes would diverge on
-      // exactly the rows that violate the PK contract. coalesce(…, false)
-      // makes "not in the request set" hold for null ids in both regimes.
-      corpus.filter(!coalesce(col(idCol).isin(idRows.map(_.get(0)): _*), lit(false)))
-    else
-      corpus.join(requests.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+    val ids = requests.select(col(idCol)).distinct()
+    boundedCollect(ids, CandidateInFilterMaxIds) match {
+      case Some(idRows) =>
+        require(idRows.forall(_.get(0) != null),
+          s"purgeByIds: null $idCol in the request table — the id is a PK " +
+            "(diff-family contract); a null request row cannot name a document")
+        // null-safe (r12 ADVICE): a null CORPUS id makes `id IN (…)` NULL,
+        // which a plain NOT would drop while the anti-join regime keeps the
+        // row (null never equals a join key) — the regimes would diverge on
+        // exactly the rows that violate the PK contract. coalesce(…, false)
+        // makes "not in the request set" hold for null ids in both regimes.
+        corpus.filter(!coalesce(col(idCol).isin(idRows.map(_.get(0)): _*), lit(false)))
+      case None => corpus.join(ids, Seq(idCol), "left_anti")
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -4434,7 +4440,7 @@ object LlmOps {
     * the symbol count — on Zipfian corpora within the first few dozen
     * rounds — so the per-round cost floor is the scan, not the mass:
     * total cost O(rounds × total symbols) compares plus the mass-
-    * proportional re-profile. MEASURED (BpeProbe round tiers at the sf1
+    * proportional re-profile. MEASURED (NOTES.md round tiers at the sf1
     * word table, 2.27M words / ~15M symbols): marginal ~0.37–0.40 s/round
     * and FLAT from round 120 to 520 — the scan floor — vs ~3.5 s/round
     * for the distributed recount regime at the same tier (~9× per round).
@@ -4877,8 +4883,8 @@ object LlmOps {
     *     projected top-kNN without the rescore is near-random on
     *     isotropic-noise embeddings like this corpus — measured 0.0–0.5
     *     at k ≤ 32 — which is exactly why the prefilter+rescore form is
-    *     the one worth certifying; PcaProbe holds the per-(k, pool)
-    *     recall grid, NOTES the per-SF numbers.)
+    *     the one worth certifying; NOTES.md holds the per-(k, pool)
+    *     recall grid and the per-SF numbers.)
     *
     * Scale shape: the moment pass is ONE map-combined aggregate over
     * k-width arrays; both searches are broadcast-query corpus scans into

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * routes every double through `BigDecimal.setScale` (an object allocation
   * plus slow-path decimal conversion per value): on the embedding pairwise
   * hot path ([[graft.ext.LlmOps.knnJoin]] and friends, one rounded cosine
-  * per PAIR) the SaltProbe cost anatomy measured `round(…, 6)` costing more
+  * per PAIR) a cost anatomy (NOTES.md) measured `round(…, 6)` costing more
   * than the 64-dim dot product itself (sf1, salted pass: enumerate 0.83 s,
   * +dot 1.83 s, +div 1.92 s, +round 3.50 s). This expression stays a
   * branch-free primitive inside whole-stage codegen.

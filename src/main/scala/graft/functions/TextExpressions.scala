@@ -20,8 +20,8 @@ object TextOps {
     * '[^A-Za-z0-9 ]', ''))`: every byte of a multi-byte character is
     * ≥ 0x80 (so the whole character's bytes count, as the regex removes
     * them all) and class members are single ASCII bytes. One branchy pass,
-    * no regex engine, no stripped-string allocation — the TextProbe
-    * anatomy measured the regexp_replace form at 3.3 s of
+    * no regex engine, no stripped-string allocation — a cost anatomy
+    * (NOTES.md) measured the regexp_replace form at 3.3 s of
     * text_quality_filter's 6.4 s at sf1.
     */
   def symbolBytes(s: UTF8String): Int = {

@@ -1014,8 +1014,8 @@ object LlmQueries {
             col("n_tokens").cast("double")))
         // graft_symbol_bytes == octet_length(text) - octet_length(
         // regexp_replace(text, '[^A-Za-z0-9 ]', '')) (spec-pinned), minus
-        // the per-row regex engine — TextProbe measured the regex form at
-        // half this query's sf1 runtime
+        // the per-row regex engine — the regex form measured at half this
+        // query's sf1 runtime (NOTES.md)
         .withColumn("symbol_ratio",
           LlmOps.round6(expr("graft_symbol_bytes(text)").cast("double") /
             octet_length(col("text")).cast("double")))

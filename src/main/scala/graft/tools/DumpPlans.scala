@@ -44,7 +44,7 @@ object DumpPlans {
       "dedup_audio_fp" -> "acoustic fingerprint: graft_frame_energy → graft_dhash is one codegen'd narrow map; block explode + grouped in-bucket pairing shuffle ONLY (id, fingerprint, block) rows — payload bytes never leave the scan stage; the only join is the 1-row capped_blocks coverage attach",
       "dedup_video_frames" -> "frame-set Jaccard: signature (array_distinct) and its size compute narrowly pre-explode — no per-doc count pass, no size join-back; two core exchanges (frame-hash postings groupBy with the stop-frame cap, then the (a,b) shared-count agg) with the capped-count branch reusing the postings exchange; the only join is the 1-row capped_postings coverage attach",
       "sim_search_quantized" -> "int8 two-stage ANN: approx stage scans codes and carries only (vec_id, approx) into a TakeOrdered; rescore joins the 40-row candidate list as a broadcast build — zero shuffle exchanges, the corpus is never hash- or range-partitioned",
-      "dedup_substring" -> "ExactSubstr (r11 skew-safe): gram explode is narrow codegen (graft_gram_hash, no gram strings materialized); the duplicate test is a TWO-LEVEL count — map-side partial combine collapses hot grams, the (h, sites) partials shuffle small, and ONE left-semi join streams the gram table against the dup-gram set (AQE may broadcast it or skew-split the probe — the r10 hot-gram window buffered a hot gram's whole position list in one unsplittable task); one exchange back on the doc id for the span-merge windows — no gram-hash window, no global suffix sort. r12 VERIFIED at sf0.1 (SubstrPlanProbe, final adaptive plan): the dup-gram set builds as a BroadcastExchange → BroadcastHashJoin LeftSemi — the gram table never shuffles on h for the join; the residual ~1.3–1.4× vs the r10 window form is the second gram explode + the (h, sites) partial-agg exchange, the price of map-side hot-gram collapse, not a join regression",
+      "dedup_substring" -> "ExactSubstr (r11 skew-safe): gram explode is narrow codegen (graft_gram_hash, no gram strings materialized); the duplicate test is a TWO-LEVEL count — map-side partial combine collapses hot grams, the (h, sites) partials shuffle small, and ONE left-semi join streams the gram table against the dup-gram set (AQE may broadcast it or skew-split the probe — the r10 hot-gram window buffered a hot gram's whole position list in one unsplittable task); one exchange back on the doc id for the span-merge windows — no gram-hash window, no global suffix sort. r12 VERIFIED at sf0.1 (final adaptive plan): the dup-gram set builds as a BroadcastExchange → BroadcastHashJoin LeftSemi — the gram table never shuffles on h for the join; the residual ~1.3–1.4× vs the r10 window form is the second gram explode + the (h, sites) partial-agg exchange, the price of map-side hot-gram collapse, not a join regression",
       "sim_search_pq" -> "PQ ADC (r11): the codes scan runs the codegen'd graft_pq_adc LUT kernel and carries only (vec_id, approx) into a TakeOrdered; the LUT, grouped codebook row, and query are 1-row broadcast attaches; rescore joins the 40-row candidate list broadcast — the codes table and the corpus are never hash- or range-exchanged",
       "sim_search_ivfpq" -> "IVFADC (r11): the coarse quantizer's nprobe probed-cell ids, ranked on the driver over the local centroid table, filter the (vec_id, cid, codes) index as `cid IN (...)` literals (over a cid-partitioned store read that filter partition-prunes), the ADC scan ranks only those cells' codes, rescore joins the candidate ids broadcast; the only data-sized exchange anywhere is the BUILD-time assignment argmax combine, paid once per corpus snapshot",
       "training_manifest" -> "end-to-end composition (r11): every stage keeps its standalone plan shape — the LSH keeper election's cached signature/cluster passes, the decontaminate broadcast-gated benchmark grams, the byte-gated purge anti-join, then the token gate and shard assignment as narrow per-row maps over the survivor stream; composing adds NO new shuffle beyond the stages' own",

@@ -725,7 +725,7 @@ object Stress {
         .withColumnRenamed("doc_id", "bench_id"), "band")
       .select(col("doc_id"), col("bench_id")).distinct().count()
     val gateVerdict =
-      if (graft.ext.LlmOps.fitsCandBroadcastGate(nCand, 64L << 20))
+      if (nCand <= (64L << 20) / graft.ext.LlmOps.BytesPerBroadcastCandidate)
         "ADMITS them (gate did NOT engage — investigate)"
       else "REJECTS them: the shuffle-join fallback engaged"
     report ++= notes

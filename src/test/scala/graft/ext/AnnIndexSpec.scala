@@ -401,6 +401,34 @@ class AnnIndexSpec extends SparkSpec {
     assert(rows(local) == rows(joined))
   }
 
+  test("local assignment is bounded in bytes: a dim-1536 table of 200 " +
+       "cells takes the join shape, with the small-dim local path's rows") {
+    import org.apache.spark.sql.functions.col
+    // zero-padding to dim 1536 leaves every dot and norm unchanged, so
+    // both tables assign alike; only the matrix size (200 × 1536 × 8 B ≈
+    // 2.5 MB against 200 × 4 × 8 B) differs
+    val dim = 1536
+    def pad[T](v: Seq[T], zero: T): Seq[T] = v ++ Seq.fill(dim - v.length)(zero)
+    val cells = (0 until 200).map { i =>
+      (i, Seq(math.sin(i), math.cos(1.3 * i), math.sin(0.7 * i + 1), math.cos(2.1 * i)))
+    }
+    val vecs = (0 until 60).map { j =>
+      (j.toLong, Seq(math.sin(0.37 * j), math.cos(0.5 * j), 0.3, math.sin(j)).map(_.toFloat))
+    }
+    val small = LlmOps.kmeansAssignTo(vecs.toDF("vec_id", "embedding").repartition(2),
+      cells.toDF("cid", "cvec"))
+    val wide = LlmOps.kmeansAssignTo(
+      vecs.map { case (id, v) => (id, pad(v, 0f)) }.toDF("vec_id", "embedding").repartition(2),
+      cells.map { case (c, v) => (c, pad(v, 0.0)) }.toDF("cid", "cvec"))
+    assert(small.queryExecution.executedPlan.toString.contains("graft_argmax_cell"),
+      "the dim-4 table must take the local path")
+    assert(!wide.queryExecution.executedPlan.toString.contains("graft_argmax_cell"),
+      "a 2.5 MB centroid matrix must not ride the plan as a literal")
+    def rows(df: DataFrame) = df.select(col("vec_id"), col("cid"), col("ccos"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1).toSeq
+    assert(rows(wide) == rows(small))
+  }
+
   test("assignment argmax never plans a sort-based aggregate over the " +
        "vectors×centroids stream (r12 ENOSPC fix); the flat LOCAL path " +
        "plans JOIN-FREE with zero exchanges (r16)") {

@@ -116,15 +116,23 @@ class LlmOpsSpec extends SparkSpec {
     assert(dist == expected)
   }
 
+  test("boundedCollect: Some(rows) up to maxRows, None past it") {
+    val ten = spark.range(10).toDF("id")
+    def ids(rows: Option[Array[org.apache.spark.sql.Row]]) =
+      rows.map(_.map(_.getLong(0)).sorted.toSeq)
+    // n rows at maxRows = n are all handed back; n + 1 are not
+    assert(ids(LlmOps.boundedCollect(ten, 10)) == Some(0L until 10L))
+    assert(LlmOps.boundedCollect(spark.range(11).toDF("id"), 10).isEmpty)
+    assert(ids(LlmOps.boundedCollect(ten.filter(col("id") < 0), 10)) == Some(Seq()))
+    // a zero budget admits no row at all
+    assert(LlmOps.boundedCollect(spark.range(1).toDF("id"), 0).isEmpty)
+    // a maxRows past Int.MaxValue clamps the limit instead of overflowing
+    assert(ids(LlmOps.boundedCollect(ten, Int.MaxValue.toLong + 1)) == Some(0L until 10L))
+    assert(ids(LlmOps.boundedCollect(ten, Long.MaxValue)) == Some(0L until 10L))
+  }
+
   test("driver gate is a byte budget: boundary math and path equivalence") {
     import spark.implicits._
-    // boundary: budget of exactly 10 edges admits 10, rejects 11
-    val budget = 10 * LlmOps.BytesPerDriverEdge
-    assert(LlmOps.fitsDriverGate(10, budget))
-    assert(!LlmOps.fitsDriverGate(11, budget))
-    // 512 MB default admits millions of edges but not a driver-OOM count
-    assert(LlmOps.fitsDriverGate(3000000, 512L << 20))
-    assert(!LlmOps.fitsDriverGate(100000000, 512L << 20))
     // a budget right at the fallback boundary yields the same clusters on
     // both sides of it
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
@@ -391,9 +399,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(viaBroadcast.nonEmpty, "the contaminated corpus must produce matches")
     assert(viaShuffle == viaBroadcast,
       s"gate shapes must be result-identical:\n$viaShuffle\nvs\n$viaBroadcast")
-    // gate boundary math: 64 candidates fit exactly 64 KiB, 65 don't
-    assert(LlmOps.fitsCandBroadcastGate(64L, 64L << 10))
-    assert(!LlmOps.fitsCandBroadcastGate(65L, 64L << 10))
   }
 
   test("purge: broadcast gate fallback is row-identical and drops the right docs") {
@@ -591,7 +596,7 @@ class LlmOpsSpec extends SparkSpec {
   test("hamming pigeonhole: oversized block buckets are capped out of pairing") {
     // 6 identical tracks: one fingerprint, every block bucket holds all 6.
     // cap 3 excludes them all (pairs empty); cap 1000 restores the full
-    // 6-choose-2 — the BlockProbe-measured degenerate-envelope hazard
+    // 6-choose-2 — the degenerate-envelope hazard NOTES.md measured
     // (silence/test tones collapse onto few fingerprint values), bounded
     // exactly like minhash maxBucket / video maxPostings
     val rows = (1L to 6L).map(i => (i, ("abcdefghij" * 13).take(130)))
@@ -822,8 +827,26 @@ class LlmOpsSpec extends SparkSpec {
     }
     assert(viaGate.length == n && viaGate.forall(_.getLong(1) == 0L),
       "the union-find path must label every chain node 0")
-    // the pair count, the edge collect and the label join
+    // the bounded edge collect and the label join
     assert(gateJobs <= 6, s"the union-find path took $gateJobs jobs on the chain")
+  }
+
+  test("distributedClustersStar below its gate reads single-file pairs in one bounded collect") {
+    // the gate and the union-find share one collect job: no count job
+    // precedes it, so a lazy single-file pairs read is scanned once
+    val dir = java.nio.file.Files.createTempDirectory("graft-star-pairs").toString
+    Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b").coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    val pairs = graft.Tables.parquet(spark, dir)
+    val ids = Seq(1L, 2L, 3L, 5L, 6L, 9L).toDF("doc_id")
+    var labels = Map.empty[Long, Long]
+    val jobs = countJobs("uf-parquet") {
+      labels = LlmOps.distributedClustersStar(ids, "doc_id", pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
+    // one edge collect and the label join
+    assert(jobs <= 4, s"the union-find path took $jobs jobs on single-file pairs")
   }
 
   test("distributedClustersStar: unpersist on the star result releases all it persisted") {

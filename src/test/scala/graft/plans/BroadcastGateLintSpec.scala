@@ -28,11 +28,11 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     ("broadcast(cappedCellsFromBuckets(",
       "LlmOps knnJoin/embeddingNearDups: groupless global aggregate over the bucket-count table — exactly 1 row"),
     ("broadcast(labDf)",
-      "LlmOps.distributedClustersStar (union-find path): labels of collected edges — behind fitsDriverGate (byte-budgeted)"),
+      "LlmOps.distributedClustersStar (union-find path): labels of the edges boundedCollect returned — at most driverEdgeBudgetBytes/BytesPerDriverEdge edges (byte-budgeted)"),
     ("crossJoin(broadcast(q))",
       "LlmOps ivfSearch/lshSearch: the single query vector — 1 row by contract"),
     ("crossJoin(broadcast(qp))",
-      "LlmOps.embeddingPcaApplyReport / PcaProbe: the single PROJECTED query vector — 1 row by the vec_id = 0 contract"),
+      "LlmOps.embeddingPcaApplyReport: the single PROJECTED query vector — 1 row by the vec_id = 0 contract"),
     ("broadcast(probed.select(col(\"label\")))",
       "LlmOps.ivfSearch: probed centroid ids — ≤ nprobe rows by .limit(nprobe)"),
     ("c.join(broadcast(q), \"blk\")",
@@ -42,13 +42,13 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     ("broadcast(benchGramsAttr)",
       "LlmOps.contaminationReport: attributed benchmark n-gram table — same bench-suite-small contract as decontaminate; beyond-broadcast suites go through decontaminateBloom first"),
     ("corpus.join(broadcast(idRel), Seq(idCol), \"left_anti\")",
-      "LlmOps.purge: a local relation of the collected flagged ids — executes only when at most flaggedBroadcastBudgetBytes/BytesPerBroadcastId ids came back from the limit(budget + 1) collect; the byte gate is the enclosing if"),
+      "LlmOps.purge: a local relation of the flagged ids boundedCollect returned — at most flaggedBroadcastBudgetBytes/BytesPerBroadcastId ids; the byte gate is the enclosing match"),
     ("acc.crossJoin(broadcast(df.agg(nd(c).as(s\"__${c}__nd\"))))",
       "Ops.profileTable exact regime: groupless global aggregate — exactly 1 row per column subtree"),
     ("broadcast(bBand",
       "LlmOps.decontaminateMinhash: benchmark band table — benchmark-small by contract"),
     ("broadcast(cand.join(broadcast(bench), \"bench_id\"))",
-      "LlmOps.decontaminateMinhash verify: executes only in the fitsCandBroadcastGate branch; bench is contract-small"),
+      "LlmOps.decontaminateMinhash verify: executes only on a local relation of the candidates boundedCollect returned — at most candBroadcastBudgetBytes/BytesPerBroadcastCandidate rows; bench is contract-small"),
     (".join(broadcast(bench), \"bench_id\")",
       "LlmOps.decontaminateMinhash shuffled fallback: only the contract-small bench side is hinted"),
     ("broadcast(bases)",
@@ -68,7 +68,7 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     (".join(broadcast(probed), \"cid\")",
       "LlmOps.ivfSearchBatch: the Q·nprobe probe list — bounded by the QueryBatchMaxRows gate × the nprobe literal"),
     (".join(broadcast(q), \"qid\")",
-      "LlmOps.ivfSearchBatch: the query batch — gated at QueryBatchMaxRows (require before any broadcast)"),
+      "LlmOps.ivfSearchBatch: the local query table boundedCollect returned — at most QueryBatchMaxRows rows (require before any broadcast)"),
     ("crossJoin(broadcast(tots))",
       "LlmOps.dsirSelect: groupless global word-total aggregate — exactly 1 row"),
     ("scored.join(broadcast(thr), Seq(\"lang\"))",
