@@ -1107,38 +1107,6 @@ object LlmOps {
     released(edges)(distributedClustersStar(ids, idCol, edges))
   }
 
-  /** Measured packing crossover (STRESS.md PackProbe table: single-window
-    * 1.8/6.3/24.4 s vs two-level 10.9/11.0/15.8 s at 2/10/40M docs in ONE
-    * language): the single-task-per-lang window is FASTER below ~10M docs
-    * per language (no shard machinery), and the two-level form overtakes
-    * between 10M and 40M. 16M sits inside the measured bracket.
-    */
-  val PackCrossoverDocsPerLang = 16000000L
-
-  /** Shard width for [[packSequences]] given the largest per-language doc
-    * count: below the crossover, one giant shard recovers the single-window
-    * plan INSIDE the same operator (output is width-invariant,
-    * property-pinned); above it, the production 2^20 ids/shard two-level
-    * form. Pure, so the selection rule is testable without a corpus.
-    */
-  def packShardWidth(maxDocsPerLang: Long): Long =
-    if (maxDocsPerLang <= PackCrossoverDocsPerLang) Long.MaxValue else 1L << 20
-
-  /** [[packSequences]] with the shard width auto-selected at the measured
-    * crossover: one groupBy(lang) count pass (tiny result — #langs rows)
-    * decides, then the same width-invariant operator runs. Callers that
-    * already know the per-lang histogram should call packSequences with
-    * [[packShardWidth]] directly and skip the count.
-    */
-  def packSequencesAuto(docs: DataFrame): DataFrame = {
-    val maxPerLang = docs.groupBy(col("lang")).count()
-      .agg(max(col("count"))).head().getAs[Any](0) match {
-        case null => 0L
-        case n: Long => n
-      }
-    packSequences(docs, packShardWidth(maxPerLang))
-  }
-
   /** IVF index build: per-bucket (cluster label) element-wise centroid —
     * the [[decimalVecMean]] explode form (the label count is unbounded
     * here), exact and partitioning-independent, so the index is
@@ -1552,7 +1520,9 @@ object LlmOps {
     * Output is row-identical to the single-window form (spec-pinned), and
     * identical for ANY shardWidth — the width only picks the parallelism.
     * Production default 2^20 ids/shard; tests dial it down to exercise the
-    * multi-shard path on small corpora.
+    * multi-shard path on small corpora. `Long.MaxValue` (one shard) is the
+    * single-window plan, which STRESS.md's measured packing crossover
+    * table shows faster below ~10M docs in one language.
     */
   def packSequences(docs: DataFrame, shardWidth: Long = 1L << 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1939,19 +1909,25 @@ object LlmOps {
 
   /** Centroid-count threshold above which [[kmeansAssignAuto]] serves
     * assignment through the two-level hierarchical path: at c = 1024 the
-    * flat path pays c dots per vector while hier at probeG = 4 pays
-    * ~(1 + probeG)·√c ≈ 160 — the compute gap that funds hier's one
-    * extra corpus exchange (HierProbe measured 3.5× end-to-end at
-    * c = 3162). Below it flat's single-stage argmax wins.
+    * flat path pays c dots per vector while hier, probing 4 coarse groups
+    * (`CoarseGroupsProbed`), pays ~(1 + 4)·√c ≈ 160 — the compute gap that funds hier's one
+    * extra corpus exchange (3.5× end-to-end at c = 3162: NOTES.md's
+    * two-level assignment table). Below it flat's single-stage argmax wins.
     */
   val HierAssignCrossoverC: Long = 1024L
+
+  /** Coarse groups each vector probes in [[kmeansAssignToHier]]; 4
+    * reproduces flat exactly on clustered corpora (NOTES.md's two-level
+    * assignment table).
+    */
+  private val CoarseGroupsProbed = 4
 
   private[graft] def hierAutoPick(c: Long): Boolean = c >= HierAssignCrossoverC
 
   /** Assignment with the path picked by centroid count (r11 verdict item
     * 6): flat [[kmeansAssignTo]] — exact argmax over all c centroids —
-    * below [[HierAssignCrossoverC]]; above it [[kmeansAssignToHier]] at
-    * probeG = 4, which HierProbe's parity table shows reproduces flat
+    * below [[HierAssignCrossoverC]]; above it [[kmeansAssignToHier]],
+    * which NOTES.md's two-level assignment table shows reproduces flat
     * EXACTLY on clustered corpora (the regime a trained index exists
     * for) while cutting per-vector work from c to ~5·√c dots. Identical
     * output schema either way; the c count is one action over the
@@ -1959,12 +1935,11 @@ object LlmOps {
     * crossover at sf tiers, so this auto-path engages only at the scale
     * it exists for.
     */
-  def kmeansAssignAuto(emb0: DataFrame, cents: DataFrame,
-                       probeG: Int = 4): DataFrame = {
+  def kmeansAssignAuto(emb0: DataFrame, cents: DataFrame): DataFrame = {
     // r16: a LOCAL centroid table's row count is a driver-side length —
     // the count() job only runs for lazy centroid lineages
     val c = localRowCount(cents).getOrElse(cents.count())
-    if (hierAutoPick(c)) kmeansAssignToHier(emb0, cents, probeG = probeG)
+    if (hierAutoPick(c)) kmeansAssignToHier(emb0, cents)
     else kmeansAssignTo(emb0, cents)
   }
 
@@ -2215,12 +2190,6 @@ object LlmOps {
         .agg(expr("transform(array_sort(collect_list(struct(pos, cval))), x -> x.cval)").as("cvec"))
   }
 
-  /** Final (vec_id, cid, embedding, nrm) assignment under the trained
-    * centroids — the index an IVF search probes.
-    */
-  def kmeansAssignments(emb0: DataFrame, c: Int, iters: Int): DataFrame =
-    kmeansAssignTo(emb0, kmeansCentroids(emb0, c, iters))
-
   /** The standard public cell-count heuristic for a trained IVF index:
     * c ≈ √N balances the query's c-centroid ranking against the ~N/c
     * per-cell exact search (total probe work ~ c + nprobe·N/c, minimized
@@ -2238,14 +2207,14 @@ object LlmOps {
   /** Coarse quantizer over a TRAINED centroid table: spherical k-means
     * with √c groups run on the c centroid rows themselves (bounded input
     * — the training corpus here IS the centroid table, never the vector
-    * corpus). Output (cid, cvec) with cid = group id; feed to
-    * [[kmeansAssignToHier]].
+    * corpus), two Lloyd iterations. Output (cid, cvec) with cid = group
+    * id; feed to [[kmeansAssignToHier]].
     */
-  def kmeansCoarse(cents: DataFrame, iters: Int = 2): DataFrame = {
+  def kmeansCoarse(cents: DataFrame): DataFrame = {
     val c = localRowCount(cents).getOrElse(cents.count()) // bounded local relation → driver-side length
     kmeansCentroids(
       cents.select(col("cid").as("vec_id"), col("cvec").as("embedding")),
-      kmeansAutoC(c), iters)
+      kmeansAutoC(c), iters = 2)
   }
 
   /** The fine→coarse group map: each trained centroid assigned to its
@@ -2277,14 +2246,14 @@ object LlmOps {
     * APPROXIMATION CONTRACT: the nearest fine centroid can live outside
     * the vector's probed coarse groups (the standard IMI/hierarchical-
     * IVF residual miss), so assignments can differ from flat on
-    * near-tie vectors. `probeG` is the quality dial — each vector scans
-    * its top-`probeG` coarse groups (per-vector work √c + probeG·√c,
-    * still ≪ c): on CLUSTERED corpora (the regime a trained index
-    * exists for) parity with flat is ~1.0 even at probeG = 1, while on
+    * near-tie vectors. The quality dial is `CoarseGroupsProbed` = 4: each
+    * vector scans its top 4 coarse groups (per-vector work √c + 4·√c,
+    * still ≪ c). On CLUSTERED corpora (the regime a trained index exists
+    * for) parity with flat is ~1.0 even at one group, while on
     * UNIFORM random vectors — the worst case, where near-equidistant
     * ties dominate and cell identity is arbitrary — parity is low but
     * the winning-cosine loss on disagreements stays small (the metric
-    * the index ranks by; HierProbe's two-regime table in NOTES.md).
+    * the index ranks by; NOTES.md's two-level assignment table).
     * Flat assignment stays the exactness path (and the oracle path).
     * Maintenance paths ([[annIndexHealth]]/[[writeAnnAssignments]]) pick
     * this path automatically above [[HierAssignCrossoverC]] via
@@ -2299,14 +2268,12 @@ object LlmOps {
     * so an over-budget index fails loudly instead of silently shipping a
     * multi-GB broadcast to every executor.
     */
-  def kmeansAssignToHier(emb0: DataFrame, cents: DataFrame,
-                         iters: Int = 2, probeG: Int = 4): DataFrame = {
-    require(probeG >= 1, s"probeG must be >= 1, got $probeG")
+  def kmeansAssignToHier(emb0: DataFrame, cents: DataFrame): DataFrame = {
     centroidGate(cents)
-    val coarse = kmeansCoarse(cents, iters)
+    val coarse = kmeansCoarse(cents)
     val groups = withCnorm(centroidGroups(cents, coarse))
     val emb = kmeansInput(emb0)
-    // stage 1: top-probeG coarse groups per vector. The scored stream is
+    // stage 1: top-CoarseGroupsProbed groups per vector. The scored stream is
     // NARROW — (vec_id, gid, gcos) only, ~20 B/row. Carrying the
     // embedding through this aggregate was the r11 ENOSPC: collect_list
     // plans as ObjectHashAggregate, which falls back to SORT-based
@@ -2322,7 +2289,7 @@ object LlmOps {
         round6(dot("embedding", "cvec") / (col("nrm") * col("cnrm"))).as("gcos"))
     val topGids = scoredG.groupBy(col("vec_id"))
       .agg(
-        expr(s"transform(slice(array_sort(collect_list(struct(-gcos AS ng, gid))), 1, $probeG), x -> x.gid)")
+        expr(s"transform(slice(array_sort(collect_list(struct(-gcos AS ng, gid))), 1, $CoarseGroupsProbed), x -> x.gid)")
           .as("gids"))
     val topG = emb.join(topGids, "vec_id")
       .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -2560,16 +2527,6 @@ object LlmOps {
         coalesce(col("is_dup"), lit(false)).as("dropped"))
   }
 
-  /** [[semanticDedupWith]] with the index trained in-call
-    * ([[kmeansCentroids]] on `train`) — train on a corpus snapshot, dedup
-    * the full (possibly since-grown) corpus against it.
-    */
-  def semanticDedup(corpus: DataFrame, train: DataFrame, c: Int, iters: Int,
-                    threshold: Double,
-                    maxCell: Int = DefaultMaxCell): DataFrame =
-    semanticDedupWith(corpus, kmeansCentroids(train, c, iters), threshold,
-      maxCell)
-
   // ---- persisted trained-ANN index: build / search / drift / refresh ----
 
   /** Index health report ([[annIndexHealth]]): size and assignment-quality
@@ -2597,18 +2554,17 @@ object LlmOps {
     * persisted is bounded by the `c` literal except the 1-row stats.
     */
   def writeAnnIndex(emb0: DataFrame, path: String, cHint: Option[Int] = None,
-                    iters: Int = 2,
-                    corpusSizeHint: Option[Long] = None): Unit = {
+                    iters: Int = 2): Unit = {
     val spark = emb0.sparkSession
     // r16 (guide §1.2/§2.4 — the build was THREE corpus scans beyond
     // training): the pre-count exists only to pick c = √N, so with cHint
-    // (or a size hint) it is skipped and n folds into the SAME aggregate
-    // that computes mean_cos — one assignment scan total. mean_cos is
-    // measured against the just-trained table's VALUES; parquet
-    // round-trips doubles exactly, so assigning against the in-memory
-    // local relation equals the old write→read-back→collect detour.
-    val nPre: Option[Long] = corpusSizeHint.orElse(
-      if (cHint.isDefined) None else Some(kmeansInput(emb0).count()))
+    // it is skipped and n folds into the SAME aggregate that computes
+    // mean_cos — one assignment scan total. mean_cos is measured against
+    // the just-trained table's VALUES; parquet round-trips doubles
+    // exactly, so assigning against the in-memory local relation equals
+    // the old write→read-back→collect detour.
+    val nPre: Option[Long] =
+      if (cHint.isDefined) None else Some(kmeansInput(emb0).count())
     val c = kmeansAutoC(nPre.getOrElse(0L), cHint)
     val cents = kmeansCentroids(emb0, c, iters)
     cents.write.mode("overwrite").parquet(path)
@@ -2696,30 +2652,12 @@ object LlmOps {
     * touched (spec-pinned by file inventory + task input metrics).
     *
     * Id discipline is the CALLER's contract (same as the diff family's
-    * PK contract): replaying a delta duplicates its rows. With
-    * `dedupeAgainstStore = true` the delta anti-joins the store's vec_id
-    * column first — a column-pruned store scan, history-proportional, so
-    * the default stays off for the hot path (an upstream ledger is the
-    * production replay guard, the MigrateJob pattern).
+    * PK contract): replaying a delta duplicates its rows. An upstream
+    * ledger is the replay guard, the MigrateJob pattern; a store-side
+    * anti-join would make every append history-proportional.
     */
-  def appendAnnAssignments(delta: DataFrame, cents: DataFrame, path: String,
-                           dedupeAgainstStore: Boolean = false): Unit = {
-    val d0 =
-      if (!dedupeAgainstStore) delta
-      else
-        // Materialized EAGERLY (localCheckpoint) so the store is fully read
-        // before the append job opens it for write: without this the guard
-        // relies on the file source's planning-time snapshot listing — an
-        // implementation detail a refactor to a lazily-listed source would
-        // silently break (r13 ADVICE). The checkpoint holds only the
-        // deduped DELTA (delta-proportional); the store scan itself stays
-        // column-pruned. Concurrent appenders are out of contract either
-        // way — single-writer is the caller's replay-ledger discipline.
-        delta.join(
-          graft.Tables.parquet(delta.sparkSession, path).select(col("vec_id")),
-          Seq("vec_id"), "left_anti").localCheckpoint()
-    cellWriter(kmeansAssignAuto(d0, cents)).mode("append").parquet(path)
-  }
+  def appendAnnAssignments(delta: DataFrame, cents: DataFrame, path: String): Unit =
+    cellWriter(kmeansAssignAuto(delta, cents)).mode("append").parquet(path)
 
   /** Serve ONE query from the cell-partitioned assignment store in at most
     * two Spark jobs — [[ivfSearchCells]] over the store read (its schema
@@ -2744,12 +2682,13 @@ object LlmOps {
   /** Health of the stored index against the CURRENT corpus. Two staleness
     * rules, both against the build-time baseline:
     *
-    *   - size: the √N rule's c for today's corpus exceeds `growFactor` ×
-    *     the indexed c — cells have grown past their intended occupancy
-    *     and per-probe work (~nprobe × N/c) with it;
-    *   - drift: mean assignment cosine dropped more than `cosDrop` below
-    *     the build-time mean — new data lands far from every trained
-    *     centroid (distribution shift exact-size checks can't see).
+    *   - size: the √N rule's c for today's corpus exceeds twice the
+    *     indexed c (`AnnGrowFactor`) — cells have grown past their
+    *     intended occupancy and per-probe work (~nprobe × N/c) with it;
+    *   - drift: mean assignment cosine dropped more than 0.05
+    *     (`AnnCosDrop`) below the build-time mean — new data lands far
+    *     from every trained centroid (distribution shift exact-size
+    *     checks can't see).
     *
     * Cost: one corpus scan against the broadcast c-row centroid table
     * plus a count — linear, no shuffle of the corpus. For a corpus too
@@ -2758,9 +2697,7 @@ object LlmOps {
     * so a uniform sample estimates them; the decision thresholds already
     * carry slack.
     */
-  def annIndexHealth(emb0: DataFrame, path: String, growFactor: Double = 2.0,
-                     cosDrop: Double = 0.05,
-                     corpusSizeHint: Option[Long] = None,
+  def annIndexHealth(emb0: DataFrame, path: String,
                      centsHint: Option[DataFrame] = None): AnnIndexHealth = {
     val spark = emb0.sparkSession
     val st = graft.Tables.parquet(spark, annStatsPath(path))
@@ -2778,11 +2715,11 @@ object LlmOps {
     val now = kmeansAssignAuto(emb0,
         centsHint.getOrElse(readAnnIndex(spark, path)))
       .agg(count(lit(1)).as("n"), round6(avg(col("ccos"))).as("m")).head()
-    val nNow = corpusSizeHint.getOrElse(now.getLong(0))
+    val nNow = now.getLong(0)
     val cAuto = kmeansAutoC(nNow)
     val meanNow = now.getDouble(1)
-    val sizeStale = cAuto > growFactor * cIndex
-    val driftStale = meanBuild - meanNow > cosDrop
+    val sizeStale = cAuto > AnnGrowFactor * cIndex
+    val driftStale = meanBuild - meanNow > AnnCosDrop
     val reason =
       if (sizeStale && driftStale) "size+drift"
       else if (sizeStale) "size"
@@ -2792,16 +2729,25 @@ object LlmOps {
       sizeStale || driftStale, reason)
   }
 
+  /** [[annIndexHealth]]'s size rule: stale once the √N rule's c exceeds
+    * twice the indexed c.
+    */
+  private val AnnGrowFactor = 2.0
+
+  /** [[annIndexHealth]]'s drift rule: stale once the mean assignment
+    * cosine falls more than this below the build-time mean.
+    */
+  private val AnnCosDrop = 0.05
+
   /** Maintenance entry point: retrain iff [[annIndexHealth]] says stale.
     * Returns the health report that drove the decision (post-refresh
-    * state is a fresh index over today's corpus).
+    * state is a fresh index over today's corpus). The retrain takes the
+    * report's `cAuto` as its c, so its stats row records the same n and c
+    * the health scan measured, with no second count.
     */
-  def refreshAnnIndex(emb0: DataFrame, path: String, growFactor: Double = 2.0,
-                      cosDrop: Double = 0.05, iters: Int = 2): AnnIndexHealth = {
-    val h = annIndexHealth(emb0, path, growFactor, cosDrop,
-      corpusSizeHint = None)
-    if (h.stale) writeAnnIndex(emb0, path, cHint = None, iters = iters,
-      corpusSizeHint = Some(h.nNow))
+  def refreshAnnIndex(emb0: DataFrame, path: String): AnnIndexHealth = {
+    val h = annIndexHealth(emb0, path)
+    if (h.stale) writeAnnIndex(emb0, path, cHint = Some(h.cAuto))
     h
   }
 
@@ -3236,9 +3182,9 @@ object LlmOps {
     */
   val LmCacheCrossoverDocs = 4000000L
 
-  /** Byte-denominated fallback for the crossover when no row count is
-    * available from the caller or the plan's statistics: 4M docs at the
-    * ~1 KiB/doc Catalyst in-memory row estimate of the test corpora.
+  /** Byte-denominated fallback for the crossover when the plan's
+    * statistics carry no row count: 4M docs at the ~1 KiB/doc Catalyst
+    * in-memory row estimate of the test corpora.
     * Selection noise here is perf-only — both forms are value-identical
     * (parity spec-pinned) — so a rough byte estimate is safe.
     */
@@ -3264,26 +3210,19 @@ object LlmOps {
     * orders under the rounding step).
     *
     * The evaluation form ([[lmScoreBy]]'s `cached`) is picked by corpus
-    * size at [[LmCacheCrossoverDocs]] — `corpusSizeHint` skips
-    * any size estimation when the caller already knows N. Without a
-    * hint the selector reads the optimized plan's STATISTICS (rowCount
-    * when known, else sizeInBytes against [[LmCacheCrossoverBytes]]) —
-    * never an extra count() action over a possibly expensive derived
-    * lineage. A lineage whose leaves carry NO stats (sizeInBytes is the
-    * defaultSizeInBytes fallback) is UNKNOWN, which resolves to the
-    * two-explode form — it may be tiny, and materializing a gram cache
-    * for it inverts the measured crossover (r11 ADVICE); callers that
-    * know better pass corpusSizeHint. Both branches are value-identical
-    * (parity spec-pinned); only the physical shape differs.
+    * size at [[LmCacheCrossoverDocs]], read from the optimized plan's
+    * STATISTICS (rowCount when known, else sizeInBytes against
+    * [[LmCacheCrossoverBytes]]) — never an extra count() action over a
+    * possibly expensive derived lineage. A lineage whose leaves carry NO
+    * stats (sizeInBytes is the defaultSizeInBytes fallback) is UNKNOWN,
+    * which resolves to the two-explode form — it may be tiny, and
+    * materializing a gram cache for it inverts the measured crossover
+    * (r11 ADVICE). Both branches are value-identical (parity
+    * spec-pinned); only the physical shape differs.
     */
-  def lmScore(docs: DataFrame, vocabK: Int = 4096,
-              corpusSizeHint: Option[Long] = None): DataFrame = {
-    val small = corpusSizeHint match {
-      case Some(n) => n < LmCacheCrossoverDocs
-      case None =>
-        statsSaySmall(docs, LmCacheCrossoverDocs, LmCacheCrossoverBytes)
-          .getOrElse(true) // unknown → no materialization
-    }
+  def lmScore(docs: DataFrame, vocabK: Int = 4096): DataFrame = {
+    val small = statsSaySmall(docs, LmCacheCrossoverDocs, LmCacheCrossoverBytes)
+      .getOrElse(true) // unknown → no materialization
     lmScoreBy(docs, Seq("doc_id"), None, vocabK, cached = !small)
   }
 
@@ -3344,15 +3283,14 @@ object LlmOps {
     */
   def qualityWeightedSample(docs: DataFrame,
                             lo: Double, scale: Double,
-                            vocabK: Int = 4096,
-                            corpusSizeHint: Option[Long] = None): DataFrame = {
+                            vocabK: Int = 4096): DataFrame = {
     // (score - lo) * scale, not (score - lo) / (hi - lo): a span like
     // 0.12 is not exactly representable, and the engine mirroring this
     // would compute a SLIGHTLY different divisor from its own literals
     // — multiply by an exactly-representable scale (8.0 = a 0.125 span)
     // and the arithmetic is bit-identical everywhere
     require(scale > 0, s"scale must be positive, got $scale")
-    val scored = lmScore(docs, vocabK, corpusSizeHint)
+    val scored = lmScore(docs, vocabK)
     val p = greatest(lit(0.0), least(lit(1.0),
       (col("avg_logp") - lit(lo)) * lit(scale)))
     val draw =
@@ -4266,35 +4204,6 @@ object LlmOps {
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .withColumn("syms", array_remove(split(col("w"), ""), ""))
 
-  /** Byte-pair-encoding vocabulary induction (the public construction —
-    * Sennrich/Haddow/Birch, ACL 2016): starting from characters, `rounds`
-    * times take the most frequent adjacent symbol pair (weighted by word
-    * frequency; ties to the lexicographically smallest (left, right) so
-    * the table is deterministic and engine-portable) and merge it
-    * everywhere. Stops early when no pair repeats (max count < 2 — merging
-    * singletons would just memorize words).
-    *
-    * Scale shape: the corpus is read ONCE (the [[bpeWordTable]] collapse,
-    * materialized by an eager localCheckpoint); each round is then one
-    * map-combined pair-count aggregate over the word table (adjacent pairs
-    * via zip_with over two slice arguments — no lambda touches an outer
-    * column) + a 1-row argmax collect, and one stacked
-    * `graft_bpe_merge` projection (codegen'd single pass). Lineage is
-    * re-checkpointed every `checkpointEvery` rounds so plan depth stays
-    * bounded at large `rounds`. Driver state is the merge table itself —
-    * `rounds` entries, bounded by the literal (the r = 30k production
-    * tier holds ~30k short strings, KBs). Returns the merge table and the
-    * final symbolized word table (callers run round-trip / vocab checks
-    * against it).
-    *
-    * REGIME: below [[bpeFitsDriver]] the loop runs in memory on the
-    * collected word table ([[bpeTrainDriver]] — output-identical,
-    * spec-pinned), because R sequential rounds each costing a scheduled
-    * distributed job is the wrong trade once the word table fits the
-    * driver; the distributed rounds are the beyond-gate form.
-    * `forceDistributed` pins the distributed regime (specs, scale
-    * rehearsal).
-    */
   /** Regime gate for [[bpeTrain]]: the distinct-word table's estimated
     * driver footprint (~120 B/word of map+count overhead + ~40 B/char for
     * the early all-singleton symbol vectors — the constants in the
@@ -4314,12 +4223,41 @@ object LlmOps {
     // ~2× pessimistic to carry GC headroom
     nWords * 120L + totalChars * 40L <= budgetBytes
 
+  /** Distributed BPE rounds between lineage checkpoints. */
+  private val BpeCheckpointEvery = 8
+
+  /** Byte-pair-encoding vocabulary induction (the public construction —
+    * Sennrich/Haddow/Birch, ACL 2016): starting from characters, `rounds`
+    * times take the most frequent adjacent symbol pair (weighted by word
+    * frequency; ties to the lexicographically smallest (left, right) so
+    * the table is deterministic and engine-portable) and merge it
+    * everywhere. Stops early when no pair repeats (max count < 2 — merging
+    * singletons would just memorize words).
+    *
+    * Scale shape: the corpus is read ONCE (the [[bpeWordTable]] collapse,
+    * materialized by an eager localCheckpoint); each round is then one
+    * map-combined pair-count aggregate over the word table (adjacent pairs
+    * via zip_with over two slice arguments — no lambda touches an outer
+    * column) + a 1-row argmax collect, and one stacked
+    * `graft_bpe_merge` projection (codegen'd single pass). Lineage is
+    * re-checkpointed every 8 rounds (`BpeCheckpointEvery`) so plan depth
+    * stays bounded at large `rounds`. Driver state is the merge table
+    * itself — `rounds` entries, bounded by the literal (the r = 30k
+    * production tier holds ~30k short strings, KBs). Returns the merge table and the
+    * final symbolized word table (callers run round-trip / vocab checks
+    * against it).
+    *
+    * REGIME: below [[bpeFitsDriver]] the loop runs in memory on the
+    * collected word table ([[bpeTrainDriver]] — output-identical,
+    * spec-pinned), because R sequential rounds each costing a scheduled
+    * distributed job is the wrong trade once the word table fits the
+    * driver; the distributed rounds are the beyond-gate form.
+    * `driverWordBudgetBytes = 0L` runs the distributed rounds on any
+    * non-empty word table (specs, scale rehearsal).
+    */
   def bpeTrain(docs: DataFrame, rounds: Int = 20,
-               checkpointEvery: Int = 8,
-               driverWordBudgetBytes: Long = 512L << 20,
-               forceDistributed: Boolean = false): (Seq[BpeMerge], DataFrame) = {
-    val (m, wc, _) = bpeTrainFull(docs, rounds, checkpointEvery,
-      driverWordBudgetBytes, forceDistributed)
+               driverWordBudgetBytes: Long = 512L << 20): (Seq[BpeMerge], DataFrame) = {
+    val (m, wc, _) = bpeTrainFull(docs, rounds, driverWordBudgetBytes)
     (m, wc)
   }
 
@@ -4328,9 +4266,7 @@ object LlmOps {
     * aggregates over the genuinely-distributed word table).
     */
   private[graft] def bpeTrainFull(docs: DataFrame, rounds: Int = 20,
-               checkpointEvery: Int = 8,
-               driverWordBudgetBytes: Long = 512L << 20,
-               forceDistributed: Boolean = false)
+               driverWordBudgetBytes: Long = 512L << 20)
       : (Seq[BpeMerge], DataFrame, Option[BpeAudit]) = {
     require(rounds >= 1, s"bpeTrain: rounds must be >= 1, got $rounds")
     // ONE corpus pass builds the word table; the gate aggregate, the
@@ -4338,14 +4274,12 @@ object LlmOps {
     // checkpointed result (the corpus explode is the only corpus-sized
     // work in the whole trainer)
     val wc0 = bpeWordTable(docs).localCheckpoint()
-    if (!forceDistributed) {
-      val g = wc0.agg(count(lit(1)).as("n"),
-        sum(length(col("w"))).as("chars")).head()
-      val nW = g.getLong(0)
-      val chars = if (g.isNullAt(1)) 0L else g.getLong(1)
-      if (bpeFitsDriver(nW, chars, driverWordBudgetBytes))
-        return bpeTrainDriver(docs.sparkSession, wc0, rounds)
-    }
+    val g = wc0.agg(count(lit(1)).as("n"),
+      sum(length(col("w"))).as("chars")).head()
+    val nW = g.getLong(0)
+    val chars = if (g.isNullAt(1)) 0L else g.getLong(1)
+    if (bpeFitsDriver(nW, chars, driverWordBudgetBytes))
+      return bpeTrainDriver(docs.sparkSession, wc0, rounds)
     var wc = wc0
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var r = 1
@@ -4367,7 +4301,7 @@ object LlmOps {
         merges += BpeMerge(r, l, rr, pc)
         wc = wc.withColumn("syms",
           call_function("graft_bpe_merge", col("syms"), lit(l), lit(rr)))
-        if (r % checkpointEvery == 0) wc = wc.localCheckpoint()
+        if (r % BpeCheckpointEvery == 0) wc = wc.localCheckpoint()
         r += 1
       }
     }
@@ -4606,20 +4540,23 @@ object LlmOps {
   /** Tokenize words with an already-trained merge table: apply every merge
     * in learned order (the BPE encode discipline). Narrow — `rounds`
     * stacked single-pass merge kernels per row, nothing exchanged.
+    * Reads the word column `w` and adds `tokens`; lineage is checkpointed
+    * every 64 merges so plan depth stays bounded.
     */
-  def bpeEncode(words: DataFrame, merges: Seq[BpeMerge],
-                wordCol: String = "w", outCol: String = "tokens",
-                checkpointEvery: Int = 64): DataFrame = {
-    var df = ensureFns(words).withColumn(outCol,
-      array_remove(split(col(wordCol), ""), ""))
+  def bpeEncode(words: DataFrame, merges: Seq[BpeMerge]): DataFrame = {
+    var df = ensureFns(words).withColumn("tokens",
+      array_remove(split(col("w"), ""), ""))
     merges.zipWithIndex.foreach { case (m, i) =>
-      df = df.withColumn(outCol,
-        call_function("graft_bpe_merge", col(outCol), lit(m.left),
+      df = df.withColumn("tokens",
+        call_function("graft_bpe_merge", col("tokens"), lit(m.left),
           lit(m.right)))
-      if ((i + 1) % checkpointEvery == 0) df = df.localCheckpoint()
+      if ((i + 1) % BpeEncodeCheckpointEvery == 0) df = df.localCheckpoint()
     }
     df
   }
+
+  /** [[bpeEncode]] merges between lineage checkpoints. */
+  private val BpeEncodeCheckpointEvery = 64
 
   /** Registry report over [[bpeTrain]]: the first merge and the base
     * vocabulary are HASH-EXACT against the oracle (round 1 is plain SQL —

@@ -53,6 +53,18 @@ trait MigrateSink extends Serializable {
   def writeErrors(df: DataFrame, wave: Seq[Int]): Unit
 }
 
+object MigrateSink {
+  /** The guardrail-row layout every file-backed error home shares:
+    * `bucket=N/` partitions under `dir`, replaced per wave by dynamic
+    * overwrite so a re-driven wave leaves no stale rows.
+    */
+  private[migrate] def writeErrorsTo(df: DataFrame, dir: String): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket")
+      .parquet(dir)
+}
+
 /** Wrap an already-loaded DataFrame (the in-process test double and the
   * back-compat path for `run(spark, df, targetDir, cfg)`).
   */
@@ -102,10 +114,7 @@ final case class ParquetBucketSink(targetDir: String) extends MigrateSink {
       .parquet(targetDir)
 
   def writeErrors(df: DataFrame, wave: Seq[Int]): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(s"$targetDir/_errors")
+    MigrateSink.writeErrorsTo(df, s"$targetDir/_errors")
 }
 
 object CassandraConnector {
@@ -211,10 +220,7 @@ final case class GraftBatchTarget(baseDir: String,
     waves.flatMap(w => GraftBatchSink.runResult(waveRunId(w)))
 
   def writeErrors(df: DataFrame, wave: Seq[Int]): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(s"$baseDir/_errors")
+    MigrateSink.writeErrorsTo(df, s"$baseDir/_errors")
 }
 
 /** One Cassandra table plus the CDM-tunable connector knobs, mapped:
@@ -292,8 +298,5 @@ final case class CassandraSink(table: CassandraTable,
       .save()
 
   def writeErrors(df: DataFrame, wave: Seq[Int]): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(errorDir)
+    MigrateSink.writeErrorsTo(df, errorDir)
 }

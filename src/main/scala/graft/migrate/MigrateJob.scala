@@ -223,7 +223,7 @@ object MigrateJob {
     * AnalysisException deep in the chain) — CDM itself cannot write
     * writetimes it no longer carries.
     */
-  def transformOnly(df: DataFrame, cfg: Config, errors: Option[LongAccumulator] = None,
+  def transformOnly(df: DataFrame, cfg: Config,
                     beforeTransformer: DataFrame => DataFrame = identity): DataFrame = {
     // Only the increment references writetimeCol AFTER projection — a
     // filter-only config (minWritetime with incrementBy=0) may freely
@@ -599,7 +599,7 @@ object MigrateJob {
     // committed buckets); the rewrite is still counted in the observe pass
     // and fails the wave AFTER the (correctly-routed, idempotent) write.
     val guard = cfg.transformerClass.isDefined
-    val transformed = transformOnly(tagged, cfg2, None,
+    val transformed = transformOnly(tagged, cfg2,
       beforeTransformer =
         if (guard) (df: DataFrame) => df.withColumn("_bucket_src", col("bucket"))
         else identity)

@@ -1452,8 +1452,8 @@ object LlmQueries {
     * append produces — plus the health columns: `mb` is the build-time
     * mean assignment cosine (winning rows restricted to the base), `mn`
     * the post-append mean over everything, and the reasons replay
-    * annIndexHealth's size/drift rules (c_index = 4, growFactor 2,
-    * cosDrop 0.05; pre-append now == build, so only the size rule can
+    * annIndexHealth's size/drift rules (c_index = 4, size factor 2,
+    * cosine drop 0.05; pre-append now == build, so only the size rule can
     * fire pre).
     */
   private lazy val annIndexAppendSql: String =

@@ -466,8 +466,9 @@ object Stress {
     // rule's c = √10M ≈ 3162 the FLAT assignment pays 3162 dots/vector —
     // the N·√N wall; the hierarchical form pays ~2√c ≈ 113. Centroids
     // train on a c×16 id-prefix sample (standard IVF practice) so the
-    // pair isolates ASSIGNMENT cost; HierProbe holds the parity table
-    // (assignment agreement + cosine loss on disagreements).
+    // pair isolates ASSIGNMENT cost; NOTES.md's two-level assignment table
+    // holds the parity figures (assignment agreement + cosine loss on
+    // disagreements).
     val cAuto = graft.ext.LlmOps.kmeansAutoC(nVecXl)
     val hierCents = graft.ext.LlmOps.kmeansCentroids(
       spark.read.parquet(s"$base/emb_xl10.parquet")
@@ -501,13 +502,13 @@ object Stress {
       |Two-level assignment at auto-c (c=$cAuto): the full ${nVecXl / 1000000}M-vector
       |corpus assigns hierarchically in ${hierAssign}%.1f s, vs ~${100 * flatAssign}%.0f s
       |projected for flat (measured ${flatAssign}%.1f s on a 1/100 slice — flat pays
-      |c dots/vector, the N·√N flop wall; two-level pays ~(1+probeG)√c).
+      |c dots/vector, the N·√N flop wall; two-level probing 4 groups pays ~5√c).
       |Both paths run the narrow fixed-width argmax (hash aggregate,
       |map-side combine, embedding rejoined by vec_id) — the r12 fix after
       |the array-bearing max(struct) form sort-spilled the vector×centroid
       |pair stream to ENOSPC on this row.
-      |HierProbe's two-regime table quantifies the hierarchical residual
-      |miss (clustered: parity 1.0 at probeG=4; uniform noise: cell
+      |NOTES.md's two-level assignment table quantifies the hierarchical
+      |residual miss (clustered: parity 1.0 probing 4 groups; uniform noise: cell
       |identity is tie-arbitrary, cosine loss ~0.01).
       |""".stripMargin
 

@@ -56,66 +56,6 @@ object Diff {
                                tieBreak: Seq[String] = Nil) extends DupPkPolicy
   case object AssumeUnique extends DupPkPolicy
 
-  /** Number of surplus rows beyond one-per-PK (0 ⇔ PKs unique). One
-    * aggregate job in the common case; a second exact-distinct job only
-    * when the approximate screen cannot certify uniqueness. Standalone
-    * probe (feed auditing); classify itself gates IN-join at no extra
-    * pass — see [[DupPkPolicy]].
-    */
-  private[graft] def dupPkCount(df: DataFrame, pk: Seq[String]): Long = {
-    val k = struct(pk.map(col): _*)
-    val r = df.agg(count(lit(1)).as("n"), approx_count_distinct(k).as("ad")).head()
-    val n = r.getLong(0)
-    if (r.getLong(1) == n) 0L
-    else n - df.agg(countDistinct(k).as("d")).head().getLong(0)
-  }
-
-  /** Pre-collapse for [[CollapseLww]]; identity otherwise. */
-  private def precollapse(df: DataFrame, pk: Seq[String],
-                          policy: DupPkPolicy): DataFrame = policy match {
-    case CollapseLww(wt, tb) => lwwMerge(df, pk, wt, tb)
-    case _ => df
-  }
-
-  /** Attach the per-PK row count that rides the join's shuffle (FailOnDup
-    * only). The window needs exactly the partitioning+sort the SMJ needs,
-    * so Catalyst plans it into the same exchange.
-    */
-  private def withPkCount(df: DataFrame, cnt: String, pk: Seq[String],
-                          policy: DupPkPolicy): DataFrame = policy match {
-    case FailOnDup =>
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(pk.map(col): _*)
-      df.withColumn(cnt, count(lit(1)).over(w))
-    case _ => df
-  }
-
-  /** Raise on the first duplicated PK instead of emitting phantom rows
-    * (FailOnDup only). A FILTER, not a projection: any action (even a bare
-    * count(), which prunes every unused column) must evaluate filter
-    * predicates, so the gate cannot be optimized away. Null counts (side
-    * absent in the outer join) pass — absence is a legal diff outcome.
-    */
-  private def dupGuard(joined: DataFrame, pk: Seq[String],
-                       policy: DupPkPolicy): DataFrame = policy match {
-    case FailOnDup =>
-      def msg(side: String) = concat(
-        lit(s"$side side has duplicate-PK rows on (${pk.mkString(", ")}), e.g. "),
-        concat_ws(",", pk.map(c => col(c).cast("string")): _*),
-        lit(": the diff full-outer join would multiply them into phantom " +
-          "rows. Pre-collapse with Diff.CollapseLww(writetimeCol) or fix the feed."))
-      def guard(cnt: String, side: String): Column =
-        when(coalesce(col(cnt), lit(1L)) > 1L,
-          raise_error(msg(side)).cast("boolean")).otherwise(lit(true))
-      joined.filter(guard("_o_cnt", "origin") && guard("_t_cnt", "target"))
-    case _ => joined
-  }
-
-  private def dropGateCols(df: DataFrame, policy: DupPkPolicy): DataFrame =
-    policy match {
-      case FailOnDup => df.drop("_o_cnt", "_t_cnt")
-      case _ => df
-    }
-
   private def eqPred(compare: Seq[String]): Column =
     compare.map(c => col(s"o_$c") <=> col(s"t_$c"))
       .reduceOption(_ && _).getOrElse(lit(true)) // PK-only table: trivially equal
@@ -125,23 +65,10 @@ object Diff {
     */
   def classify(origin: DataFrame, target: DataFrame,
                pk: Seq[String], compare: Seq[String],
-               onDup: DupPkPolicy = FailOnDup): DataFrame = {
-    val (o, t) = (precollapse(origin, pk, onDup), precollapse(target, pk, onDup))
-    val oSel = withPkCount(o.select(
-      pk.map(col) ++ (compare.map(c => col(c).as(s"o_$c")) :+ lit(1).as("_o_present")): _*),
-      "_o_cnt", pk, onDup)
-    val tSel = withPkCount(t.select(
-      pk.map(col) ++ (compare.map(c => col(c).as(s"t_$c")) :+ lit(1).as("_t_present")): _*),
-      "_t_cnt", pk, onDup)
-    dropGateCols(
-      dupGuard(oSel.join(tSel, pk, "full_outer"), pk, onDup)
-        .withColumn(StatusCol,
-          when(col("_o_present").isNull, lit("extra_in_target"))
-            .when(col("_t_present").isNull, lit("missing"))
-            .when(eqPred(compare), lit("valid"))
-            .otherwise(lit("mismatch"))),
-      onDup)
-  }
+               onDup: DupPkPolicy = FailOnDup): DataFrame =
+    classifyWith(origin, target, pk, onDup,
+      side => compare.map(c => col(c).as(s"${side}_$c")) :+ lit(1).as(s"_${side}_present"),
+      side => col(s"_${side}_present"), eqPred(compare))
 
   /** Engine-internal fast classification: compares row content via a single
     * 64-bit xxhash of the compare columns (graft.core.Hashing.fastRowHash)
@@ -153,23 +80,54 @@ object Diff {
     */
   def classifyByHash(origin: DataFrame, target: DataFrame,
                      pk: Seq[String], compare: Seq[String],
-                     onDup: DupPkPolicy = FailOnDup): DataFrame = {
-    import graft.core.Hashing
-    val (o, t) = (precollapse(origin, pk, onDup), precollapse(target, pk, onDup))
-    val oSel = withPkCount(
-      o.select(pk.map(col) :+ Hashing.fastRowHash(compare).as("_o_h"): _*),
-      "_o_cnt", pk, onDup)
-    val tSel = withPkCount(
-      t.select(pk.map(col) :+ Hashing.fastRowHash(compare).as("_t_h"): _*),
-      "_t_cnt", pk, onDup)
-    dropGateCols(
-      dupGuard(oSel.join(tSel, pk, "full_outer"), pk, onDup)
-        .withColumn(StatusCol,
-          when(col("_o_h").isNull, lit("extra_in_target"))
-            .when(col("_t_h").isNull, lit("missing"))
-            .when(col("_o_h") === col("_t_h"), lit("valid"))
-            .otherwise(lit("mismatch"))),
-      onDup)
+                     onDup: DupPkPolicy = FailOnDup): DataFrame =
+    classifyWith(origin, target, pk, onDup,
+      side => Seq(graft.core.Hashing.fastRowHash(compare).as(s"_${side}_h")),
+      side => col(s"_${side}_h"), col("_o_h") === col("_t_h"))
+
+  /** The one classification body: each side ("o", "t") projects the PK
+    * plus `payload(side)`, whose `present(side)` column is null only where
+    * the side is absent from the full-outer join; `valid` compares the
+    * payloads. The [[DupPkPolicy]] steps run here and nowhere else:
+    * CollapseLww pre-collapses both sides; FailOnDup adds each side's
+    * per-PK count window, guards the join with a FILTER (any action must
+    * evaluate it, even a bare count) that raises on a PK counted twice (a
+    * null count is a side absent from the join, a legal diff outcome),
+    * and drops the counts.
+    */
+  private def classifyWith(origin: DataFrame, target: DataFrame, pk: Seq[String],
+                           onDup: DupPkPolicy, payload: String => Seq[Column],
+                           present: String => Column, valid: Column): DataFrame = {
+    val gate = onDup == FailOnDup
+    def collapse(df: DataFrame): DataFrame = onDup match {
+      case CollapseLww(wt, tb) => lwwMerge(df, pk, wt, tb)
+      case _ => df
+    }
+    def sel(df: DataFrame, side: String): DataFrame = {
+      val out = df.select(pk.map(col) ++ payload(side): _*)
+      if (!gate) out
+      else out.withColumn(s"_${side}_cnt", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(pk.map(col): _*)))
+    }
+    val (o, t) = (collapse(origin), collapse(target))
+    val joined = sel(o, "o").join(sel(t, "t"), pk, "full_outer")
+    val guarded = if (!gate) joined else {
+      def msg(side: String) = concat(
+        lit(s"$side side has duplicate-PK rows on (${pk.mkString(", ")}), e.g. "),
+        concat_ws(",", pk.map(c => col(c).cast("string")): _*),
+        lit(": the diff full-outer join would multiply them into phantom " +
+          "rows. Pre-collapse with Diff.CollapseLww(writetimeCol) or fix the feed."))
+      def guard(cnt: String, side: String): Column =
+        when(coalesce(col(cnt), lit(1L)) > 1L,
+          raise_error(msg(side)).cast("boolean")).otherwise(lit(true))
+      joined.filter(guard("_o_cnt", "origin") && guard("_t_cnt", "target"))
+    }
+    val classified = guarded.withColumn(StatusCol,
+      when(present("o").isNull, lit("extra_in_target"))
+        .when(present("t").isNull, lit("missing"))
+        .when(valid, lit("valid"))
+        .otherwise(lit("mismatch")))
+    if (gate) classified.drop("_o_cnt", "_t_cnt") else classified
   }
 
   /** DiffData-style summary report: one row per class with its count

@@ -83,7 +83,7 @@ class AnnIndexSpec extends SparkSpec {
   test("corpus growth past the sqrt-N rule trips the size rule") {
     val path = dir("size")
     LlmOps.writeAnnIndex(baseCorpus(40), path)
-    // 5x the corpus, same distribution: cAuto jumps past growFactor * c
+    // 5x the corpus, same distribution: cAuto jumps past twice the indexed c
     val grown = (0 until 5).map(r => baseCorpus(40, idOffset = 1000L * r))
       .reduce(_ unionByName _)
     val h = LlmOps.annIndexHealth(grown, path)
@@ -114,6 +114,8 @@ class AnnIndexSpec extends SparkSpec {
     val h2 = LlmOps.annIndexHealth(shifted, path)
     assert(!h2.stale && h2.reason == "fresh", h2.toString)
     assert(h2.nIndexed == 80L)
+    // the retrain took the health scan's c and n
+    assert(h2.cIndex == h1.cAuto && h2.nIndexed == h1.nNow, s"$h1 / $h2")
     // a fresh index is left alone (stats row unchanged by a no-op refresh)
     val h3 = LlmOps.refreshAnnIndex(shifted, path)
     assert(!h3.stale)
@@ -330,7 +332,8 @@ class AnnIndexSpec extends SparkSpec {
     // absolute tracking vs flat: this forced regime (c = N/2, coarse
     // groups ≪ natural clusters) is far off the auto-c design point
     // (c = √N), so hier is approximate here — bound the gap, exact
-    // parity at the design point is HierProbe's table + the cones spec
+    // parity at the design point is NOTES.md's two-level assignment
+    // table + the cones spec
     val flatMean = LlmOps.kmeansAssignTo(emb, cents)
       .agg(avg(col("ccos"))).head().getDouble(0)
     assert(math.abs(h.meanCosNow - flatMean) <= 0.05,
@@ -504,9 +507,5 @@ class AnnIndexSpec extends SparkSpec {
       LlmOps.annAssignedSearch(spark, p, cents, q, nprobe = 1, k = 5)
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(serve(store) == serve(full))
-    // replay with the dedupe guard is a no-op
-    LlmOps.appendAnnAssignments(delta, cents, store, dedupeAgainstStore = true)
-    assert(spark.read.parquet(store).count() == 120,
-      "dedupe-guarded replay must not duplicate the delta")
   }
 }

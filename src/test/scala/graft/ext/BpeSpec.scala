@@ -115,9 +115,12 @@ class BpeSpec extends SparkSpec {
        "never a semantics switch)") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
       .limit(400).localCheckpoint()
-    val (mDrv, wcDrv) = LlmOps.bpeTrain(docs, rounds = 12)
-    val (mDst, wcDst) = LlmOps.bpeTrain(docs, rounds = 12,
-      forceDistributed = true)
+    val (mDrv, wcDrv, auditDrv) = LlmOps.bpeTrainFull(docs, rounds = 12)
+    // a zero budget fails the gate on any non-empty word table
+    val (mDst, wcDst, auditDst) = LlmOps.bpeTrainFull(docs, rounds = 12,
+      driverWordBudgetBytes = 0L)
+    assert(auditDrv.isDefined, "the default budget must run the driver rounds")
+    assert(auditDst.isEmpty, "a zero budget must run the distributed rounds")
     assert(mDrv == mDst, s"merge tables differ:\n drv=$mDrv\n dst=$mDst")
     val a = wcDrv.select(col("w"), col("cnt"), col("syms")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).sortBy(_._1)

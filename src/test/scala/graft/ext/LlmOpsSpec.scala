@@ -349,20 +349,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(knnSet(16) == knnSet(Int.MaxValue))
   }
 
-  test("scale-form auto-selection: pack shard width at the measured crossover") {
-    assert(LlmOps.packShardWidth(1000L) == Long.MaxValue,
-      "below the crossover one giant shard recovers the single-window plan")
-    assert(LlmOps.packShardWidth(LlmOps.PackCrossoverDocsPerLang) == Long.MaxValue)
-    assert(LlmOps.packShardWidth(LlmOps.PackCrossoverDocsPerLang + 1) == (1L << 20),
-      "above the crossover the production two-level width runs")
-    // auto wiring end-to-end: width-invariance means auto must reproduce
-    // the explicit multi-shard rows exactly on any corpus
-    val p = spark.read.parquet(s"${sf()}/documents.parquet")
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-    assert(key(LlmOps.packSequencesAuto(p)) == key(LlmOps.packSequences(p, 16L)))
-  }
-
   test("decontaminateMinhash flags near-dup corpus docs, not clean ones") {
     val bench = docs(
       10L -> "the quick brown fox jumps over the lazy dog near the river bank",
@@ -455,7 +441,7 @@ class LlmOpsSpec extends SparkSpec {
             lang <- Gen.oneOf("en", "fr", "de")
           } yield (id, ("w " * nw).trim, lang)
         })
-      width <- Gen.oneOf(1L, 2L, 3L, 7L, 64L, 1L << 20)
+      width <- Gen.oneOf(1L, 2L, 3L, 7L, 64L, 1L << 20, Long.MaxValue)
     } yield (rows, width)
     for ((rows, width) <- samples(corpusGen, 8)) {
       val expected = rows.groupBy(_._3).flatMap { case (lang, rs) =>

@@ -23,7 +23,8 @@ class TrainedOpsSpec extends SparkSpec {
   }
 
   test("kmeans separates planted clusters and assignments are exhaustive") {
-    val assigned = LlmOps.kmeansAssignments(planted, c = 2, iters = 2)
+    val assigned = LlmOps.kmeansAssignTo(planted,
+        LlmOps.kmeansCentroids(planted, c = 2, iters = 2))
       .select(col("vec_id"), col("cid")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(assigned.size == 20)
@@ -273,11 +274,11 @@ class TrainedOpsSpec extends SparkSpec {
     (103L, Seq(0.8f, 0.6f, 0f, 0f)),
     (104L, Seq(0f, 0.6f, 0.8f, 0f))).toDF("vec_id", "embedding")
 
-  test("semanticDedup drops re-encoded twins inside their learned cluster, " +
+  test("semanticDedupWith drops re-encoded twins inside their learned cluster, " +
     "keeps the smallest id, and leaves sub-threshold cluster-mates alone") {
     val base = semFixture.filter(col("vec_id") < 100L)
-    val got = LlmOps.semanticDedup(semFixture, base, c = 2, iters = 2,
-        threshold = 0.95).collect()
+    val got = LlmOps.semanticDedupWith(semFixture,
+        LlmOps.kmeansCentroids(base, c = 2, iters = 2), threshold = 0.95).collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getBoolean(2))).toMap
     assert(got.keySet == Set(1L, 2L, 3L, 4L, 103L, 104L))
     assert(got.filter(_._2._2).keySet == Set(103L, 104L),
@@ -287,7 +288,7 @@ class TrainedOpsSpec extends SparkSpec {
     assert(got(103L)._1 == got(3L)._1 && got(104L)._1 == got(4L)._1)
   }
 
-  test("semanticDedup keeper rule: of three identical copies the smallest " +
+  test("semanticDedupWith keeper rule: of three identical copies the smallest " +
     "id survives and both larger ids drop; zero-norm vectors are excluded") {
     val tri = Seq(
       (1L, Seq(1f, 0f, 0f, 0f)),
@@ -296,8 +297,8 @@ class TrainedOpsSpec extends SparkSpec {
       (107L, Seq(0.6f, 0.8f, 0f, 0f)),
       (207L, Seq(0.6f, 0.8f, 0f, 0f)),
       (999L, Seq(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
-    val got = LlmOps.semanticDedup(tri, tri, c = 2, iters = 1,
-        threshold = 0.95).collect()
+    val got = LlmOps.semanticDedupWith(tri,
+        LlmOps.kmeansCentroids(tri, c = 2, iters = 1), threshold = 0.95).collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(!got.contains(999L), "zero-norm vector must be excluded")
     assert(got.filter(_._2).keySet == Set(107L, 207L), s"got $got")

@@ -85,9 +85,6 @@ class DiffSpec extends SparkSpec {
     val phantom = Diff.classify(dupped, dupped, Seq("k"), Seq("v"),
       onDup = Diff.AssumeUnique)
     assert(phantom.count() == 5L) // 1 + 2×2: the multiplication the gate stops
-    // dupPkCount screen: exact path only engages on apparent mismatch
-    assert(Diff.dupPkCount(dupped, Seq("k")) == 1L)
-    assert(Diff.dupPkCount(clean, Seq("k")) == 0L)
   }
 
   test("validateSample survives a duplicate-PK target (found ≤ sampled, no negative missing)") {
