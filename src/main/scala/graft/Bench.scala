@@ -9,8 +9,8 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       // Vanilla session on purpose (no extensions conf, no legacy flags):
-      // queries self-register graft_* functions and read events with an
-      // explicit schema, like any external driver would.
+      // graft_* functions come with graft on the classpath (GraftExtensions)
+      // and events read with an explicit schema, like any external driver.
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,7 +18,8 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       // Deliberately NO spark.sql.extensions and NO nanosAsLong flag: this
       // is the "external driver with a vanilla session" posture — graft_*
-      // functions self-register at query time (GraftFunctions.ensure) and
+      // functions come from graft being on the classpath when the session
+      // is built (GraftExtensions, a SparkSessionExtensionsProvider) and
       // events reads via shape detection (Common.events).
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -23,15 +23,6 @@ import org.apache.spark.storage.StorageLevel.NONE
   */
 object LlmOps {
 
-  /** Runtime fallback registration of graft_dot/graft_hash_array, so these
-    * operators work on any session — not only ones built with
-    * spark.sql.extensions=graft.GraftExtensions. No-op once registered.
-    */
-  private def ensureFns(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensure(df.sparkSession)
-    df
-  }
-
   /** The one cache scope of this library's operators: persists each of
     * `caches` (in order, so a later cache reads an earlier one's relation)
     * unless it is already cached — an operator's materialized result handed
@@ -77,7 +68,7 @@ object LlmOps {
     * family, whose downstream columns use [[round6]]).
     */
   def withWords(df: DataFrame): DataFrame =
-    ensureFns(df).withColumn("words", expr("split(lower(text), ' ')"))
+    df.withColumn("words", expr("split(lower(text), ' ')"))
 
   /** Word 3-gram shingles (docs shorter than 3 words shingle to the whole
     * text so every doc has ≥1 shingle).
@@ -92,7 +83,7 @@ object LlmOps {
     * CollapseProject.
     */
   def withShingles(df: DataFrame): DataFrame =
-    ensureFns(df).withColumn("shingles", expr(
+    df.withColumn("shingles", expr(
       "if(size(words) < 3, array(lower(text)), graft_word_ngrams(words, 3))"))
 
   /** MinHash signature: k independent min-hashes over the shingle set.
@@ -109,7 +100,7 @@ object LlmOps {
     * ~6× (measured at 1M docs; equivalence is spec-tested).
     */
   def withMinhashSig(df: DataFrame, k: Int): DataFrame =
-    ensureFns(df).withColumn("sh32", expr("graft_hash_array(shingles, '', 8)"))
+    df.withColumn("sh32", expr("graft_hash_array(shingles, '', 8)"))
       .withColumn("sig", expr(s"graft_minhash(sh32, $k)"))
 
   /** LSH band hashes: `bands` bands of `r` signature rows each; the band
@@ -120,7 +111,7 @@ object LlmOps {
     * the LSH pipeline's only wide op, so key width is its budget.
     */
   def withBandHashes(df: DataFrame, bands: Int, r: Int): DataFrame =
-    ensureFns(df).withColumn("bands",
+    df.withColumn("bands",
       expr(s"graft_band_hash(sig, $bands, $r, 15)"))
 
   /** (id, shingles), lazy. An operator that reads it more than once scopes
@@ -260,7 +251,7 @@ object LlmOps {
     * 32 bits keeps birthday collisions negligible at the test corpus size.
     */
   def withSimhash(df: DataFrame): DataFrame =
-    ensureFns(df).withColumn("hs", expr("graft_hash_array(words, ':sim', 15)"))
+    df.withColumn("hs", expr("graft_hash_array(words, ':sim', 15)"))
       // graft_simhash32 is the codegen'd vote loop; it replaces (and is
       // spec-tested bit-identical to) the interpreted HOF formulation
       //   aggregate(zip_with(aggregate(hs, int[32] votes, ...),
@@ -277,7 +268,7 @@ object LlmOps {
     * bits intact (2 differing bits can spoil at most 2 of the 3 blocks).
     */
   def withSimhash64(df: DataFrame): DataFrame =
-    ensureFns(df).withColumn("hs", expr("graft_hash_array(words, ':sim', 15)"))
+    df.withColumn("hs", expr("graft_hash_array(words, ':sim', 15)"))
       .withColumn("simhash64", expr("graft_simhash64(hs)"))
 
   /** Exact n-gram Jaccard similarity between two shingle-array columns
@@ -310,10 +301,7 @@ object LlmOps {
     Math.copySign(Math.floor(Math.abs(y) + 0.5d), y) / 1e6 + 0.0d
   }
 
-  /** [[round6]] at any literal scale (embed_quantize rounds at 9). The
-    * session must have the graft functions registered by evaluation time —
-    * every LlmOps entry point and [[withWords]] ensure that.
-    */
+  /** [[round6]] at any literal scale (embed_quantize rounds at 9). */
   def roundAt(c: Column, scale: Int): Column =
     call_function("graft_round", c, lit(scale))
 
@@ -338,7 +326,7 @@ object LlmOps {
     * embeddingNearDups.
     */
   def cosineTopK(embeddings: DataFrame, query: DataFrame, k: Int): DataFrame =
-    ensureFns(embeddings).crossJoin(broadcast(query.select(col("embedding").as("q"))))
+    embeddings.crossJoin(broadcast(query.select(col("embedding").as("q"))))
       .select(col("vec_id"), col("label"), cosine("embedding", "q").as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
@@ -408,7 +396,7 @@ object LlmOps {
     // 4-5x SLOWER than the float brute scan at 10M vectors, inverting the
     // operator's entire premise; with the native kernel the scan does
     // 1/4 the bytes of the float path at the same per-element cost
-    val cand = ensureFns(codes).crossJoin(q)
+    val cand = codes.crossJoin(q)
       .select(col("vec_id"),
         (expr("graft_dot(codes, q)") /
           (sqrt(expr("graft_dot(q, q)")) *
@@ -416,7 +404,7 @@ object LlmOps {
           .as("approx"))
       .orderBy(col("approx").desc, col("vec_id"))
       .limit(k * overfetch)
-    ensureFns(corpus).join(broadcast(cand.select(col("vec_id"))), "vec_id")
+    corpus.join(broadcast(cand.select(col("vec_id"))), "vec_id")
       .crossJoin(q)
       .select(col("vec_id"), col("label"), cosine("embedding", "q").as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -564,7 +552,7 @@ object LlmOps {
                         maxCell: Int = DefaultMaxCell,
                         saltChunk: Int = PairSaltChunk): DataFrame = {
     val (cells, bucketN) = withPairCellsAndBuckets(
-      ensureFns(embeddings).select(col("vec_id"), col("label"), col("embedding")), maxCell)
+      embeddings.select(col("vec_id"), col("label"), col("embedding")), maxCell)
     val e = cells.withColumn("nrm", sqrt(dot("embedding", "embedding")))
     val kept = e.filter(col("bucket_n") <= maxCell)
     val (xs, ys) = withPairSalt(kept, saltChunk)
@@ -602,7 +590,7 @@ object LlmOps {
     // 64-mult pass per vector, trivial next to the pairwise stage); no
     // persist, so the operator leaves no cached state behind
     val (e, bucketN) = withPairCellsAndBuckets(
-      ensureFns(embeddings).select(col("vec_id"), col("label"), col("embedding"))
+      embeddings.select(col("vec_id"), col("label"), col("embedding"))
         .withColumn("nrm", sqrt(dot("embedding", "embedding")))
         .filter(col("nrm") > 0), maxCell)
     val kept = e.filter(col("bucket_n") <= maxCell)
@@ -646,7 +634,7 @@ object LlmOps {
     * at corpus scale. Narrow per-row map, no shuffle.
     */
   def withWinnowFingerprints(df: DataFrame): DataFrame =
-    ensureFns(spreadSmall(df))
+    spreadSmall(df)
       .withColumn("hs", expr("graft_gram_hash(text, 5, ':wn', 15)"))
       .withColumn("wins", expr("graft_sliding_min(hs, 4)"))
       .withColumn("fps", array_distinct(col("wins")))
@@ -850,7 +838,7 @@ object LlmOps {
     * sf0.1: self-join 1.33 s, grouped 1.51 s). Output (a, b, hamming).
     */
   def simhashNearDups32(docs: DataFrame): DataFrame = {
-    val sh = withSimhash(withWords(ensureFns(docs)))
+    val sh = withSimhash(withWords(docs))
       .select(col("doc_id"), col("simhash"))
     // blocks of 11/11/10 bits: block b = bits [b*11, min((b+1)*11, 32))
     val blocked = sh.select(col("doc_id"), col("simhash"),
@@ -877,7 +865,7 @@ object LlmOps {
     */
   def simhashNearDups64(docs: DataFrame,
                         maxBucket: Int = DefaultMaxCell): DataFrame = {
-    val sh = withSimhash64(withWords(ensureFns(docs)))
+    val sh = withSimhash64(withWords(docs))
       .select(col("doc_id"), col("simhash64"))
     val blocked = sh.select(col("doc_id"), col("simhash64"),
       explode(expr(
@@ -911,7 +899,7 @@ object LlmOps {
 
   private[graft] def imagePhashBlocked(grids: DataFrame, idCol: String,
                                        gridCol: String): DataFrame = {
-    val hashed = ensureFns(grids)
+    val hashed = grids
       .select(col(idCol).as("doc_id"), expr(s"graft_dhash($gridCol)").as("phash"))
     // 21-bit blocks over bits 0-62; bit 63 is structurally zero (63
     // comparisons), so the div/mod arithmetic stays non-negative
@@ -951,7 +939,7 @@ object LlmOps {
 
   private[graft] def audioFingerprintBlocked(tracks: DataFrame, idCol: String,
                                              payloadCol: String): DataFrame = {
-    val hashed = ensureFns(tracks)
+    val hashed = tracks
       .select(col(idCol).as("doc_id"),
         expr(s"graft_dhash(graft_frame_energy($payloadCol, 64))").as("afp"))
     hashed.select(col("doc_id"), col("afp"),
@@ -1121,8 +1109,7 @@ object LlmOps {
     * the classic accuracy/cost dial: nprobe=cells gives brute force,
     * nprobe=1 the cheapest search.
     */
-  def ivfSearch(emb0: DataFrame, query: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val emb = ensureFns(emb0)
+  def ivfSearch(emb: DataFrame, query: DataFrame, nprobe: Int, k: Int): DataFrame = {
     val q = query.select(col("embedding").as("qv"))
     val probed = ivfCentroids(emb).crossJoin(broadcast(q))
       .select(col("label"),
@@ -1190,7 +1177,7 @@ object LlmOps {
     * primitive loops in whole-stage codegen, spec-pinned bit-identical.
     */
   def withLshSig(df: DataFrame): DataFrame =
-    ensureFns(df).withColumn("lsh_sig", expr("graft_lsh_sig(embedding)"))
+    df.withColumn("lsh_sig", expr("graft_lsh_sig(embedding)"))
 
   /** The SQL-HOF reference formulation of [[withLshSig]] — the form the
     * DuckDB oracle mirrors and the parity spec compares the native
@@ -1237,7 +1224,7 @@ object LlmOps {
                 bands: Int = LshBands, bandBits: Int = LshBandBits): DataFrame = {
     require(bands * bandBits <= LshPlanes,
       s"bands*bandBits must fit the $LshPlanes-bit signature, got $bands*$bandBits")
-    val c = withLshSig(ensureFns(corpus))
+    val c = withLshSig(corpus)
       .select(col("vec_id"), col("label"), col("embedding"), col("lsh_sig"))
       .withColumn("blk", lshBandKeys("lsh_sig", bands, bandBits))
     val q = withLshSig(query)
@@ -1257,7 +1244,7 @@ object LlmOps {
     */
   def lshBandSizes(corpus: DataFrame, bands: Int = LshBands,
                    bandBits: Int = LshBandBits): DataFrame =
-    withLshSig(ensureFns(corpus))
+    withLshSig(corpus)
       .select(col("vec_id"), col("lsh_sig"))
       .withColumn("blk", lshBandKeys("lsh_sig", bands, bandBits))
       .groupBy(col("blk")).agg(count(lit(1)).as("n"))
@@ -1377,7 +1364,7 @@ object LlmOps {
     // The benchmark gram set drives THREE passes (size count, bloom build,
     // verify join) — cache it across them and release once the small
     // result is materialized.
-    val benchGrams = withShingles(withWords(ensureFns(benchmark)))
+    val benchGrams = withShingles(withWords(benchmark))
       .select(explode(array_distinct(col("shingles"))).as("g"))
       .distinct()
     released(benchGrams) {
@@ -1392,7 +1379,7 @@ object LlmOps {
       val mightMatch = call_function("graft_might_contain",
         lit(bos.toByteArray), col("g"))
 
-      val corpusGrams = withShingles(withWords(ensureFns(spreadSmall(corpus))))
+      val corpusGrams = withShingles(withWords(spreadSmall(corpus)))
         .select(col(idCol), array_distinct(col("shingles")).as("sh"))
         .select(col(idCol), size(col("sh")).as("n_shingles"), explode(col("sh")).as("g"))
         .where(mightMatch)
@@ -1444,8 +1431,8 @@ object LlmOps {
   def decontaminateMinhash(corpus: DataFrame, benchmark: DataFrame,
                            idCol: String, threshold: Double = 0.5,
                            candBroadcastBudgetBytes: Long = 64L << 20): DataFrame = {
-    val cSh = shingleTable(ensureFns(corpus), idCol)
-    val bSh = shingleTable(ensureFns(benchmark), idCol)
+    val cSh = shingleTable(corpus, idCol)
+    val bSh = shingleTable(benchmark, idCol)
     val (cSig, cBand) = sigAndBanded(cSh, idCol, k = 8, bands = 4, r = 2)
     val (bSig, bBand) = sigAndBanded(bSh, idCol, k = 8, bands = 4, r = 2)
     // Candidate count scales with the number of CORPUS docs sharing a
@@ -1605,7 +1592,7 @@ object LlmOps {
     * a minhash fingerprint.
     */
   def textStats(docs: DataFrame): DataFrame =
-    withShingles(withWords(ensureFns(spreadSmall(docs))))
+    withShingles(withWords(spreadSmall(docs)))
       .withColumn("n_tokens", size(col("words")))
       // graft_retoken_count == size(regexp_extract_all(text,
       // '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]', 0)) (spec-pinned) without
@@ -1678,7 +1665,7 @@ object LlmOps {
     * CPU floor; it must not run single-task on a one-row-group corpus.
     */
   private def gramPositions(docs: DataFrame, idCol: String, k: Int): DataFrame =
-    ensureFns(spreadSmall(docs))
+    spreadSmall(docs)
       .select(col(idCol),
         posexplode(expr(s"graft_gram_hash(text, $k, ':xs', 15)"))
           .as(Seq("p0", "h")))
@@ -1796,7 +1783,7 @@ object LlmOps {
       .groupBy(col(idCol)).agg(sum("span_len").as("dup_chars"))
     // join side is ≤ one row per input doc — data-sized, left UNHINTED
     // (AQE may broadcast on runtime stats, never a hard hint)
-    ensureFns(docs).select(col(idCol), length(col("text")).as("n_chars"))
+    docs.select(col(idCol), length(col("text")).as("n_chars"))
       .join(perDoc, Seq(idCol), "left_outer")
       .select(col(idCol), col("n_chars"),
         coalesce(col("dup_chars"), lit(0L)).as("dup_chars"))
@@ -1830,7 +1817,7 @@ object LlmOps {
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("span_start"), col("span_len"))))
         .as("spans"))
-    ensureFns(docs).join(spansArr, Seq(idCol), "left_outer")
+    docs.join(spansArr, Seq(idCol), "left_outer")
       .withColumn("clean_text",
         when(col("spans").isNull, col("text")).otherwise(expr(
           """aggregate(spans,
@@ -1957,7 +1944,7 @@ object LlmOps {
     * vectors — excluded up front, same contract as [[knnJoin]]).
     */
   private def kmeansInput(emb0: DataFrame): DataFrame =
-    ensureFns(emb0).select(col("vec_id"), col("embedding"))
+    emb0.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", sqrt(dot("embedding", "embedding")))
       .filter(col("nrm") > 0)
 
@@ -2007,7 +1994,7 @@ object LlmOps {
     */
   private def assignCellsJoin(emb: DataFrame, cents: DataFrame): DataFrame =
     argmaxCell(emb,
-      ensureFns(emb).crossJoin(broadcast(withCnorm(cents)))
+      emb.crossJoin(broadcast(withCnorm(cents)))
         .select(col("vec_id"), col("cid"),
           (dot("embedding", "cvec") / (col("nrm") * col("cnrm"))).as("ccos_raw")))
 
@@ -2077,7 +2064,7 @@ object LlmOps {
     kept.zipWithIndex.foreach { case ((_, _, cv), i) =>
       System.arraycopy(cv, 0, mat, i * dim, dim)
     }
-    ensureFns(emb)
+    emb
       .withColumn("akey", call_function("graft_argmax_cell",
         col("embedding"), col("nrm"),
         typedLit(cids.toSeq), typedLit(cnrms.toSeq), typedLit(mat.toSeq)))
@@ -2179,7 +2166,7 @@ object LlmOps {
     import org.apache.spark.sql.types.DecimalType
     val k = keys.map(col)
     if (nGroups <= VecMeanMaxGroups)
-      ensureFns(df).groupBy(k: _*)
+      df.groupBy(k: _*)
         .agg(call_function("graft_vec_dmean", col(vec)).as("cvec"))
         .filter(col("cvec").isNotNull)
     else
@@ -2284,7 +2271,7 @@ object LlmOps {
     // stream is ~17 GB). The embedding rejoins by vec_id afterwards —
     // one corpus-sized equi-join instead of a corpus×√c-sized sort.
     // Ties break on the smaller gid via the (-gcos, gid) struct sort.
-    val scoredG = ensureFns(emb).crossJoin(broadcast(withCnorm(coarse)))
+    val scoredG = emb.crossJoin(broadcast(withCnorm(coarse)))
       .select(col("vec_id"), col("cid").as("gid"),
         round6(dot("embedding", "cvec") / (col("nrm") * col("cnrm"))).as("gcos"))
     val topGids = scoredG.groupBy(col("vec_id"))
@@ -2365,7 +2352,7 @@ object LlmOps {
     */
   private def probeOne(cents: DataFrame, query: DataFrame,
                        nprobe: Int): (Column, Seq[Any]) = {
-    val qRows = ensureFns(query).select(col("embedding").cast("array<double>"))
+    val qRows = query.select(col("embedding").cast("array<double>"))
       .limit(2).collect()
     require(qRows.length <= 1, "trained-IVF search serves one query row; " +
       "batch queries through ivfSearchBatch")
@@ -2447,7 +2434,7 @@ object LlmOps {
     */
   def ivfSearchBatch(assigned: DataFrame, queries: DataFrame, cents: DataFrame,
                      nprobe: Int, k: Int): DataFrame = {
-    val qs = ensureFns(queries)
+    val qs = queries
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qv"))
       .withColumn("qnrm", sqrt(expr("graft_dot(qv, qv)")))
@@ -2468,7 +2455,7 @@ object LlmOps {
         .as("cids"))
       .select(col("qid"), explode(col("cids")).as("cid")))
     val cids = probed.collect().map(_.get(1)).distinct.toSeq
-    ensureFns(assigned).filter(col("cid").isin(cids: _*))
+    assigned.filter(col("cid").isin(cids: _*))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
       .join(broadcast(probed), "cid")
       .join(broadcast(q), "qid")
@@ -2828,7 +2815,7 @@ object LlmOps {
     * same contract as [[kmeansInput]] and [[knnJoin]].
     */
   private def pqInput(emb0: DataFrame): DataFrame =
-    ensureFns(emb0).filter(sqrt(dot("embedding", "embedding")) > 0)
+    emb0.filter(sqrt(dot("embedding", "embedding")) > 0)
 
   /** Seed codebooks: the `ks` smallest vec_ids' subvectors, code = rank.
     * The rank window runs over the already-limited ks·m-row frame —
@@ -2977,12 +2964,12 @@ object LlmOps {
   def pqSearchCodes(codes: DataFrame, corpus: DataFrame, cbs: DataFrame,
                     query: DataFrame, k: Int, m: Int = 4, ks: Int = 4,
                     overfetch: Int = 4): DataFrame = {
-    val q = broadcast(ensureFns(query).select(col("embedding").as("qm")))
+    val q = broadcast(query.select(col("embedding").as("qm")))
     // the whole approx scan runs on the codegen'd graft_pq_adc kernel —
     // the interpreted aggregate/filter HOF formulation it replaces pays
     // an m·ks entry re-scan per row outside codegen (the same inversion
     // the int8 scan hit before graft_dot)
-    val cand = ensureFns(codes).crossJoin(broadcast(pqLut(cbs, q, m, ks)))
+    val cand = codes.crossJoin(broadcast(pqLut(cbs, q, m, ks)))
       .select(col("vec_id"),
         round6(expr(s"graft_pq_adc(codes, lutflat, $ks)")).as("approx"))
       .orderBy(col("approx").desc, col("vec_id"))
@@ -3017,7 +3004,7 @@ object LlmOps {
       s"codebook/param mismatch: max code=$maxCode vs ks=$ks, " +
         s"subspaces=$nSub vs m=$m — graft_pq_adc would NULL every score; " +
         "pass the (m, ks) the codebook was trained with")
-    ensureFns(cbs).crossJoin(q)
+    cbs.crossJoin(q)
       .select(col("sub"), col("code"), expr(
         s"""graft_dot(slice(qm, sub * (size(qm) div $m) + 1,
                             size(qm) div $m), cvec)""").as("pdot"))
@@ -3092,8 +3079,8 @@ object LlmOps {
                        k: Int, nprobe: Int = 2, m: Int = 4, ks: Int = 4,
                        overfetch: Int = 4): DataFrame = {
     val probed = probeOne(cents, query, nprobe)._2
-    val q = broadcast(ensureFns(query).select(col("embedding").as("qm")))
-    val cand = ensureFns(codesC).filter(col("cid").isin(probed: _*))
+    val q = broadcast(query.select(col("embedding").as("qm")))
+    val cand = codesC.filter(col("cid").isin(probed: _*))
       .crossJoin(broadcast(pqLut(cbs, q, m, ks)))
       .select(col("vec_id"),
         round6(expr(s"graft_pq_adc(codes, lutflat, $ks)")).as("approx"))
@@ -3245,12 +3232,12 @@ object LlmOps {
   private[graft] def lmScoreBy(docs: DataFrame, keys: Seq[String], ref: Option[Column],
                                vocabK: Int, cached: Boolean): DataFrame = {
     // spreadSmall (r15): md5-per-trigram is the LM-score kernel cost
-    val g = ensureFns(spreadSmall(docs)).select(
+    val g = spreadSmall(docs).select(
       keys.map(col) ++ ref.map(_.as("is_ref")) :+
         explode(expr("graft_gram_hash(text, 3, ':lm', 15)")).as("h"): _*)
     val counts = ref.fold(g)(_ => g.filter(col("is_ref")))
       .groupBy(col("h")).agg(count(lit(1)).as("c"))
-    val tot = ensureFns(ref.fold(docs)(r => docs.filter(r))).agg(
+    val tot = ref.fold(docs)(r => docs.filter(r)).agg(
       sum(greatest(length(col("text")) - 2, lit(0))).cast("double").as("n"))
     val vocab = counts.orderBy(col("c").desc, col("h")).limit(vocabK)
     val scored = g.join(broadcast(vocab), Seq("h"), "left")
@@ -3489,7 +3476,7 @@ object LlmOps {
       s"signature store at $storePath has sig length $n but probe uses k=$k"))
     // the LIVE view (store minus tombstones): deleted/purged docs must not
     // veto near-identical future docs — see deleteFromSignatureStore
-    val store = ensureFns(liveSignatures(spark, storePath, idCol))
+    val store = liveSignatures(spark, storePath, idCol)
     val sBand = withBandHashes(store, bands, r)
       .select(col(idCol).as("b"), explode(col("bands")).as("band"))
     val bSh = shingleTable(batch, idCol)
@@ -3812,15 +3799,14 @@ object LlmOps {
     */
   def embeddingHealth(emb: DataFrame, vecCol: String,
                       exactPercentiles: Option[Boolean] = None): DataFrame = {
-    val fns = ensureFns(emb)
     val exact = exactPercentiles.getOrElse(
-      statsSaySmall(fns, ExactPercentileCrossoverRows,
+      statsSaySmall(emb, ExactPercentileCrossoverRows,
         ExactPercentileCrossoverBytes).getOrElse(false))
     def pct(q: Double): Column =
       if (exact) expr(s"percentile(nrm, $q)")
       else expr(s"approx_percentile(nrm, $q, 10000)")
     val nrm = sqrt(expr(s"graft_dot($vecCol, $vecCol)"))
-    fns
+    emb
       .select(
         size(col(vecCol)).cast("bigint").as("dim"),
         when(expr(s"exists($vecCol, x -> isnan(x))"), 1L).otherwise(0L).as("has_nan"),
@@ -4198,7 +4184,7 @@ object LlmOps {
     * `syms` starts as the word's character sequence.
     */
   private def bpeWordTable(docs: DataFrame): DataFrame =
-    ensureFns(docs)
+    docs
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
@@ -4428,7 +4414,7 @@ object LlmOps {
     */
   private[graft] def bpeSymsFingerprint(df: DataFrame, wordCol: String,
                                         symsCol: String): (Long, BigInt) = {
-    val row = ensureFns(df).agg(
+    val row = df.agg(
       count(lit(1)),
       sum(conv(substring(md5(concat_ws(BpeFpSep, col(wordCol),
         array_join(col(symsCol), BpeFpSep))), 1, 15), 16, 10)
@@ -4544,7 +4530,7 @@ object LlmOps {
     * every 64 merges so plan depth stays bounded.
     */
   def bpeEncode(words: DataFrame, merges: Seq[BpeMerge]): DataFrame = {
-    var df = ensureFns(words).withColumn("tokens",
+    var df = words.withColumn("tokens",
       array_remove(split(col("w"), ""), ""))
     merges.zipWithIndex.foreach { case (m, i) =>
       df = df.withColumn("tokens",
@@ -4651,7 +4637,7 @@ object LlmOps {
     */
   def embeddingPcaFitK(emb: DataFrame, vecCol: String = "embedding",
                        k: Int = 8, iters: Int = 200): PcaFitK = {
-    val row = ensureFns(emb)
+    val row = emb
       .select(expr(s"transform($vecCol, v -> cast(v as double))").as("x"))
       .select(col("x"),
         expr("flatten(transform(x, a -> transform(x, b -> a * b)))").as("xx"))
@@ -4778,7 +4764,7 @@ object LlmOps {
       val c = w.indices.map(a => w(a) * fit.mean(a)).sum // μ·w, a constant
       call_function("graft_dot", col(vecCol), typedLit(w.toSeq)) - lit(c)
     }
-    ensureFns(emb).withColumn(outCol, array(comps: _*))
+    emb.withColumn(outCol, array(comps: _*))
   }
 
   /** Registry report over [[embeddingPcaFit]]: structural facts hash-exact
@@ -5035,7 +5021,7 @@ object LlmOps {
     */
   def clusterBalancedSample(embeddings: DataFrame, c: Int = 16,
                             iters: Int = 2, cap: Int = 20): DataFrame = {
-    val train = ensureFns(embeddings).filter(col("vec_id") =!= 0)
+    val train = embeddings.filter(col("vec_id") =!= 0)
     val cents = kmeansCentroids(train, c, iters)
     val u01 = ((expr(hashSql("cast(vec_id as string)", "'cb'")) % lit(1048576L))
       .cast("double") + lit(0.5)) / lit(1048576.0)

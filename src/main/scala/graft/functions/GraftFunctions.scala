@@ -4,20 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Single source of truth for graft's native SQL functions, shared by the
-  * two registration paths:
+/** Single source of truth for graft's native SQL functions.
   *
-  *  1. [[graft.GraftExtensions]] (SparkSessionExtensions) — the blessed
-  *     library-injection route for sessions built with
-  *     `.config("spark.sql.extensions", "graft.GraftExtensions")`.
-  *  2. [[ensure]] — a runtime fallback that registers straight into the
-  *     session's FunctionRegistry. Query closures call this before using
-  *     `expr("graft_dot(...)")` so an *external* driver that builds a plain
-  *     SparkSession (no extensions conf) still runs every query instead of
-  *     failing with "undefined function".
-  *
-  * Both routes install identical builders, so a session that went through
-  * the extensions path makes [[ensure]] a no-op (functionExists short-circuit).
+  * [[graft.GraftExtensions]] installs them: it is a
+  * `SparkSessionExtensionsProvider` listed under `META-INF/services`, so
+  * every session the builder creates with graft on the driver classpath
+  * resolves `graft_*` names (`spark-submit --jars`/`--packages` does this).
+  * A session built before graft was on its classpath calls [[ensure]] once.
+  * Both routes install the same builders, so [[ensure]] on a provider-built
+  * session is a no-op (functionExists short-circuit).
   */
 object GraftFunctions {
 
@@ -191,8 +186,8 @@ object GraftFunctions {
       }))
 
   /** Idempotently register graft's functions in `spark`'s session-local
-    * FunctionRegistry. Safe to call per-query: the common case is one
-    * hashmap lookup per function. Synchronized so concurrent first callers
+    * FunctionRegistry: the explicit install for a session built before
+    * graft was on its classpath. Synchronized so concurrent first callers
     * on a shared session don't race the read-then-register.
     */
   def ensure(spark: SparkSession): Unit = synchronized {

@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, Fl
   * casts. Accepts float or double arrays on either side (IVF centroids are
   * double, raw embeddings float).
   *
-  * Registered as `graft_dot(a, b)` by [[graft.GraftExtensions]] or at
-  * runtime by [[GraftFunctions.ensure]].
+  * Registered as `graft_dot(a, b)` in every session built with graft on
+  * the classpath ([[graft.GraftExtensions]]); [[GraftFunctions.ensure]]
+  * installs it in a session built before that.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -120,7 +120,6 @@ object AggQueries {
     // vs the oracle. The exact pass is the verification harness, not the
     // scale path; FreqSketchSpec pins saturation + merge on planted skew.
     "heavy_hitters" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensure(s)
       val ev = events(s, d).select(col("event_type"))
       val sk = ev.agg(expr("graft_freq(event_type, 16)").as("hh"),
         count(lit(1)).as("n"))

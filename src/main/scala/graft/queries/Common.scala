@@ -18,16 +18,14 @@ import org.apache.spark.sql.functions._
 object Common {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Every registry query reads tables through here, so this is also where
-    * the graft_* native functions get their runtime-registration fallback —
-    * an external driver with a plain SparkSession (no spark.sql.extensions
-    * conf) still resolves `expr("graft_dot(...)")` (one hashmap lookup per
-    * call once registered).
+  /** Every registry query reads tables through here. The graft_* native
+    * functions its queries call come with the session: graft on the driver
+    * classpath when the session is built installs them
+    * ([[graft.GraftExtensions]]); otherwise call
+    * [[graft.functions.GraftFunctions.ensure]] once.
     */
-  def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.ensure(s)
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.parquet(s, s"$dir/$name.parquet")
-  }
 
   /** events.parquet raw-int64 schema, for the two `ts` shapes Spark 4's
     * schema inference can't read as a timestamp: parquet TIMESTAMP(NANOS)
@@ -52,11 +50,9 @@ object Common {
     * epoch_us(ts)) and `ts` re-typed as a µs TimestampType for
     * window()/to_date() — whatever the on-disk shape ([[eventsRawUs]]).
     */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensure(s)
+  def events(s: SparkSession, dir: String): DataFrame =
     eventsRawUs(s, s"$dir/events.parquet")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-  }
 
   /** events with `ts_us` (int64 epoch micros) attached and `ts` left in its
     * on-disk type. The testdata has shipped `ts` in three shapes across

@@ -104,7 +104,6 @@ object CoreQueries {
     // carries #groups × k rows no matter how hot a group is. Ties break
     // (price desc, orderkey asc), same as the window mirror.
     "topk_per_group" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensure(s)
       t(s, d, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(expr("graft_topk(o_totalprice, o_orderkey, 3)").as("nn"))

@@ -1074,7 +1074,7 @@ object LlmQueries {
     }),
 
     "embed_quantize" -> ((s, d) =>
-      { graft.functions.GraftFunctions.ensure(s); t(s, d, "embeddings") }
+      t(s, d, "embeddings")
         .withColumn("scale", expr(
           "greatest(array_max(transform(embedding, v -> abs(cast(v as double)))) / 127.0, 1e-30d)"))
         .withColumn("codes", expr(

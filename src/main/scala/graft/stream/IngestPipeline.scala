@@ -69,7 +69,6 @@ object IngestPipeline {
     * set minimum) and content_h (exact-dedup key).
     */
   def gateAndFingerprint(docs: DataFrame, cfg: Config): DataFrame = {
-    graft.functions.GraftFunctions.ensure(docs.sparkSession)
     LlmOps.withWords(docs)
       .withColumn("n_tokens", size(col("words")))
       .withColumn("stop_ratio",
@@ -160,16 +159,18 @@ object IngestPipeline {
     // losers. Batch-sized cost.
     val intra = LlmOps.batchNearDups(
       batch.select(col("doc_id"), col("text")), "doc_id", nearDupThreshold)
-    val afterIntra = batch.join(
-      intra.select(col("b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-    // FS-agnostic existence probes: first batch has neither a landed
-    // corpus nor a store — everything survives and seeds both
-    val landed = scala.util.Try(
-      graft.Tables.parquet(spark, cfg.targetPath).select(col("doc_id"), col("text")))
-    val storeReadable = scala.util.Try(graft.Tables.parquet(spark, storePath)).isSuccess
-    val survivors =
-      if (landed.isFailure || !storeReadable) afterIntra.persist()
+    // survivors are materialized inside each scope, before it releases the
+    // pairs they were computed from
+    val survivors = LlmOps.released(intra) {
+      val afterIntra = batch.join(
+        intra.select(col("b").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+      // FS-agnostic existence probes: first batch has neither a landed
+      // corpus nor a store — everything survives and seeds both
+      val landed = scala.util.Try(
+        graft.Tables.parquet(spark, cfg.targetPath).select(col("doc_id"), col("text")))
+      val storeReadable = scala.util.Try(graft.Tables.parquet(spark, storePath)).isSuccess
+      if (landed.isFailure || !storeReadable) LlmOps.materialized(afterIntra)
       else {
         val dupes = LlmOps.incrementalDupes(landed.get,
           afterIntra.select(col("doc_id"), col("text")), "doc_id",
@@ -181,22 +182,20 @@ object IngestPipeline {
         // against the full batch id set — or a routine at-least-once
         // replay would silently drop both members of an intra-batch
         // near-dup pair.
-        val prior = dupes.join(
-          batch.select(col("doc_id").as("b")), Seq("b"), "left_anti")
-        val kept = afterIntra.join(
-          prior.select(col("a").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti").persist()
-        kept.count() // materialize before releasing the probe result
-        dupes.unpersist()
-        kept
+        LlmOps.released(dupes) {
+          val prior = dupes.join(
+            batch.select(col("doc_id").as("b")), Seq("b"), "left_anti")
+          LlmOps.materialized(afterIntra.join(
+            prior.select(col("a").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti"))
+        }
       }
-    survivors.count() // materialize before releasing the intra pairs
-    intra.unpersist()
-    DualWrite.dualWriteMicroBatch(survivors, batchId,
-      cfg.originPath, cfg.targetPath, cfg.layout)
-    LlmOps.appendSignatureStore(
-      survivors.select(col("doc_id"), col("text")), "doc_id", storePath)
-    survivors.unpersist()
-    ()
+    }
+    LlmOps.released(survivors) {
+      DualWrite.dualWriteMicroBatch(survivors, batchId,
+        cfg.originPath, cfg.targetPath, cfg.layout)
+      LlmOps.appendSignatureStore(
+        survivors.select(col("doc_id"), col("text")), "doc_id", storePath)
+    }
   }
 }

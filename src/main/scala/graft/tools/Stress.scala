@@ -39,7 +39,6 @@ object Stress {
       val s = SparkSession.builder().master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
         .config("spark.ui.enabled", "false")
         // one long-lived JVM runs dozens of shuffle-heavy jobs back to
         // back; unreferenced shuffle files are only reclaimed when their

@@ -61,10 +61,9 @@ object SparkSpec {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    // Vanilla session (no spark.sql.extensions, no nanosAsLong): the suite
-    // runs through the same runtime-fallback path an external driver hits.
-    // Specs that use graft_* outside the query registry call
-    // GraftFunctions.ensure themselves, as an external app would.
+    // Vanilla session (no spark.sql.extensions, no nanosAsLong), as an
+    // external driver builds it: graft_* functions come only from graft
+    // being on the classpath (the GraftExtensions provider).
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

@@ -11,10 +11,6 @@ import graft.ext.LlmOps.BpeMerge
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll(); graft.functions.GraftFunctions.ensure(spark)
-  }
-
   // ---- independent driver-side reference (textbook BPE, Sennrich 2016) --
 
   private def refMergeList(s: Vector[String], l: String,

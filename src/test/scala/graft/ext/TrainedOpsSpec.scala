@@ -143,7 +143,6 @@ class TrainedOpsSpec extends SparkSpec {
     // instead of a second explode+groupBy pass — valid iff graft_gram_hash
     // emits exactly max(numChars - 2, 0) trigrams per doc, across empty,
     // sub-k, ASCII, and multi-byte/4-byte code points
-    graft.functions.GraftFunctions.ensure(spark)
     val d = Seq((1L, "abcabc"), (2L, "xyz"), (3L, "ab"), (4L, ""),
       (5L, "héllo 🌍 wörld")).toDF("doc_id", "text")
     val exploded = d.select(explode(expr("graft_gram_hash(text, 3, ':lm', 15)"))).count()

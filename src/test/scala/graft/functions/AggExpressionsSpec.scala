@@ -6,8 +6,6 @@ import graft.SparkSpec
 class AggExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = { super.beforeAll(); GraftFunctions.ensure(spark) }
-
   test("graft_topk keeps the k best (score desc, id asc), exercising partial merge") {
     val rows = Seq(
       // group 1: tie on 0.9 broken by id asc; 4 candidates for k=3

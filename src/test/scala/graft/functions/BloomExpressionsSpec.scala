@@ -10,7 +10,6 @@ import graft.ext.LlmOps
 
 class BloomExpressionsSpec extends SparkSpec {
   import spark.implicits._
-  GraftFunctions.ensure(spark)
 
   private def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

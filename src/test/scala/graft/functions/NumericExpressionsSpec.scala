@@ -5,7 +5,6 @@ import graft.SparkSpec
 
 class NumericExpressionsSpec extends SparkSpec {
   import spark.implicits._
-  GraftFunctions.ensure(spark)
 
   test("graft_round matches Spark round(x, 6) on real similarity scores") {
     // The exact value class graft_round serves: cosines (dot/norm ratios of

@@ -10,7 +10,6 @@ import graft.SparkSpec
   */
 class TextExpressionsSpec extends SparkSpec {
   import spark.implicits._
-  GraftFunctions.ensure(spark)
 
   private val texts = Seq(
     "the quick brown fox jumps over the lazy dog",

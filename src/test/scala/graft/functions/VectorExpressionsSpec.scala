@@ -5,9 +5,8 @@ import graft.SparkSpec
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
-  // The suite session is vanilla (no spark.sql.extensions) — register the
-  // native functions the way an external app would.
-  GraftFunctions.ensure(spark)
+  // The suite session is vanilla (no spark.sql.extensions): its graft_*
+  // functions come from the GraftExtensions provider alone.
 
   test("graft_dot matches the HOF formulation bit-for-bit") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
@@ -101,6 +100,20 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(out(1).isNullAt(1))
   }
 
+  test("a new session of the vanilla suite session resolves every graft function, " +
+       "with no ensure call") {
+    val fresh = spark.newSession()
+    val registry = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val missing = GraftFunctions.all.collect {
+      case (ident, _, _) if !registry.functionExists(ident) => ident.funcName
+    }
+    assert(missing.isEmpty, s"unresolved in a new session: ${missing.mkString(", ")}")
+    val out = fresh.sql("select graft_dot(array(2.0d, 3.0d), array(4.0d, 5.0d)) as d")
+      .collect()
+    assert(out.head.getDouble(0) == 23.0)
+  }
+
   test("GraftFunctions.ensure self-heals a session without the extensions conf") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -129,7 +142,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
   test("graft_lsh_sig is bit-identical to the HOF reference form (fixtures + edges)") {
     import graft.ext.LlmOps
-    GraftFunctions.ensure(spark)
     // the real fixtures: every signature must match exactly
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val both = LlmOps.withLshSigHof(emb)
@@ -179,7 +191,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("graft_lsh_sig_any: bit-identical to graft_lsh_sig at 64 dims, live at any width") {
-    GraftFunctions.ensure(spark)
     // 64-dim fixtures: the generalized planes' word 0 IS planeMasks, so
     // the two forms must agree on every vector
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")

@@ -89,7 +89,7 @@ class BroadcastGateLintSpec extends AnyFunSuite {
       "LlmOps.pqAssign: the PQ codebook table — ≤ m·ks rows by construction (the pqSeed/decimalVecMean aggregates)"),
     ("crossJoin(broadcast(pqCbRow(cbs)))",
       "LlmOps.pqEncode: the m·ks codebook rows grouped to ONE row — bounded by the (m, ks) literals"),
-    ("broadcast(ensureFns(query).select(col(\"embedding\").as(\"qm\")))",
+    ("broadcast(query.select(col(\"embedding\").as(\"qm\")))",
       "LlmOps.pqSearchCodes: the single query vector — 1 row by contract"),
     ("crossJoin(broadcast(pqLut(cbs, q, m, ks)))",
       "LlmOps.pqSearchCodes/pqSearchIvfCodes: the ADC lookup table grouped to ONE row — bounded by the (m, ks) literals"),

@@ -13,10 +13,6 @@ import graft.ext.LlmOps
 class TextRankOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll(); graft.functions.GraftFunctions.ensure(spark)
-  }
-
   private def docsDf(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))

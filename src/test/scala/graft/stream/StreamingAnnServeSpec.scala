@@ -35,7 +35,6 @@ class StreamingAnnServeSpec extends SparkSpec {
   test("foreachBatch serving: per-batch reads touch only the probed cells " +
        "of the cid-partitioned store (task input metrics), results match " +
        "the single-query serve") {
-    graft.functions.GraftFunctions.ensure(spark)
     val store = Files.createTempDirectory("graft-ann-stream").toString + "/cells"
     val cents = LlmOps.kmeansCentroids(corpus, c = 4, iters = 3)
     LlmOps.writeAnnAssignments(corpus, cents, store)
