@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.NONE
+import graft.core.Scope
 
 /** LLM training-data pipeline operators (SURVEY §2.11 + north-star brief):
   * exact/MinHash/SimHash/n-gram-Jaccard/embedding-cosine deduplication,
@@ -1059,31 +1060,26 @@ object LlmOps {
     // `docs` directly: it needs only the pruned id column and evaluates
     // after the payload cache is gone.
     val payload = docs.select(col(idCol), col("text"))
-    // §2.6 (overlap independent jobs): the text channel materializes its
-    // pairs inside minhashCandidates while the other three channels
-    // materialize their own edge union on a second driver thread; the
-    // two pipelines' jobs backfill each other's straggler tails. The
-    // final union-distinct over two already-distinct edge sets is
-    // value-identical to the single five-way distinct it replaces.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    // §2.6 (overlap independent jobs): the text channel and the union of
+    // the other three run side by side, so their jobs backfill each
+    // other's straggler tails. The final union-distinct over two
+    // already-distinct edge sets equals one five-way distinct.
     val edges = released(payload) {
-      val textPairsF = Future(minhashCandidates(payload, idCol))(ExecutionContext.global)
-      val otherPairsF = Future {
-        val imagePairs =
-          hammingPairsWithCoverage(imagePhashBlocked(images, "vec_id", "embedding"),
-            "phash", radius = 2)._1.select(col("a"), col("b"))
-        val audioPairs =
-          hammingPairsWithCoverage(audioFingerprintBlocked(payload, idCol, "text"),
-            "afp", radius = 2)._1.select(col("a"), col("b"))
-        val videoPairs =
-          videoFramePairsWithCoverage(payload, idCol)._1.select(col("a"), col("b"))
-        materialized(imagePairs.unionByName(audioPairs).unionByName(videoPairs).distinct())
-      }(ExecutionContext.global)
+      val channels = Scope.concurrently(docs.sparkSession, Seq(
+        () => minhashCandidates(payload, idCol),
+        () => {
+          val imagePairs =
+            hammingPairsWithCoverage(imagePhashBlocked(images, "vec_id", "embedding"),
+              "phash", radius = 2)._1.select(col("a"), col("b"))
+          val audioPairs =
+            hammingPairsWithCoverage(audioFingerprintBlocked(payload, idCol, "text"),
+              "afp", radius = 2)._1.select(col("a"), col("b"))
+          val videoPairs =
+            videoFramePairsWithCoverage(payload, idCol)._1.select(col("a"), col("b"))
+          materialized(imagePairs.unionByName(audioPairs).unionByName(videoPairs).distinct())
+        }))
       // both channels finish before any cache goes, and each one's edges
       // are released whether or not the other failed
-      val channels = Seq(textPairsF, otherPairsF)
-        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       released(channels.flatMap(_.toOption): _*) {
         val Seq(textPairs, otherPairs) = channels.map(_.get)
         materialized(textPairs.unionByName(otherPairs).distinct())
@@ -4822,9 +4818,12 @@ object LlmOps {
     // single-query contract (same as annAssignedSearch): the crossJoin +
     // global limit(overfetch) pool and the recall denominator below are
     // only meaningful for ONE query row — multiple rows would silently
-    // mix candidate pools into one plausible-but-wrong report
-    require(query.limit(2).count() == 1L,
+    // mix candidate pools into one plausible-but-wrong report. Every
+    // search below reads the one row collected here.
+    val qRows = boundedCollect(query, 1)
+    require(qRows.exists(_.length == 1),
       "embeddingPcaApplyReport expects exactly one query row")
+    val q = toLocalRelation(query, qRows.get)
     val k = fit.basis.length
     val d = fit.dim
     val proj0 = embeddingPcaApply(corpus, fit)
@@ -4848,24 +4847,19 @@ object LlmOps {
     }
     val varCaptureOk =
       fit.eigenvalues.sum >= (k.toDouble / d) * fit.trace * (1 - 1e-9)
-    // r16 (guide §2.6): the original-space top-k and the projected-space
-    // pool are INDEPENDENT corpus scans consumed together below — submit
-    // them concurrently so the second backfills the first's straggler
-    // tail instead of queueing behind it. Results are collected sets;
-    // nothing about either job depends on the other.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val trueIdsF = Future(cosineTopK(corpus, query, kNN).collect()
-      .map(_.getLong(0)).toSet)(ExecutionContext.global)
-    val qp = embeddingPcaApply(query, fit).select(col("proj").as("qp"))
-    val poolIds = proj.crossJoin(broadcast(qp))
-      .select(col("vec_id"),
-        round6(call_function("graft_dot", col("proj"), col("qp")) /
-          (sqrt(call_function("graft_dot", col("proj"), col("proj"))) *
-            sqrt(call_function("graft_dot", col("qp"), col("qp"))))).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(overfetch)
-      .collect().map(_.getLong(0))
-    val trueIds = Await.result(trueIdsF, Duration.Inf)
+    // §2.6: the original-space top-k and the projected-space pool are
+    // independent corpus scans — run side by side, the second backfills
+    // the first's straggler tail instead of queueing behind it.
+    val qp = embeddingPcaApply(q, fit).select(col("proj").as("qp"))
+    val Seq(trueIds, poolIds) = Scope.concurrently(spark, Seq(
+      () => cosineTopK(corpus, q, kNN).collect().map(_.getLong(0)),
+      () => proj.crossJoin(broadcast(qp))
+        .select(col("vec_id"),
+          round6(call_function("graft_dot", col("proj"), col("qp")) /
+            (sqrt(call_function("graft_dot", col("proj"), col("proj"))) *
+              sqrt(call_function("graft_dot", col("qp"), col("qp"))))).as("cos"))
+        .orderBy(col("cos").desc, col("vec_id")).limit(overfetch)
+        .collect().map(_.getLong(0)))).map(_.get)
     // metrics are complete once the pool collect (the observed plan's
     // action) returned
     val m = mObs.get
@@ -4880,8 +4874,8 @@ object LlmOps {
     // exact full-dim rescore of the bounded candidate pool
     val rescored = cosineTopK(
       corpus.filter(col("vec_id").isin(poolIds.map(x => x: Any): _*)),
-      query, kNN).collect().map(_.getLong(0)).toSet
-    val recall = trueIds.intersect(rescored).size.toDouble / kNN
+      q, kNN).collect().map(_.getLong(0)).toSet
+    val recall = trueIds.count(rescored).toDouble / kNN
     import spark.implicits._
     Seq((n, d, k, projVarOk, orthoOk, varCaptureOk, recall >= recallFloor))
       .toDF("n_vecs", "dim", "k", "proj_var_ok", "ortho_ok",

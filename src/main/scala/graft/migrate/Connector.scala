@@ -169,8 +169,8 @@ class TargetKeyTransformer extends MigrateJob.Transformer {
   * task-locally and at commit (see GraftBatchSink scope 1/2); this
   * adapter adds scope 3 — it pre-registers the run's error accumulator
   * and drives the write under [[MigrateJob.withBudgetWatcher]], so a
-  * cross-task breach cancels the RUNNING write job instead of waiting
-  * for commit, exactly like MigrateJob's own guardrail budget.
+  * cross-task breach cancels the RUNNING write job by its job tag (the
+  * caller's job group untouched) instead of waiting for commit.
   */
 final case class GraftBatchTarget(baseDir: String,
                                   pkCol: String = "pk",
@@ -208,7 +208,7 @@ final case class GraftBatchTarget(baseDir: String,
         .mode("append").save()
     if (errorLimit < Long.MaxValue)
       MigrateJob.withBudgetWatcher(spark, errors, errorLimit,
-        MigrateJob.uniqueGroup(s"graft-connector-write-${wave.headOption.getOrElse(0)}"))(save())
+        s"graft-connector-write-${wave.headOption.getOrElse(0)}")(save())
     else save()
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.util.LongAccumulator
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
-import graft.core.Ops
+import graft.core.{Ops, Scope}
 
 /** The CDM `Migrate` pipeline re-expressed Spark-first (reference:
   * docs/04-cdm-approach.md:280-462 and lab/cdm-config/cdm.properties:27-38):
@@ -44,7 +44,7 @@ object MigrateJob {
       //     (the only mid-wave error source), every flagged row increments
       //     the error accumulator as the scan runs; each task aborts on its
       //     own if its local count alone blows the budget, and a driver-side
-      //     watcher cancels the wave's job group once the cross-task total
+      //     watcher cancels the wave's tagged jobs once the cross-task total
       //     does. Engaged only for finite limits with a guardrail set, so
       //     the unguarded pipeline stays one whole-stage-codegen span.
       // (2) between waves (ErrorBudget.check), and
@@ -107,52 +107,38 @@ object MigrateJob {
           s"error budget exceeded: ${acc.value} > $limit")
   }
 
-  private val watchedGroups = new java.util.concurrent.atomic.AtomicLong()
-
-  /** A job group for [[withBudgetWatcher]] that no other watched action
-    * shares: `prefix` plus a per-process sequence number. Cancellation is
-    * by group, so two tables whose waves share a prefix (both at bucket 0
-    * in [[migrateAll]]'s pool) must not share the group, or one table's
-    * breach cancels the other.
-    */
-  private[migrate] def uniqueGroup(prefix: String): String =
-    s"$prefix-${watchedGroups.incrementAndGet()}"
+  private val watchedTags = new java.util.concurrent.atomic.AtomicLong()
 
   /** Drive `body` (a Spark action) under a budget watcher: a driver-side
-    * thread polls the merged error accumulator while the action runs and
-    * cancels the action's job group the moment the budget is blown —
-    * CDM's maxErrorCount abort of a RUNNING job
-    * (docs/04-cdm-approach.md:643). Accumulator updates reach the driver
-    * as tasks complete (plus executor heartbeats), so the watcher fires
-    * after the earliest finished tasks push the total over the limit —
-    * the remaining tasks of the wave are killed instead of running the
-    * migration to completion first. Cancellation via job group keeps the
-    * blast radius to this wave's jobs only.
+    * thread polls the merged error accumulator while the action runs and,
+    * once the budget is blown, cancels the jobs carrying this call's job
+    * tag (`tagPrefix` plus a per-process sequence number) — CDM's
+    * maxErrorCount abort of a RUNNING job (docs/04-cdm-approach.md:643).
+    * Accumulator updates reach the driver as tasks complete (plus executor
+    * heartbeats), so the rest of the wave's tasks are killed instead of
+    * run to completion. The tag joins the caller's job group, description
+    * and tags, so only this call's jobs are cancelled (two tables whose
+    * waves share a prefix do not cancel each other), the caller's group
+    * still counts them, and nested watchers each keep their own handle.
     */
   private[migrate] def withBudgetWatcher[T](spark: SparkSession,
                                             errors: LongAccumulator,
                                             limit: Long,
-                                            groupTag: String)(body: => T): T = {
+                                            tagPrefix: String)(body: => T): T = {
     val sc = spark.sparkContext
+    val tag = s"$tagPrefix-${watchedTags.incrementAndGet()}"
     @volatile var done = false
     @volatile var breached = false
-    // watchers can NEST (a GraftBatchTarget write watcher runs inside a
-    // guardrail-budget wave watcher): snapshot the enclosing job group so
-    // the inner finally can restore it instead of stripping it — else the
-    // outer watcher's cancelJobGroup would no-op on every job submitted
-    // after the inner body returned
-    val prevGroup = sc.getLocalProperty("spark.jobGroup.id")
-    val prevDesc = sc.getLocalProperty("spark.job.description")
     val prevInterrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    sc.setJobGroup(groupTag, "graft migrate wave (error-budget watched)",
-      interruptOnCancel = true)
+    sc.addJobTag(tag)
+    sc.setInterruptOnCancel(true)
     val watcher = new Thread({ () =>
-      // keep cancelling until the action thread returns: cancelJobGroup
+      // keep cancelling until the action thread returns: cancelJobsWithTag
       // only kills jobs running at that instant, so a breach detected
       // between two of the wave's jobs (or before the first is submitted)
       // must re-fire for the next submission. Cancellation is idempotent.
       while (!done) {
-        if (errors.value > limit) { breached = true; sc.cancelJobGroup(groupTag) }
+        if (errors.value > limit) { breached = true; sc.cancelJobsWithTag(tag) }
         Thread.sleep(20)
       }
     }: Runnable)
@@ -182,10 +168,8 @@ object MigrateJob {
         throw cause.getOrElse(e)
     } finally {
       done = true
-      sc.clearJobGroup()
-      if (prevGroup != null)
-        sc.setJobGroup(prevGroup, String.valueOf(prevDesc),
-          interruptOnCancel = prevInterrupt == "true")
+      sc.removeJobTag(tag)
+      sc.setLocalProperty("spark.job.interruptOnCancel", prevInterrupt)
       watcher.join(1000)
     }
   }
@@ -372,37 +356,22 @@ object MigrateJob {
                  continueOnError: Boolean = true): Seq[TableOutcome] = {
     require(tables.map(_.name).distinct.size == tables.size,
       "duplicate table names in migrateAll")
-    // r16 (guide §2.6 — overlap independent jobs): with NO finite
-    // consolidated budget and continueOnError (the recipe's default),
-    // the tables are fully independent — ledgers, accumulators and
-    // budget-watcher job groups are all per-table (uniqueGroup: the group
-    // is set per thread, but cancelled by name across threads) — so they
-    // run from a small pool and one
-    // table's straggler tail backfills with the next table's tasks.
-    // A FINITE global budget binds mid-wave in TABLE ORDER (and
-    // continueOnError=false aborts the remainder in order), so those
-    // paths keep the sequential loop unchanged.
-    if (globalErrorLimit == Long.MaxValue && continueOnError && tables.size > 1) {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(tables.size, 4))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = tables.map { tm =>
-          Future {
-            val (status, err) =
-              try { run(spark, tm.source, tm.sink, tm.cfg); ("done", None) }
-              catch {
-                case e: Throwable =>
-                  ("failed", Some(String.valueOf(e.getMessage).take(500)))
-              }
-            outcome(tm, status, err)
+    // §2.6 (overlap independent jobs): with NO finite consolidated budget
+    // and continueOnError (the recipe's default) the tables share no
+    // state, so they run side by side and one table's straggler tail
+    // backfills with the next table's tasks; each branch catches its own
+    // failure. A FINITE global budget binds mid-wave in TABLE ORDER (and
+    // continueOnError=false aborts the rest in order): sequential loop.
+    if (globalErrorLimit == Long.MaxValue && continueOnError && tables.size > 1)
+      return Scope.concurrently(spark, tables.map { tm => () =>
+        val (status, err) =
+          try { run(spark, tm.source, tm.sink, tm.cfg); ("done", None) }
+          catch {
+            case e: Throwable =>
+              ("failed", Some(String.valueOf(e.getMessage).take(500)))
           }
-        }
-        return futs.map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
-    }
+        outcome(tm, status, err)
+      }).map(_.get)
     var skippedSoFar = 0L
     var abort: Option[String] = None
     tables.map { tm =>
@@ -687,7 +656,7 @@ object MigrateJob {
     def writeWave(): Unit = sink.writeWave(pass, wave)
     if (midWaveBudget)
       withBudgetWatcher(spark, errors, cfg.errorLimit,
-        uniqueGroup(s"graft-migrate-wave-${wave.headOption.getOrElse(0)}"))(writeWave())
+        s"graft-migrate-wave-${wave.headOption.getOrElse(0)}")(writeWave())
     else writeWave()
     val metrics = obs.get
     // the write itself routed by the pre-transform snapshot, so the data on

@@ -45,7 +45,7 @@ import java.util.{Map => JMap}
   *           feeds a driver-registered [[LongAccumulator]] (exposed via
   *           [[GraftBatchSink.errorAccumulator]]); an orchestrator that
   *           owns the write action — [[graft.migrate.GraftBatchTarget]]
-  *           does — polls it and cancels the job group the moment the
+  *           does — polls it and cancels the write's tagged jobs once the
   *           cross-task total breaches, instead of letting the write run
   *           to completion first (accumulator updates reach the driver as
   *           tasks complete plus executor heartbeats).

@@ -17,15 +17,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sc = spark.sparkContext
     sc.setJobGroup(tag, tag)
     try body finally sc.clearJobGroup()
-    // the async listener bus feeds the status tracker after the action
-    // returns: poll until the group's count is stable across consecutive
-    // reads (bounded) — a fixed sleep under-reports on a loaded host
-    // (ADVICE r8)
+    settled(sc.statusTracker.getJobIdsForGroup(tag).length)
+  }
+
+  /** `read` once it is stable across consecutive polls (bounded): the
+    * async listener bus feeds the status tracker and listeners after the
+    * action returns, and a fixed sleep under-reports on a loaded host
+    * (ADVICE r8).
+    */
+  def settled(read: => Int): Int = {
     var last = -1
     var stable = 0
     var waitedMs = 0
     while (stable < 3 && waitedMs < 10000) {
-      val cur = sc.statusTracker.getJobIdsForGroup(tag).length
+      val cur = read
       if (cur == last) stable += 1 else { stable = 0; last = cur }
       Thread.sleep(100)
       waitedMs += 100

@@ -144,21 +144,44 @@ class ConnectorMigrateSpec extends SparkSpec {
     assert(runs.flatMap(_.tasks).map(_.colSum).sum == expectSum)
   }
 
-  test("budget watchers NEST: the inner watcher restores the enclosing " +
-       "job group on exit, so an outer watcher keeps its cancel handle " +
+  test("budget watchers NEST: after the inner watcher returns the outer " +
+       "tag is kept and the inner one gone, an outer breach still cancels " +
+       "a running job, and the caller's job group is never touched " +
        "(guardrail wave watcher around a sink write watcher)") {
     val sc = spark.sparkContext
     val accOuter = sc.longAccumulator("nest_outer")
     val accInner = sc.longAccumulator("nest_inner")
-    MigrateJob.withBudgetWatcher(spark, accOuter, 100L, "nest-outer") {
-      assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-outer")
-      MigrateJob.withBudgetWatcher(spark, accInner, 100L, "nest-inner") {
-        assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-inner")
-      }
-      assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-outer",
-        "inner watcher must restore the enclosing job group, not strip it")
+    def tags(): Seq[String] = sc.getJobTags().toSeq.sorted
+    def callerGroup(): Unit = {
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-caller")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
     }
-    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+    sc.setJobGroup("nest-caller", "caller")
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] {
+        MigrateJob.withBudgetWatcher(spark, accOuter, 100L, "nest-outer") {
+          val Seq(outer) = tags()
+          assert(outer.startsWith("nest-outer-"))
+          MigrateJob.withBudgetWatcher(spark, accInner, 100L, "nest-inner") {
+            assert(tags().size == 2 && tags().exists(_.startsWith("nest-inner-")) &&
+              tags().contains(outer), s"both watchers' tags must be set: ${tags()}")
+            callerGroup()
+          }
+          assert(tags() == Seq(outer),
+            "the inner watcher must remove its own tag and only that")
+          callerGroup()
+          accOuter.add(101L)
+          sc.parallelize(1 to 4, 4).map { i => Thread.sleep(10000); i }.count()
+        }
+      }
+      val elapsedS = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage.contains("error budget exceeded mid-wave"))
+      assert(elapsedS < 8.0,
+        f"the outer watcher must cancel the 10 s job promptly, took $elapsedS%.1f s")
+      assert(tags().isEmpty)
+      callerGroup()
+    } finally sc.clearJobGroup()
   }
 
   test("a second run over a DONE ledger is a no-op resume: zero buckets " +
